@@ -1,10 +1,14 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Loops
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
-/** Personalized PageRank as iterative DataFrame joins — the query-side
-  * graph algorithm of the reference (G1), distributed.
+import scala.collection.mutable
+
+/** Personalized PageRank — the query-side graph algorithm of the
+  * reference (G1).
   *
   * Semantics from src/qortex/core/memory.py:231-372 (InMemory power
   * iteration; the Memgraph variant at backend.py:777-957 pulls the whole
@@ -13,39 +17,110 @@ import org.apache.spark.sql.functions._
   *     (memory.py:316-326 adds the reverse edge)
   *   - edge weight = confidence; per-step contribution is
   *     weight / Σ(out-weights of the source) — weighted-degree
-  *     normalization (memory.py:331-339)
+  *     normalization (memory.py:331-339); a null confidence keeps its
+  *     endpoints as nodes and contributes nothing
   *   - π(t+1) = d · (Â π) + (1 − d) · personalization, d = 0.85 at call
   *     sites (adapter.py:514-544), tol 1e-6 on Σ|Δ|, ≤ 100 iterations
-  *   - personalization = normalized seed weights (uniform fallback),
-  *     scores ≤ 1e-8 dropped from the result (memory.py:357-366)
+  *   - personalization = normalized seed weights (uniform fallback) over
+  *     ALL nodes (edge endpoints ∪ seed ids), scores ≤ 1e-8 dropped from
+  *     the result (memory.py:357-366); duplicate or null seed ids are
+  *     rejected
   *
-  * Dataflow per iteration: ranks ⋈ edges (shuffle on src) →
-  * groupBy(dst).sum → join personalization → convergence check via a
-  * single agg. `localCheckpoint` truncates lineage every iteration.
+  * Two executions of the same loop, chosen by `prepare` from the size of
+  * the undirected adjacency (2 × edge rows):
+  *   - below `Loops.RowsPerPartition` rows the adjacency is collected once
+  *     into a driver-side CSR (`DriverGraph`) and every run iterates
+  *     there. That constant is the loop width: below it the DataFrame loop
+  *     would run every stage as ONE task anyway, so each of its ~100 jobs
+  *     per query was pure scheduling overhead around work a single thread
+  *     does in milliseconds. The CSR is bounded by the same constant —
+  *     < 100k adjacency rows, a few MB of arrays — and a query service
+  *     holds it once (GraftService.pprGraph). A run collects only its
+  *     seeds and extra edges and never scopes the session's shuffle width,
+  *     so it does not take the JVM-wide `Loops` lock.
+  *   - at or above it the adjacency stays distributed (`DistributedGraph`)
+  *     and the loop runs as DataFrame joins at the loop's scoped width:
+  *     ranks ⋈ edges (shuffle on src) → groupBy(dst).sum → join
+  *     personalization, checkpointed once per block of iterations.
+  *
+  * Both run blocks of `BlockSize` iterations with one Σ|Δ| convergence
+  * probe per block (none when tol ≤ 0), so they stop at the same block.
   */
 object Ppr {
 
-  /** A query-reusable normalized graph: the undirected weighted edge list
-    * and per-source out-weight sums, both checkpointed. A query SERVICE
-    * over a committed snapshot prepares this ONCE and serves every query
-    * from it — the per-query work drops to merging that query's ephemeral
-    * online edges (tiny) and the loop itself, instead of rebuilding
-    * und/outW from the full edge table per call.
+  /** A query-reusable normalized graph, built once from a committed edge
+    * table. A query SERVICE over a committed snapshot prepares this ONCE
+    * and serves every query from it — the per-query work drops to merging
+    * that query's ephemeral online edges (tiny) and the loop itself.
     */
-  final case class PreparedGraph(und: DataFrame, outW: DataFrame)
+  sealed trait PreparedGraph {
 
-  /** Build the reusable normalized adjacency inputs from a committed edge
-    * table (one scan + one aggregation, checkpointed).
+    /** Rows of the undirected adjacency (both directions of every edge). */
+    def rows: Long
+  }
+
+  /** The undirected weighted edge list and per-source out-weight sums,
+    * both checkpointed leaves.
     */
-  def prepare(edges: DataFrame)(implicit spark: SparkSession): PreparedGraph = {
-    val und = edges
-      .select(col("source_id").as("src"), col("target_id").as("dst"),
-        col("confidence").cast("double").as("w"))
-      .union(edges.select(col("target_id").as("src"), col("source_id").as("dst"),
-        col("confidence").cast("double").as("w")))
-      .localCheckpoint()
-    val outW = und.groupBy("src").agg(sum("w").as("wout")).localCheckpoint()
-    PreparedGraph(und, outW)
+  final case class DistributedGraph(und: DataFrame, outW: DataFrame, rows: Long)
+      extends PreparedGraph
+
+  /** The undirected adjacency on the driver in compressed sparse row form
+    * over dense int node ids: the out-edges of node `i` are
+    * `dst`/`w` at `offsets(i) until offsets(i + 1)`. Null-confidence
+    * edges are left out of the arrays (they contribute nothing) but their
+    * endpoints keep an id.
+    */
+  final class DriverGraph private[Ppr] (
+      private[graph] val idType: DataType,
+      private[graph] val ids: Array[Any], // dense id → node id
+      private[graph] val index: Map[Any, Int], // node id → dense id
+      private[graph] val offsets: Array[Int],
+      private[graph] val dst: Array[Int],
+      private[graph] val w: Array[Double],
+      private[graph] val outW: Array[Double], // Σ non-null out-weights per source
+      val rows: Long
+  ) extends PreparedGraph
+
+  /** Iterations chained per convergence probe (and, on the distributed
+    * path, per checkpoint). Measured: larger blocks for the fixed-iteration
+    * case LOSE on the DataFrame loop — the deeper Catalyst plan costs more
+    * per materialization than the saved job round-trips.
+    */
+  private val BlockSize = 5
+
+  /** Build the reusable normalized adjacency from a committed edge table
+    * (source_id, target_id, confidence).
+    */
+  def prepare(edges: DataFrame)(implicit spark: SparkSession): PreparedGraph =
+    prepare(edges, Loops.RowsPerPartition)
+
+  /** `rowLimit`: adjacencies with fewer rows go to the driver. Tests pass 0
+    * to force the distributed loop on small graphs.
+    */
+  private[graph] def prepare(edges: DataFrame, rowLimit: Long)(
+      implicit spark: SparkSession): PreparedGraph = {
+    // the adjacency holds both directions of every edge: it is below the
+    // limit iff fewer than ⌈rowLimit/2⌉ edges come back from a capped
+    // collect. That collect is the only pass over the caller's plan on the
+    // driver path; on a larger graph the checkpoint below reads the plan
+    // again in full, so callers with big graphs pass a materialized frame.
+    val cap = ((rowLimit + 1) / 2).toInt
+    val idType = edges.schema("source_id").dataType
+    val head = if (cap > 0) edgeRows(edges, idType).limit(cap).collect() else Array.empty[Row]
+    if (head.length < cap) driverGraph(head, idType)
+    else {
+      // localCheckpoint (NOT persist): persist caches the *data* but keeps
+      // the full upstream logical plan attached to every derived frame, so
+      // each loop block pays Catalyst re-analysis of the whole extraction →
+      // linking → pruning tree. Checkpointing truncates the plan to a leaf.
+      val und = undirected(edges).localCheckpoint()
+      val rows = und.count()
+      val outW = Loops.withShuffleWidth(spark, rows) {
+        und.groupBy("src").agg(sum("w").as("wout")).localCheckpoint()
+      }
+      DistributedGraph(und, outW, rows)
+    }
   }
 
   /** @param edges  (source_id, target_id, confidence)
@@ -58,40 +133,14 @@ object Ppr {
       tol: Double = 1e-6,
       maxIter: Int = 100,
       minScore: Double = 1e-8
-  )(implicit spark: SparkSession): DataFrame = {
-    // measure the graph BEFORE building the adjacency so the build itself
-    // runs at the loop's scoped shuffle width — the previous shape built
-    // adj0 at the session width and then paid an extra repartition +
-    // checkpoint job to narrow it (guide §2.4: one exchange, not two)
-    val nEdges = edges.count()
-    graft.core.Loops.withShuffleWidth(spark, 2L * nEdges) {
-      // undirected weighted adjacency with per-source normalization
-      val und = edges
-        .select(col("source_id").as("src"), col("target_id").as("dst"),
-          col("confidence").cast("double").as("w"))
-        .union(edges.select(col("target_id").as("src"), col("source_id").as("dst"),
-          col("confidence").cast("double").as("w")))
-      val outW = und.groupBy("src").agg(sum("w").as("wout"))
-      // localCheckpoint (NOT persist): persist caches the *data* but keeps the
-      // full upstream logical plan attached to every derived frame, so each
-      // loop block pays Catalyst re-analysis/optimization of the whole
-      // extraction→linking→pruning tree (measured: 754 s for 25 iterations on
-      // a 1.5k-node graph). Checkpointing truncates the plan to a leaf.
-      val adj0 = und.join(outW, Seq("src"))
-        .select(col("src"), col("dst"), (col("w") / col("wout")).as("p"))
-        .localCheckpoint()
-      // adj0 rows = und rows exactly (the normalization join matches every
-      // row), so the measured edge count stands in for a re-count job
-      runAdj(adj0, seeds, damping, tol, maxIter, minScore,
-        rowsHint = Some(2L * nEdges))
-    }
-  }
+  )(implicit spark: SparkSession): DataFrame =
+    runGraph(prepare(edges), None, seeds, damping, tol, maxIter, minScore)
 
   /** Run from a prepared graph plus per-query extra edges (the online
     * similarity edges of one retrieval, adapter.py:532). Only the extras
-    * pay new aggregation work: their out-weight delta folds into the
-    * cached sums with a broadcast-sized join, and sources untouched by
-    * extras keep their cached normalization.
+    * pay new normalization work: their out-weight delta folds into the
+    * cached sums, and sources untouched by extras keep their cached
+    * normalization.
     */
   def runPrepared(
       graph: PreparedGraph,
@@ -101,57 +150,206 @@ object Ppr {
       tol: Double = 1e-6,
       maxIter: Int = 100,
       minScore: Double = 1e-8
+  )(implicit spark: SparkSession): DataFrame =
+    runGraph(graph, Some(extraEdges), seeds, damping, tol, maxIter, minScore)
+
+  private[graph] def runGraph(
+      graph: PreparedGraph,
+      extraEdges: Option[DataFrame],
+      seeds: DataFrame,
+      damping: Double,
+      tol: Double,
+      maxIter: Int,
+      minScore: Double
+  )(implicit spark: SparkSession): DataFrame = graph match {
+    case g: DriverGraph => runDriver(g, extraEdges, seeds, damping, tol, maxIter, minScore)
+    case g: DistributedGraph => runDistributed(g, extraEdges, seeds, damping, tol, maxIter, minScore)
+  }
+
+  private def edgeRows(edges: DataFrame, idType: DataType): DataFrame =
+    edges.select(col("source_id").cast(idType), col("target_id").cast(idType),
+      col("confidence").cast("double"))
+
+  private def undirected(edges: DataFrame): DataFrame = {
+    def direction(from: String, to: String) =
+      edges.select(col(from).as("src"), col(to).as("dst"), col("confidence").cast("double").as("w"))
+    direction("source_id", "target_id").union(direction("target_id", "source_id"))
+  }
+
+  private def duplicateSeed(id: Any): Nothing =
+    throw new IllegalArgumentException(s"PPR seeds list id '$id' more than once")
+
+  // ---- driver path ---------------------------------------------------------
+
+  /** Both directions of every collected (source_id, target_id, confidence)
+    * row with a non-null confidence, as (src, dst, w) arrays of dense ids;
+    * `node` gives every endpoint an id, null-confidence ones included.
+    */
+  private def bothDirections(edges: Array[Row], node: Any => Int)
+      : (Array[Int], Array[Int], Array[Double]) = {
+    val src = mutable.ArrayBuilder.make[Int]
+    val dst = mutable.ArrayBuilder.make[Int]
+    val w = mutable.ArrayBuilder.make[Double]
+    for (e <- edges) {
+      val a = node(e.get(0))
+      val b = node(e.get(1))
+      if (!e.isNullAt(2)) {
+        src += a; dst += b; w += e.getDouble(2)
+        src += b; dst += a; w += e.getDouble(2)
+      }
+    }
+    (src.result(), dst.result(), w.result())
+  }
+
+  /** CSR over collected (source_id, target_id, confidence) rows. */
+  private def driverGraph(edges: Array[Row], idType: DataType): DriverGraph = {
+    val index = mutable.HashMap.empty[Any, Int]
+    val ids = mutable.ArrayBuffer.empty[Any]
+    val (s, d, ws) = bothDirections(edges, id => index.getOrElseUpdate(id, { ids += id; ids.size - 1 }))
+    val n = ids.size
+    // counting sort by source
+    val offsets = new Array[Int](n + 1)
+    s.foreach(i => offsets(i + 1) += 1)
+    for (i <- 0 until n) offsets(i + 1) += offsets(i)
+    val next = offsets.clone()
+    val csrDst = new Array[Int](s.length)
+    val csrW = new Array[Double](s.length)
+    val outW = new Array[Double](n)
+    for (k <- s.indices) {
+      val p = next(s(k))
+      csrDst(p) = d(k); csrW(p) = ws(k); next(s(k)) += 1
+      outW(s(k)) += ws(k)
+    }
+    new DriverGraph(idType, ids.toArray, index.toMap, offsets, csrDst, csrW, outW,
+      2L * edges.length)
+  }
+
+  private def runDriver(
+      g: DriverGraph,
+      extraEdges: Option[DataFrame],
+      seeds: DataFrame,
+      damping: Double,
+      tol: Double,
+      maxIter: Int,
+      minScore: Double
   )(implicit spark: SparkSession): DataFrame = {
-    val extraUnd = extraEdges
-      .select(col("source_id").as("src"), col("target_id").as("dst"),
-        col("confidence").cast("double").as("w"))
-      .union(extraEdges.select(col("target_id").as("src"), col("source_id").as("dst"),
-        col("confidence").cast("double").as("w")))
-      .localCheckpoint()
-    val nExtra = extraUnd.count()
-    // size the scoped width from the prepared graph (a checkpointed leaf —
-    // counting it is one cheap job) so the merged-adjacency build below
-    // runs at loop width instead of session width + a narrowing repartition
-    val totalRows = graph.und.count() + nExtra // extraUnd already holds both directions
-    graft.core.Loops.withShuffleWidth(spark, totalRows) {
-      val (und, outW) =
-        if (nExtra == 0L) (graph.und, graph.outW)
-        else {
-          val delta = extraUnd.groupBy("src").agg(sum("w").as("__dw"))
+    val extras = extraEdges.fold(Array.empty[Row])(edgeRows(_, g.idType).collect())
+    val seedRows = seeds.select(col("id").cast(g.idType), col("weight").cast("double")).collect()
+
+    // nodes beyond the prepared graph: extra-edge endpoints, edgeless seeds
+    val added = mutable.LinkedHashMap.empty[Any, Int]
+    def node(id: Any): Int =
+      g.index.getOrElse(id, added.getOrElseUpdate(id, g.ids.length + added.size))
+    val (xs, xd, xw) = bothDirections(extras, node)
+    val seedIdx = seedRows.map { r =>
+      if (r.isNullAt(0)) throw new IllegalArgumentException("PPR seeds contain a null id")
+      node(r.get(0))
+    }
+    val n = g.ids.length + added.size
+
+    // the extras' out-weight deltas fold into a copy of the cached sums
+    val wout = java.util.Arrays.copyOf(g.outW, n)
+    for (k <- xs.indices) wout(xs(k)) += xw(k)
+
+    val pers = new Array[Double](n)
+    val seen = new Array[Boolean](n)
+    for ((i, r) <- seedIdx.zip(seedRows)) {
+      if (seen(i)) duplicateSeed(r.get(0))
+      seen(i) = true
+      pers(i) = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+    }
+    val totalSeed = pers.sum
+    for (i <- 0 until n) pers(i) = if (totalSeed <= 0.0) 1.0 / n else pers(i) / totalSeed
+
+    def step(rank: Array[Double]): Array[Double] = {
+      val inflow = new Array[Double](n)
+      var s = 0
+      while (s < g.ids.length) {
+        if (wout(s) != 0.0) {
+          var e = g.offsets(s)
+          while (e < g.offsets(s + 1)) {
+            inflow(g.dst(e)) += rank(s) * (g.w(e) / wout(s))
+            e += 1
+          }
+        }
+        s += 1
+      }
+      for (k <- xs.indices if wout(xs(k)) != 0.0)
+        inflow(xd(k)) += rank(xs(k)) * (xw(k) / wout(xs(k)))
+      for (i <- 0 until n) inflow(i) = damping * inflow(i) + (1.0 - damping) * pers(i)
+      inflow
+    }
+
+    var rank = pers
+    var iter = 0
+    var delta = Double.MaxValue
+    while (delta > tol && iter < maxIter) {
+      val blockStart = rank
+      val steps = math.min(BlockSize, maxIter - iter)
+      for (_ <- 0 until steps) rank = step(rank)
+      if (tol > 0.0) {
+        delta = 0.0
+        for (i <- 0 until n) delta += math.abs(rank(i) - blockStart(i))
+      }
+      iter += steps
+    }
+
+    val addedIds = added.keys.toArray
+    val out = new java.util.ArrayList[Row]()
+    for (i <- 0 until n if rank(i) > minScore)
+      out.add(Row(if (i < g.ids.length) g.ids(i) else addedIds(i - g.ids.length), rank(i)))
+    spark.createDataFrame(out,
+      StructType(Seq(StructField("id", g.idType), StructField("rank", DoubleType))))
+  }
+
+  // ---- distributed path ----------------------------------------------------
+
+  private def runDistributed(
+      graph: DistributedGraph,
+      extraEdges: Option[DataFrame],
+      seeds: DataFrame,
+      damping: Double,
+      tol: Double,
+      maxIter: Int,
+      minScore: Double
+  )(implicit spark: SparkSession): DataFrame = {
+    val extraUnd = extraEdges.map(undirected(_).localCheckpoint())
+    val nExtra = extraUnd.fold(0L)(_.count()) // both directions already
+    val totalRows = graph.rows + nExtra
+    // the merged-adjacency build below runs at loop width instead of
+    // session width + a narrowing repartition
+    Loops.withShuffleWidth(spark, totalRows) {
+      val (und, outW) = extraUnd match {
+        case Some(x) if nExtra > 0L =>
+          val delta = x.groupBy("src").agg(sum("w").as("__dw"))
           val merged = graph.outW.join(delta, Seq("src"), "full_outer")
             .select(col("src"),
               (coalesce(col("wout"), lit(0.0)) + coalesce(col("__dw"), lit(0.0))).as("wout"))
-          (graph.und.unionByName(extraUnd), merged)
-        }
+          (graph.und.unionByName(x), merged)
+        case _ => (graph.und, graph.outW)
+      }
       val adj0 = und.join(outW, Seq("src"))
         .select(col("src"), col("dst"), (col("w") / col("wout")).as("p"))
         .localCheckpoint()
-      runAdj(adj0, seeds, damping, tol, maxIter, minScore,
-        rowsHint = Some(totalRows))
+      runAdj(adj0, totalRows, seeds, damping, tol, maxIter, minScore)
     }
   }
 
   private def runAdj(
       adj0: DataFrame,
+      adjRows: Long, // adj0 rows = merged adjacency rows (the normalization join matches every row)
       seeds: DataFrame,
       damping: Double,
       tol: Double,
       maxIter: Int,
-      minScore: Double,
-      /** Caller-measured adjacency row count (both builders already count
-        * the edges to scope the build width) — saves the re-count job; an
-        * over-estimate only widens the loop slightly.
-        */
-      rowsHint: Option[Long] = None
+      minScore: Double
   )(implicit spark: SparkSession): DataFrame = {
     // right-size the loop's partitioning from the MEASURED adjacency: the
     // session's spark.sql.shuffle.partitions (sized for corpus-scale
     // stages) makes every one of the 25+ iterations pay mostly-empty
-    // tasks on a small query graph; ~100k edges per partition keeps a
-    // 10⁹-edge graph at real-cluster width while a 10³-edge retrieval
-    // graph runs the whole loop in ONE task per stage.
-    val adjRows = rowsHint.getOrElse(adj0.count())
-    val parts = math.max(1, (adjRows / 100000L).toInt + 1)
+    // tasks; ~100k edges per partition keeps a 10⁹-edge graph at
+    // real-cluster width.
+    val parts = math.max(1, (adjRows / Loops.RowsPerPartition).toInt + 1)
     val adj =
       if (adj0.rdd.getNumPartitions <= parts) adj0
       else adj0.repartition(parts, col("src")).localCheckpoint()
@@ -159,41 +357,43 @@ object Ppr {
     // scope the session's shuffle width to the measured graph for the
     // whole loop (graft.core.Loops): every published frame below is
     // checkpointed before the width is restored.
-    graft.core.Loops.withShuffleWidth(spark, adjRows) {
+    Loops.withShuffleWidth(spark, adjRows) {
 
     // node set = edge endpoints ∪ seed ids: the reference's InMemory PPR
     // personalizes over ALL graph nodes (memory.py:304-315), so a seed with
     // no edges must still receive (1−d)·pers mass each iteration instead of
     // silently dropping to rank 0. No persist: the only consumer is the
     // checkpointed `pers` build below (the uniform fallback recomputes it
-    // once for its count — a branch no bench/query path takes).
+    // once for its count).
     val nodes = adj.select(col("src").as("id"))
       .unionByName(seeds.select(col("id")))
       .distinct()
 
     // normalized personalization over the node set (uniform fallback —
-    // memory.py:304-315)
-    val seedSum = seeds.agg(sum(col("weight"))).collect()(0)
-    val totalSeed = if (seedSum.isNullAt(0)) 0.0 else seedSum.getDouble(0)
+    // memory.py:304-315). A duplicated seed id would duplicate its `pers`
+    // row in the join below and count its rank twice every iteration, so
+    // the same job that sums the weights also checks the ids are distinct.
+    val seedStats = seeds.agg(sum(col("weight")), count(lit(1)), count(col("id")),
+      countDistinct(col("id"))).collect()(0)
+    if (seedStats.getLong(1) != seedStats.getLong(2))
+      throw new IllegalArgumentException("PPR seeds contain a null id")
+    if (seedStats.getLong(2) != seedStats.getLong(3))
+      duplicateSeed(seeds.groupBy("id").count().filter(col("count") > 1).first().get(0))
+    val totalSeed = if (seedStats.isNullAt(0)) 0.0 else seedStats.getDouble(0)
     val pers =
       if (totalSeed <= 0.0) {
         val n = nodes.count()
         nodes.withColumn("pers", lit(1.0 / n))
       } else {
-        nodes.join(seeds.withColumnRenamed("id", "id"), Seq("id"), "left")
+        nodes.join(seeds, Seq("id"), "left")
           .select(col("id"), (coalesce(col("weight"), lit(0.0)) / totalSeed).as("pers"))
       }
     val persisted = pers.localCheckpoint()
 
-    // Iterations are chained LAZILY in blocks of `blockSize`; each block
+    // Iterations are chained LAZILY in blocks of `BlockSize`; each block
     // materializes once (localCheckpoint, truncating lineage) and pays one
     // convergence check. Per-iteration eager checkpoints + delta counts
-    // would cost ~3 driver jobs per iteration — at 25+ iterations that is
-    // pure scheduling overhead dominating small/medium graphs.
-    // measured: larger blocks for the fixed-iteration case (13 → 2 jobs)
-    // LOSE — the deeper Catalyst plan costs more per materialization than
-    // the saved job round-trips; 5 is the sweet spot on both paths
-    val blockSize = 5
+    // would cost ~3 driver jobs per iteration.
     def step(ranks: DataFrame): DataFrame = {
       val contrib = adj
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
@@ -210,8 +410,7 @@ object Ppr {
     // block's delta is EXACTLY 0.0 — and a zero delta means ranks are at a
     // double-exact fixed point, so the remaining iterations reproduce them
     // bit-for-bit. Skipping the probe therefore yields identical results
-    // while saving one join+agg job per block (q29 runs fixed 25
-    // iterations with tol = 0: five convergence jobs were pure overhead).
+    // while saving one join+agg job per block.
     val checkConvergence = tol > 0.0
     // ranks₀ is a projection of the checkpointed personalization leaf — no
     // checkpoint job needed for it
@@ -219,7 +418,7 @@ object Ppr {
     var iter = 0
     var delta = Double.MaxValue
     while (delta > tol && iter < maxIter) {
-      val n = math.min(blockSize, maxIter - iter)
+      val n = math.min(BlockSize, maxIter - iter)
       var next = ranks
       for (_ <- 0 until n) next = step(next)
       next = next.localCheckpoint()

@@ -29,6 +29,11 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     * same way). Every query's retrieval reuses it; only that query's
     * ephemeral online edges pay new normalization work. Feedback updates
     * factors, never edges, so no invalidation is needed mid-instance.
+    * Below `Loops.RowsPerPartition` adjacency rows this holds the graph as
+    * driver arrays (a few MB at most), and each query's PPR runs on the
+    * driver in milliseconds without taking the JVM-wide `Loops` lock, so
+    * concurrent queries do not queue behind one another's loops; larger
+    * graphs keep checkpointed DataFrames and the distributed loop.
     */
   private[query] lazy val pprGraph: graft.graph.Ppr.PreparedGraph =
     graft.graph.Ppr.prepare(edges)

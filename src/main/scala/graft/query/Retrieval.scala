@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   *   4. score = 0.5·vec + 0.5·(ppr / max ppr), top-k
   *      (adapter.py:546-592; max-normalization at :559-562) [T2, A8]
   *
-  * All stages are DataFrame ops; the only driver-side values are the query
-  * vector (broadcast via literal) and scalar aggregates.
+  * All stages are DataFrame ops; the driver-side values are the query
+  * vector (broadcast via literal), scalar aggregates and — on a graph below
+  * the loop width (graft.graph.Ppr) — the PPR iteration itself over the
+  * collected ≤ fetch_k seeds and online edges.
   */
 object Retrieval {
 
@@ -90,9 +92,10 @@ object Retrieval {
       rules: Option[DataFrame] = None,
       strategy: CompletionStrategy = PprCompletion,
       /** A snapshot-scoped normalized adjacency (Ppr.prepare(edges)) — a
-        * query service passes this so every query reuses the cached
-        * und/outW instead of rebuilding them from the edge table
-        * (GraftService prepares once per committed snapshot).
+        * query service passes this so every query reuses it instead of
+        * preparing the edge table again (GraftService prepares once per
+        * committed snapshot). On a graph below the loop width it lives on
+        * the driver and PPR costs two small collects (seeds, online edges).
         */
       prepared: Option[Ppr.PreparedGraph] = None
   )(implicit spark: SparkSession): RetrievalOutput = {
@@ -127,21 +130,20 @@ object Retrieval {
       .select(col("id"), col("name"), col("vec_score"), col("weight"))
 
     // step 5: pattern completion over the merged graph (persistent +
-    // online extras). PPR is the HippoRAG path; BFS is the reference's
-    // documented fallback (retrieval.py:145-183) — same blend downstream.
+    // online extras). PPR is the HippoRAG path: the online edges merge into
+    // the prepared persistent graph as per-query extras. BFS is the
+    // reference's documented fallback (retrieval.py:145-183) — same blend
+    // downstream.
     val onlineAsEdges = online.select(col("id_a").as("source_id"),
       col("id_b").as("target_id"), col("cosine").as("confidence"))
-    lazy val pprEdges = edges.select(col("source_id"), col("target_id"), col("confidence"))
-      .unionByName(onlineAsEdges)
-    val ppr = (strategy, prepared) match {
-      case (PprCompletion, Some(g)) =>
-        Ppr.runPrepared(g, onlineAsEdges, weighted.select(col("id"), col("weight")),
-          damping = 0.85, tol = 1e-4, maxIter = 30)
-      case (PprCompletion, None) =>
-        Ppr.run(pprEdges, weighted.select(col("id"), col("weight")),
-          damping = 0.85, tol = 1e-4, maxIter = 30)
-      case (BfsCompletion, _) =>
-        graft.graph.Bfs.patternCompletion(pprEdges, weighted.select(col("id")), maxDepth = 2)
+    val ppr = strategy match {
+      case PprCompletion =>
+        Ppr.runPrepared(prepared.getOrElse(Ppr.prepare(edges)), onlineAsEdges,
+          weighted.select(col("id"), col("weight")), damping = 0.85, tol = 1e-4, maxIter = 30)
+      case BfsCompletion =>
+        val bfsEdges = edges.select(col("source_id"), col("target_id"), col("confidence"))
+          .unionByName(onlineAsEdges)
+        graft.graph.Bfs.patternCompletion(bfsEdges, weighted.select(col("id")), maxDepth = 2)
           .select(col("id"), col("score").as("rank"))
     }
 

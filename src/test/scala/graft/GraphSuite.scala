@@ -1,8 +1,9 @@
 package graft
 
-import graft.graph.Ppr
+import graft.graph.{Ppr, PprTestAccess}
 import graft.streaming.EdgePromotion
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.OutputMode
 
 class GraphSuite extends SparkFunSuite {
@@ -14,8 +15,6 @@ class GraphSuite extends SparkFunSuite {
       ("a", "b", 1.0), ("b", "c", 0.5), ("a", "c", 0.8), ("c", "d", 0.6))
     val edges = edgeList.toDF("source_id", "target_id", "confidence")
     val seeds = Seq(("a", 1.0)).toDF("id", "weight")
-    val got = Ppr.run(edges, seeds, damping = 0.85, tol = 1e-9)
-      .as[(String, Double)].collect().toMap
 
     // dense reference implementation (same spec, sequential)
     val nodes = Seq("a", "b", "c", "d")
@@ -30,8 +29,119 @@ class GraphSuite extends SparkFunSuite {
       for (i <- 0 until 4) next(i) = 0.85 * next(i) + 0.15 * pers(i)
       rank = next
     }
-    for ((n, i) <- idx)
-      assert(math.abs(got.getOrElse(n, 0.0) - rank(i)) < 1e-6, s"node $n: ${got.get(n)} vs ${rank(i)}")
+    for ((path, limit) <- PprTestAccess.paths) {
+      val got = PprTestAccess.run(edges, seeds, limit, damping = 0.85, tol = 1e-9)
+        .as[(String, Double)].collect().toMap
+      for ((n, i) <- idx)
+        assert(math.abs(got.getOrElse(n, 0.0) - rank(i)) < 1e-6,
+          s"$path node $n: ${got.get(n)} vs ${rank(i)}")
+    }
+  }
+
+  private def ranks(df: DataFrame): Map[String, Double] = df.as[(String, Double)].collect().toMap
+
+  test("PPR: the driver kernel and the distributed loop return the same ids and ranks") {
+    // x–y carries a null confidence: both stay nodes, neither edge direction
+    // carries mass; z (a seed) and "new" (an online endpoint) have no
+    // persistent edges
+    val edges = Seq[(String, String, Option[Double])](
+      ("a", "b", Some(1.0)), ("b", "c", Some(0.5)), ("a", "c", Some(0.8)), ("c", "d", Some(0.6)),
+      ("d", "e", Some(0.9)), ("x", "y", None))
+      .toDF("source_id", "target_id", "confidence")
+    val extras = Seq(("b", "e", 0.75), ("e", "new", 0.7)).toDF("source_id", "target_id", "confidence")
+    val seedSets = Seq(
+      "seeds" -> Seq(("a", 1.0), ("z", 0.5)).toDF("id", "weight"),
+      "empty seeds" -> Seq.empty[(String, Double)].toDF("id", "weight"))
+    for {
+      (extraName, ex) <- Seq("no extras" -> None, "extras" -> Some(extras))
+      (seedName, seeds) <- seedSets
+      (tol, maxIter) <- Seq((0.0, 12), (1e-3, 100))
+    } {
+      val name = s"$extraName, $seedName, tol $tol"
+      val Seq(driver, distributed) = PprTestAccess.paths.map { case (_, limit) =>
+        ranks(PprTestAccess.run(edges, seeds, limit, ex, tol = tol, maxIter = maxIter))
+      }
+      assert(driver.keySet == distributed.keySet, name)
+      for ((id, r) <- driver)
+        assert(math.abs(r - distributed(id)) < 1e-12, s"$name: $id $r vs ${distributed(id)}")
+      if (seedName == "empty seeds") assert(Set("x", "y").subsetOf(driver.keySet), name)
+      else assert(driver.contains("z") && !driver.contains("x"), name)
+      if (ex.isDefined) assert(driver.contains("new"), name)
+      // tol > 0 stops early: its ranks differ from all maxIter iterations
+      if (tol > 0.0) {
+        val full = ranks(PprTestAccess.run(edges, seeds, PprTestAccess.paths.head._2, ex,
+          tol = 0.0, maxIter = maxIter))
+        assert(driver.exists { case (id, r) => math.abs(r - full.getOrElse(id, 0.0)) > 1e-12 }, name)
+      }
+    }
+  }
+
+  test("PPR rejects a duplicated or null seed id on both paths") {
+    // a duplicated id used to duplicate its personalization row, counting
+    // its rank twice in every iteration
+    val edges = Seq(("a", "b", 1.0), ("b", "c", 1.0)).toDF("source_id", "target_id", "confidence")
+    val seeds = Seq(("a", 0.5), ("b", 0.2), ("a", 0.5)).toDF("id", "weight")
+    val nullSeed = Seq[(String, Double)](("a", 0.5), (null, 0.5)).toDF("id", "weight")
+    for ((path, limit) <- PprTestAccess.paths) {
+      val e = intercept[IllegalArgumentException](
+        PprTestAccess.run(edges, seeds, limit).collect())
+      assert(e.getMessage.contains("'a'"), s"$path: ${e.getMessage}")
+      val n = intercept[IllegalArgumentException](
+        PprTestAccess.run(edges, nullSeed, limit).collect())
+      assert(n.getMessage.contains("null id"), s"$path: ${n.getMessage}")
+    }
+  }
+
+  test("PPR prepare: adjacencies below Loops.RowsPerPartition rows go to the driver") {
+    import org.apache.spark.sql.functions._
+    // the undirected adjacency holds 2 rows per edge
+    def edges(n: Long) = spark.range(n).select(
+      concat(lit("n"), col("id")).as("source_id"),
+      concat(lit("n"), (col("id") + 1) % 1000).as("target_id"),
+      lit(0.5).as("confidence"))
+    val below = graft.core.Loops.RowsPerPartition / 2 - 1
+    val small = Ppr.prepare(edges(below))
+    assert(small.isInstanceOf[Ppr.DriverGraph] && small.rows == 2 * below)
+    val large = Ppr.prepare(edges(below + 1))
+    assert(large.isInstanceOf[Ppr.DistributedGraph] && large.rows == 2 * (below + 1))
+  }
+
+  test("PPR driver path: no cached RDDs, no shuffle-width scope, concurrent calls match serial") {
+    import graft.core.Loops
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val edges = (0 until 40).map(i => (s"n$i", s"n${(i * 7 + 1) % 40}", 0.8))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val extras = Seq(("n1", "n20", 0.95)).toDF("source_id", "target_id", "confidence")
+    val seeds = Seq(("n0", 1.0), ("n5", 0.5)).toDF("id", "weight")
+    val g = Ppr.prepare(edges)
+    assert(g.isInstanceOf[Ppr.DriverGraph])
+    def query() = ranks(Ppr.runPrepared(g, extras, seeds, tol = 1e-4, maxIter = 30))
+
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val widthBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    val serial = query()
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == widthBefore)
+
+    // a query completes while another thread holds a loop's width scope:
+    // the driver path never waits on the JVM-wide Loops lock
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val holder = Future(Loops.withShuffleWidth(spark, 0L) {
+      entered.countDown(); release.await(120, TimeUnit.SECONDS)
+    })
+    try {
+      assert(entered.await(60, TimeUnit.SECONDS))
+      assert(Await.result(Future(query()), 60.seconds) == serial)
+    } finally release.countDown()
+    Await.result(holder, 60.seconds)
+
+    val both = Seq(Future(query()), Future(query()))
+    both.foreach(f => assert(Await.result(f, 120.seconds) == serial))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == widthBefore)
   }
 
   test("PPR: uniform personalization fallback when seeds are empty (memory.py:304-315)") {

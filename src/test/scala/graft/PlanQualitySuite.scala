@@ -135,7 +135,12 @@ class PlanQualitySuite extends SparkFunSuite {
     import spark.implicits._
     val edges = Seq(("a", "b", 0.9), ("b", "c", 0.8))
       .toDF("source_id", "target_id", "confidence")
-    val g = graft.graph.Ppr.prepare(edges)(spark)
+    // a graph this small prepares on the driver; force the distributed
+    // loop, whose prepared sides are the frames under test
+    val g = graft.graph.PprTestAccess.prepare(edges, rowLimit = 0L)(spark) match {
+      case d: graft.graph.Ppr.DistributedGraph => d
+      case other => fail(s"forced distributed prepare returned $other")
+    }
     // the prepared sides are checkpointed leaves — the per-query plan must
     // scan them, not re-derive union+groupBy from the edge table
     val plan = planOf(g.und.join(g.outW, Seq("src")))

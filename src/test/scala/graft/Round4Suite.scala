@@ -2,7 +2,7 @@ package graft
 
 import graft.canon.Canon
 import graft.causal.{Causal, CausalDag}
-import graft.graph.Ppr
+import graft.graph.{Ppr, PprTestAccess}
 import graft.learning.Thompson
 import graft.query.Service
 import org.apache.spark.sql.functions._
@@ -23,7 +23,9 @@ class Round4Suite extends SparkFunSuite {
     val pairs = (0 until 30).map(i => (s"c${i / 3 * 3}", s"c$i"))
       .toDF("id_a", "id_b").localCheckpoint()
 
-    def pprRun() = Ppr.run(edges, seeds, tol = 0.0, maxIter = 10)
+    // a graph this small runs PPR on the driver, outside Loops: force the
+    // distributed loop, which scopes the width
+    def pprRun() = PprTestAccess.run(edges, seeds, rowLimit = 0L, tol = 0.0, maxIter = 10)
       .collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toSet
     def ccRun() = Canon.connectedComponents(pairs)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -136,16 +138,20 @@ class Round4Suite extends SparkFunSuite {
     def collectRanks(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toMap
 
-    val g = Ppr.prepare(edges)
-    // with extras: identical to one-shot run over the union
-    val prepared = collectRanks(Ppr.runPrepared(g, extras, seeds, tol = 0.0, maxIter = 12))
-    val oneShot = collectRanks(Ppr.run(edges.unionByName(extras), seeds, tol = 0.0, maxIter = 12))
-    assert(prepared == oneShot)
-    // without extras: the cached normalization is used as-is
-    val noExtras = collectRanks(Ppr.runPrepared(g,
-      Seq.empty[(String, String, Double)].toDF("source_id", "target_id", "confidence"),
-      seeds, tol = 0.0, maxIter = 12))
-    assert(noExtras == collectRanks(Ppr.run(edges, seeds, tol = 0.0, maxIter = 12)))
+    for ((path, limit) <- PprTestAccess.paths) {
+      val g = PprTestAccess.prepare(edges, limit)
+      // with extras: identical to one-shot run over the union
+      val prepared = collectRanks(Ppr.runPrepared(g, extras, seeds, tol = 0.0, maxIter = 12))
+      val oneShot = collectRanks(
+        PprTestAccess.run(edges.unionByName(extras), seeds, limit, tol = 0.0, maxIter = 12))
+      assert(prepared == oneShot, path)
+      // without extras: the cached normalization is used as-is
+      val noExtras = collectRanks(Ppr.runPrepared(g,
+        Seq.empty[(String, String, Double)].toDF("source_id", "target_id", "confidence"),
+        seeds, tol = 0.0, maxIter = 12))
+      assert(noExtras == collectRanks(PprTestAccess.run(edges, seeds, limit, tol = 0.0, maxIter = 12)),
+        path)
+    }
   }
 
   // ---- VectorIndex intra-JVM write serialization -------------------------
