@@ -480,7 +480,7 @@ object SparkEntry {
         .select("id_a", "id_b").localCheckpoint()
       val init = pairs.filter(col("id_a") % 2 === 0 && col("id_b") % 2 === 0)
       val delta = pairs.filter(col("id_a") % 2 === 1 || col("id_b") % 2 === 1)
-      val committed = graft.canon.Canon.connectedComponentsAuto(init)
+      val committed = graft.canon.Canon.connectedComponents(init)
       val updated = graft.canon.IncrementalCanon.update(committed, delta)
       docs.select(col("doc_id"))
         .join(updated.select(col("id").as("doc_id"), col("canonical_id")),
@@ -2265,10 +2265,11 @@ object SparkEntry {
   /** q28's oracle: min-label connected components over the dumped synonym
     * pair fixture as `Canon.OracleRoundBudget` generated MATERIALIZED
     * label-propagation rounds (components converge in ≤ diameter rounds;
-    * CanonSuite asserts the verify corpus converges within the budget, and
-    * Canon.connectedComponents warns loudly if a corpus ever exceeds its
-    * own iteration cap). Identity fallback for singleton concepts, exactly
-    * like Canon.canonicalMap.
+    * CanonSuite asserts that min-label propagation over the verify
+    * corpus's synonym pairs converges within the budget). The operator,
+    * Canon.connectedComponents, is large-star/small-star and reaches the
+    * same component minima. Identity fallback for singleton concepts,
+    * exactly like Canon.canonicalMap.
     */
   private def ccOracleSql: String = {
     val n = Canon.OracleRoundBudget

@@ -15,11 +15,9 @@ import org.apache.spark.sql.functions._
   * edges feed a CC over concept ids, and the smallest id in each component
   * becomes the canonical id.
   *
-  * CC is "GraphFrames-style iterative DataFrame joins with checkpointed
-  * frontiers": plain label propagation to the component minimum. Each
-  * iteration is one join + one aggregation; `localCheckpoint` every
-  * iteration truncates lineage so 20 iterations don't stack 20 plans.
-  * Convergence via `count(changed) == 0` on the driver — counts only, no
+  * CC is large-star/small-star over DataFrame edge sets checkpointed each
+  * round ([[connectedComponents]]): O(log n) rounds, stopping when the
+  * edges form a star forest, tested with one aggregation — counts only, no
   * per-row driver work.
   */
 object Canon {
@@ -104,224 +102,107 @@ object Canon {
       .distinct()
   }
 
-  /** Connected components over undirected (src, dst) id pairs.
-    * Returns (id, canonical_id) for every id appearing in `pairs`.
-    *
-    * Algorithm: iterative min-label propagation. label(v) starts as v;
-    * each round every vertex takes the min of its own label and its
-    * neighbors' labels; stop when no label changed. Rounds = graph diameter
-    * (synonym clusters are shallow — a handful of rounds in practice).
-    * Frontier data is checkpointed each round (`localCheckpoint`) per the
-    * north star, bounding lineage and making stragglers restart-cheap.
-    */
-  /** Round budget the q28 DuckDB oracle generates its label-propagation
-    * chain with. The operator runs to convergence (≤ `maxIterations`);
-    * CanonSuite asserts the shared verify corpus converges within THIS
-    * budget, so oracle and operator cannot silently diverge on a deeper
-    * synonym component — the oracle chain is generated from this constant.
+  /** Round budget the q28 DuckDB oracle generates its min-label
+    * label-propagation chain with. CanonSuite asserts that min-label
+    * propagation over the shared verify corpus's synonym pairs converges
+    * within THIS budget, so the oracle and [[connectedComponents]] cannot
+    * silently diverge on a deeper synonym component.
     */
   val OracleRoundBudget = 15
 
-  def connectedComponents(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): DataFrame =
-    connectedComponentsWithStats(pairs, maxIterations)._1
-
-  /** Adaptive CC — the production default: min-label propagation (cheap
-    * rounds: one join + one agg) while the graph is shallow, escalating
-    * to large-star/small-star (O(log n) rounds, heavier each) only when
-    * min-label has not converged within `switchAfter` rounds. Synonym
-    * graphs are almost always diameter ≤ a handful — they pay the cheap
-    * path; a pathological alias chain cannot stretch the loop past
-    * switchAfter + star's logarithmic budget. Labels are component
-    * minima on BOTH paths, so downstream results are identical.
+  /** Large-star/small-star rounds after which [[connectedComponents]]
+    * gives up. Rounds grow with log n: a 64-node chain needs at most 12.
     */
-  def connectedComponentsAuto(
-      pairs: DataFrame,
-      switchAfter: Int = 10,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): DataFrame = {
-    val (labels, iters, converged) = minLabelWithStats(pairs, switchAfter, warn = false)
-    if (converged) labels
-    else {
-      System.err.println(
-        s"[graft] connectedComponentsAuto: min-label not converged after $iters " +
-          "rounds — escalating to large-star/small-star")
-      connectedComponentsStar(pairs, maxIterations)
-    }
-  }
+  private val MaxRounds = 64
 
-  /** Like [[connectedComponents]] but also returns the number of
-    * propagation rounds actually run (the last round observes zero changes
-    * — convergence proof), so tests can assert round budgets.
-    */
-  def connectedComponentsWithStats(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): (DataFrame, Int) = {
-    val (labels, iters, _) = minLabelWithStats(pairs, maxIterations, warn = true)
-    (labels, iters)
-  }
-
-  private def minLabelWithStats(
-      pairs: DataFrame,
-      maxIterations: Int,
-      warn: Boolean
-  )(implicit spark: SparkSession): (DataFrame, Int, Boolean) = {
-    val srcCol = pairs.columns(0)
-    val dstCol = pairs.columns(1)
-    // materialize the pair plan ONCE before mirroring it: the undirected
-    // union would otherwise embed (and compute) the full upstream pair
-    // derivation twice — for q50/q62 that upstream is the banded LSH
-    // candidate join, the dominant cost of the whole operator
-    val p = pairs
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
-    // undirected, deduped edge list — both directions so one join propagates
-    // labels both ways
-    val edges = p
-      .union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      // localCheckpoint (not persist): truncates the upstream plan so each
-      // label-propagation round plans against a leaf, not the full pipeline.
-      .localCheckpoint()
-
-    // shuffle width sized to the measured synonym-edge set for the whole
-    // loop (graft.core.Loops) — all published frames are checkpointed
-    graft.core.Loops.withShuffleWidth(spark, edges.count()) {
-    var labels = edges
-      .select(col("src").as("id"))
-      .distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
-
-    val verbose = sys.env.contains("GRAFT_VERBOSE")
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIterations) {
-      val t0 = System.nanoTime()
-      // candidate labels arriving over edges
-      val incoming = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("label"))
-      val newLabels = labels
-        .select(col("id"), col("label"))
-        .union(incoming)
-        .groupBy("id")
-        .agg(min("label").as("new_label"))
-
-      // ONE materialization per round: checkpoint the (label, new_label)
-      // join itself, then derive both the changed-count and the next
-      // frontier from that leaf — the previous shape ran the whole
-      // join+union+groupBy a second time just to count changes
-      val joined = labels.join(newLabels, Seq("id")).localCheckpoint()
-      changed = joined.filter(col("new_label") =!= col("label")).count()
-      labels = joined.select(col("id"), col("new_label").as("label"))
-      iter += 1
-      if (verbose)
-        System.err.println(
-          f"[graft] cc iter $iter: changed=$changed ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    }
-    if (changed > 0 && warn)
-      System.err.println(
-        s"[graft] WARN connectedComponents hit maxIterations=$maxIterations with " +
-          s"$changed labels still changing — components larger than the round " +
-          s"budget would get split canonical ids; raise maxIterations")
-    (labels.withColumnRenamed("label", "canonical_id"), iter, changed == 0L)
-    }
-  }
-
-  /** Connected components via alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * O(log n) rounds instead of min-label propagation's O(diameter), the
-    * scale-safe choice when alias chains can be long. Same contract as
-    * [[connectedComponents]]: (id, canonical_id = component minimum).
+  /** Connected components over undirected id pairs: the first two columns
+    * of `pairs`, self-loops allowed. Returns (id, canonical_id) for every id
+    * appearing in `pairs`, where canonical_id is the smallest id of its
+    * component.
     *
-    * Each round is two aggregations + two joins, no per-node neighbor
-    * collection (the per-node minimum is computed with `min`, never
-    * `collect_set`, so a 10⁸-degree hub costs one combiner, not one
-    * buffer). Convergence = the canonical edge set's (count, hash-sum)
-    * fingerprint repeating — no driver-side edge materialization.
+    * Alternating large-star / small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014): O(log n)
+    * rounds where min-label propagation needs O(diameter). Edges are kept
+    * oriented larger → smaller, so a node's smaller neighbours are its
+    * targets and m(u) = min(N(u) ∪ u) is one `min` per source — no
+    * per-node neighbour collection, so a hub costs one combiner, not one
+    * buffer.
     *
-    *  - large-star(u): every neighbor v > u re-points to
-    *    m = min(N(u) ∪ u)
-    *  - small-star(u): with edges oriented larger→smaller, every neighbor
-    *    (all ≤ u) and u itself re-point to m = min(N(u) ∪ u)
+    *  - large-star: every edge (v, u) re-points v to m(u);
+    *  - small-star: every source u and each of its targets re-point to m(u).
+    *
+    * The loop stops as soon as the edges form a star forest: each source
+    * has exactly one edge and no target is itself a source. Each edge then
+    * points a node at its component minimum. A graph still not a star
+    * forest after `MaxRounds` rounds throws rather than return labels that
+    * are not minima.
     */
-  def connectedComponentsStar(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): DataFrame =
-    connectedComponentsStarWithStats(pairs, maxIterations)._1
+  def connectedComponents(pairs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    componentsWithRounds(pairs)._1
 
-  def connectedComponentsStarWithStats(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): (DataFrame, Int) = {
-    val srcCol = pairs.columns(0)
-    val dstCol = pairs.columns(1)
-    val allNodes = pairs.select(col(srcCol).as("id"))
-      .union(pairs.select(col(dstCol).as("id"))).distinct().localCheckpoint()
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val und = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      val mins = und.groupBy("a").agg(least(min(col("b")), first(col("a"))).as("m"))
-      und.filter(col("b") > col("a"))
-        .join(mins, Seq("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.select(greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b")).distinct()
-      val mins = oriented.groupBy("a").agg(min(col("b")).as("m"))
-      oriented.join(mins, Seq("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .union(mins.select(col("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-    }
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      // bit_xor: order-independent, overflow-free under ANSI mode
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    var edges = pairs
-      .select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .filter(col("a") =!= col("b"))
+  /** [[connectedComponents]] plus the number of rounds it ran. */
+  private[canon] def componentsWithRounds(pairs: DataFrame)(
+      implicit spark: SparkSession): (DataFrame, Int) = {
+    // materialise the caller's pair plan once: the node set and the edge
+    // set both read it
+    val p = pairs.select(col(pairs.columns(0)).as("a"), col(pairs.columns(1)).as("b"))
+      .localCheckpoint()
+    var edges = p.filter(col("a") =!= col("b"))
+      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
       .distinct()
       .localCheckpoint()
-    graft.core.Loops.withShuffleWidth(spark, edges.count()) {
-    var iter = 0
-    var prev = (-1L, 0L)
-    var cur = fingerprint(edges)
-    while (cur != prev && iter < maxIterations) {
-      edges = smallStar(largeStar(edges)).localCheckpoint()
-      prev = cur
-      cur = fingerprint(edges)
-      iter += 1
+    val (nEdges, star0) = starForest(edges)
+    var star = star0
+    var rounds = 0
+    // shuffle width sized to the measured edge set for the whole loop
+    graft.core.Loops.withShuffleWidth(spark, nEdges) {
+      while (!star) {
+        if (rounds == MaxRounds)
+          throw new IllegalStateException(
+            s"connectedComponents: edges are not a star forest after $MaxRounds rounds")
+        edges = smallStar(largeStar(edges)).localCheckpoint()
+        star = starForest(edges)._2
+        rounds += 1
+      }
     }
-    if (cur != prev)
-      System.err.println(
-        s"[graft] WARN connectedComponentsStar hit maxIterations=$maxIterations " +
-          "without the edge fingerprint stabilizing — labels from a non-star edge " +
-          "set are NOT component minima; raise maxIterations")
-    // converged star graph: every non-root points at its component minimum
-    val labels = allNodes
+    val labels = p.select(col("a").as("id")).union(p.select(col("b").as("id"))).distinct()
       .join(edges.withColumnRenamed("a", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("b"), col("id")).as("canonical_id"))
-      .localCheckpoint()
-    (labels, iter)
-    }
+    (labels, rounds)
   }
 
-  /** Full canonicalization: synonym edges (alias + abbreviation +
-    * name-similarity) → CC → (id, canonical_id) map covering ALL concepts
-    * (identity for singletons).
+  /** (edge count, whether the oriented edges form a star forest) in one
+    * aggregation.
     */
+  private def starForest(e: DataFrame): (Long, Boolean) = {
+    val r = e.select(col("a").as("v"), lit(1L).as("out"), lit(false).as("in"))
+      .union(e.select(col("b").as("v"), lit(0L), lit(true)))
+      .groupBy("v").agg(sum("out").as("out"), max("in").as("in"))
+      .agg(coalesce(sum("out"), lit(0L)),
+        count(when(col("out") > 1 || (col("out") > 0 && col("in")), 1)))
+      .head()
+    (r.getLong(0), r.getLong(1) == 0L)
+  }
+
+  /** (v, u) → (v, m(u)). One row per input edge, so duplicates are left
+    * for [[smallStar]]'s `distinct`.
+    */
+  private def largeStar(e: DataFrame): DataFrame = {
+    val mins = e.groupBy("a").agg(min(col("b")).as("m")).withColumnRenamed("a", "b")
+    e.join(mins, Seq("b"), "left")
+      .select(col("a"), coalesce(col("m"), col("b")).as("b"))
+  }
+
+  /** (u, t) → (t, m(u)) and (u, m(u)), self-loops dropped, deduplicated. */
+  private def smallStar(e: DataFrame): DataFrame = {
+    val mins = e.groupBy("a").agg(min(col("b")).as("m"))
+    e.join(mins, Seq("a"))
+      .select(col("b").as("a"), col("m").as("b"))
+      .filter(col("a") =!= col("b"))
+      .union(mins.select(col("a"), col("m").as("b")))
+      .distinct()
+  }
+
   /** All synonym edge families as one deduped (id_a, id_b) pair set —
     * exposed separately so the verify harness can dump it as the CC
     * oracle's input fixture.
@@ -347,16 +228,16 @@ object Canon {
       .distinct()
   }
 
+  /** Full canonicalization: synonym edges (alias + abbreviation +
+    * name-similarity) → CC → (id, canonical_id) map covering ALL concepts
+    * (identity for singletons).
+    */
   def canonicalMap(
       concepts: DataFrame,
       aliasPairs: DataFrame,
       nameSimThreshold: Double = 0.6
   )(implicit spark: SparkSession): DataFrame = {
-    // adaptive CC: cheap min-label rounds for the (typical) shallow
-    // synonym graph, star escalation only when min-label fails to
-    // converge within its budget. Labels are component minima on both
-    // paths — the q28 oracle and the equivalence property pin that.
-    val cc = connectedComponentsAuto(synonymEdges(concepts, aliasPairs, nameSimThreshold))
+    val cc = connectedComponents(synonymEdges(concepts, aliasPairs, nameSimThreshold))
     concepts
       .select(col("id"))
       .join(cc, Seq("id"), "left")

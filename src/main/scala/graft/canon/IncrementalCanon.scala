@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * adds aliases (and the corpus-dedup analog when a new document batch
   * adds near-dup pairs, `ops/IncrementalDedup`).
   *
-  * Correctness rests on the map invariant both CC paths guarantee
-  * (labels are component MINIMA, `Canon.connectedComponents*`): contract
+  * Correctness rests on the map invariant `Canon.connectedComponents`
+  * guarantees (labels are component MINIMA): contract
   * every committed component to its representative, run CC on the tiny
   * contracted graph formed by the new pairs alone, and the merged
   * component's new label — the min over merged representatives — equals
@@ -80,7 +80,7 @@ object IncrementalCanon {
 
     // 2. CC over the contracted delta graph — O(batch) nodes; keep only
     //    representatives whose label actually changes
-    val relabel = Canon.connectedComponentsAuto(contracted)
+    val relabel = Canon.connectedComponents(contracted)
       .filter(col("id") =!= col("canonical_id"))
       .select(col("id").as("canonical_id"), col("canonical_id").as("new_label"))
       .localCheckpoint() // bounded by the batch; cut the loop lineage

@@ -299,8 +299,8 @@ object Dedup {
     * keeping one copy per duplicate *group* needs the transitive closure
     * (A~B, B~C ⇒ {A,B,C} is one cluster even if A and C never met in a
     * band). Composes minhash banding with the engine's connected
-    * components (`Canon.connectedComponents` — iterative min-label joins
-    * with checkpointed frontiers, the same scale path the KG
+    * components (`Canon.connectedComponents` — large-star/small-star
+    * rounds over checkpointed edge sets, the same scale path the KG
     * canonicalizer uses).
     *
     * Giant-family correctness: buckets over `bucketCap` must NOT go

@@ -59,15 +59,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** Fixed random hyperplanes (splitmix-seeded, dimension-cyclic) →
-    * sign-bit signature. Deterministic across runs and partitions.
-    * More planes = finer buckets: 16 for near-dup detection (only
-    * near-identical vectors collide), 8 for ANN probing (buckets hold
-    * enough candidates to rank).
-    */
-  val NumPlanes = 16
-
-
   /** Pseudo-random plane component for (plane p, dimension d) in [-1, 1). */
   private def planeComponent(p: Int, d: Int): Double =
     (graft.functions.SplitMix64.mix(p.toLong * 0x9e37L ^ d.toLong) >>> 11).toDouble / (1L << 52).toDouble - 1.0
@@ -96,6 +87,10 @@ object Similarity {
     dot
   }
 
+  /** Sign-bit signature of `v` against `planes` fixed random hyperplanes
+    * (splitmix-seeded, dimension-cyclic). Deterministic across runs and
+    * partitions; more planes = finer buckets.
+    */
   def signatureOf(v: Seq[Float], planes: Int): Int = {
     if (v == null || v.isEmpty) return 0
     var sig = 0
@@ -107,7 +102,6 @@ object Similarity {
     sig
   }
 
-  val planeSignatureUdf = udf { (v: Seq[Float]) => signatureOf(v, NumPlanes) }
   val planeSignatureNUdf = udf { (v: Seq[Float], planes: Int) => signatureOf(v, planes) }
 
   /** Banded hyperplane signatures for near-dup detection: `NumBands` bands

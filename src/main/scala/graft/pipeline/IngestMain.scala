@@ -29,9 +29,10 @@ object IngestMain {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // ICU case-mapping class init costs ~60s in this sandbox and blocks
-      // every task at the first lower()/upper(); our spec is ASCII-stable
-      // under JVM mappings, so skip ICU (see graft.pipeline.DebugPerf).
+      // ICU case-mapping class init costs ~60 s and blocks every task at
+      // the first codegen'd lower()/upper() while ICU's
+      // CollationAwareUTF8String class-initialises (once per JVM); our spec
+      // is ASCII-stable under JVM mappings, so skip ICU.
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -197,14 +197,16 @@ class Round4Suite extends SparkFunSuite {
   // ---- canonicalMap through star CC --------------------------------------
 
   test("connectedComponentsAuto: shallow graph stays on min-label; deep chain escalates to star") {
-    // path graph a00-a01-...-a19: diameter 19 > switchAfter=3 → escalation
+    // the min-label/star switch is gone: both shapes now run through the one
+    // star entry point and must still get component-minimum labels
+    // path graph a00-a01-...-a19: diameter 19
     val chain = (0 until 19).map(i => (f"a$i%02d", f"a${i + 1}%02d")).toDF("id_a", "id_b")
-    val got = Canon.connectedComponentsAuto(chain, switchAfter = 3)
+    val got = Canon.connectedComponents(chain)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got.size == 20 && got.values.forall(_ == "a00"))
-    // shallow star-shaped graph converges inside the min-label budget
+    // shallow star-shaped graph
     val shallow = (1 until 6).map(i => ("hub", s"s$i")).toDF("id_a", "id_b")
-    val got2 = Canon.connectedComponentsAuto(shallow, switchAfter = 10)
+    val got2 = Canon.connectedComponents(shallow)
       .collect().map(r => r.getString(1)).toSet
     assert(got2 == Set("hub"))
   }
@@ -265,46 +267,6 @@ class Round4Suite extends SparkFunSuite {
     assert(a3 == a2, s"resume must be value-identical: $a3 vs $a2")
     assert(store.read(IncrementalDedup.SigTable).count() == 3)
     assert(store.latest(IncrementalDedup.SigTable).get.inputPartitions == Seq("b1", "b2"))
-  }
-
-  // ---- Incremental canonicalization ---------------------------------------
-
-  test("incremental canon: contract+relabel equals global CC on random splits") {
-    import graft.canon.{Canon, IncrementalCanon}
-    val rnd = new scala.util.Random(7)
-    for (trial <- 0 until 3) {
-      // random sparse graph on 40 nodes; random 2-batch split of the edges
-      val edges = (0 until 45).map { _ =>
-        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)
-      }.filter { case (a, b) => a != b }.distinct
-      val (b1, b2) = edges.partition(_ => rnd.nextBoolean())
-      val all = edges.toDF("id_a", "id_b")
-      val global = Canon.connectedComponentsAuto(all)
-        .as[(Long, Long)].collect().toMap
-
-      val committed = Canon.connectedComponentsAuto(b1.toDF("id_a", "id_b"))
-      val (inc, relabel) = IncrementalCanon.updateWithRelabel(
-        committed, b2.toDF("id_a", "id_b"))
-      val got = inc.as[(Long, Long)].collect()
-      assert(got.length == got.map(_._1).distinct.length, s"dup ids trial $trial")
-      assert(got.toMap == global, s"trial $trial mismatch")
-      // relabel only carries representatives whose label changed
-      val rl = relabel.as[(Long, Long)].collect()
-      assert(rl.forall { case (old, nu) => old != nu })
-    }
-  }
-
-  test("incremental canon: new ids, merges of two committed components") {
-    import graft.canon.{Canon, IncrementalCanon}
-    // committed: {1,2} and {5,6}; batch bridges them via NEW node 9 and
-    // adds a disjoint new pair {20,21}
-    val committed = Canon.connectedComponentsAuto(
-      Seq((1L, 2L), (5L, 6L)).toDF("id_a", "id_b"))
-    val updated = IncrementalCanon.update(committed,
-      Seq((2L, 9L), (9L, 6L), (20L, 21L)).toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().toMap
-    assert(updated == Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 6L -> 1L, 9L -> 1L,
-      20L -> 20L, 21L -> 20L))
   }
 
   // ---- native minhash expression ------------------------------------------
