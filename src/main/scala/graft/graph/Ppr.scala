@@ -2,6 +2,8 @@ package graft.graph
 
 import graft.core.Loops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
@@ -69,16 +71,18 @@ object Ppr {
     * over dense int node ids: the out-edges of node `i` are
     * `dst`/`w` at `offsets(i) until offsets(i + 1)`. Null-confidence
     * edges are left out of the arrays (they contribute nothing) but their
-    * endpoints keep an id.
+    * endpoints keep an id. `ends` keeps every collected edge row, null
+    * confidence included, as its (source, target) dense ids back to back.
     */
   final class DriverGraph private[Ppr] (
-      private[graph] val idType: DataType,
-      private[graph] val ids: Array[Any], // dense id → node id
-      private[graph] val index: Map[Any, Int], // node id → dense id
+      private[graft] val idType: DataType,
+      private[graft] val ids: Array[Any], // dense id → node id
+      private[graft] val index: Map[Any, Int], // node id → dense id
       private[graph] val offsets: Array[Int],
       private[graph] val dst: Array[Int],
       private[graph] val w: Array[Double],
       private[graph] val outW: Array[Double], // Σ non-null out-weights per source
+      private[graft] val ends: Array[Int],
       val rows: Long
   ) extends PreparedGraph
 
@@ -205,7 +209,10 @@ object Ppr {
   private def driverGraph(edges: Array[Row], idType: DataType): DriverGraph = {
     val index = mutable.HashMap.empty[Any, Int]
     val ids = mutable.ArrayBuffer.empty[Any]
-    val (s, d, ws) = bothDirections(edges, id => index.getOrElseUpdate(id, { ids += id; ids.size - 1 }))
+    def node(id: Any): Int = index.getOrElseUpdate(id, { ids += id; ids.size - 1 })
+    val ends = new Array[Int](2 * edges.length)
+    for ((e, k) <- edges.zipWithIndex) { ends(2 * k) = node(e.get(0)); ends(2 * k + 1) = node(e.get(1)) }
+    val (s, d, ws) = bothDirections(edges, node)
     val n = ids.size
     // counting sort by source
     val offsets = new Array[Int](n + 1)
@@ -220,7 +227,7 @@ object Ppr {
       csrDst(p) = d(k); csrW(p) = ws(k); next(s(k)) += 1
       outW(s(k)) += ws(k)
     }
-    new DriverGraph(idType, ids.toArray, index.toMap, offsets, csrDst, csrW, outW,
+    new DriverGraph(idType, ids.toArray, index.toMap, offsets, csrDst, csrW, outW, ends,
       2L * edges.length)
   }
 
@@ -235,17 +242,49 @@ object Ppr {
   )(implicit spark: SparkSession): DataFrame = {
     val extras = extraEdges.fold(Array.empty[Row])(edgeRows(_, g.idType).collect())
     val seedRows = seeds.select(col("id").cast(g.idType), col("weight").cast("double")).collect()
+    val ranks = rankOnDriver(g, extras, seedRows, damping, tol, maxIter, minScore)
+    spark.createDataFrame(java.util.Arrays.asList(ranks: _*),
+      StructType(Seq(StructField("id", g.idType), StructField("rank", DoubleType))))
+  }
 
-    // nodes beyond the prepared graph: extra-edge endpoints, edgeless seeds
-    val added = mutable.LinkedHashMap.empty[Any, Int]
-    def node(id: Any): Int =
-      g.index.getOrElse(id, added.getOrElseUpdate(id, g.ids.length + added.size))
-    val (xs, xd, xw) = bothDirections(extras, node)
-    val seedIdx = seedRows.map { r =>
-      if (r.isNullAt(0)) throw new IllegalArgumentException("PPR seeds contain a null id")
-      node(r.get(0))
-    }
-    val n = g.ids.length + added.size
+  /** The driver path's power iteration over rows already on the driver:
+    * `extras` are (source_id, target_id, confidence: Double or null) and
+    * `seeds` (id, weight: Double or null), ids of the graph's id type.
+    * Returns (id, rank) rows with rank > `minScore`, the graph's nodes
+    * first.
+    *
+    * The result depends only on the rows, not on the order they arrive in:
+    * nodes beyond the prepared graph (extra-edge endpoints, edgeless seeds)
+    * get dense ids in Spark's order of their values, and the extras fold
+    * in (source, target, weight) order. So a caller that computes the same
+    * extras and seeds on the driver (graft.query.SnapshotIndex) gets the
+    * ranks of `runPrepared` bit for bit.
+    */
+  private[graft] def rankOnDriver(
+      g: DriverGraph,
+      extras: Array[Row],
+      seedRows: Array[Row],
+      damping: Double,
+      tol: Double,
+      maxIter: Int,
+      minScore: Double
+  ): Array[Row] = {
+    if (seedRows.exists(_.isNullAt(0)))
+      throw new IllegalArgumentException("PPR seeds contain a null id")
+    val base = g.ids.length
+    val added: Map[Any, Int] =
+      (extras.iterator.flatMap(e => Iterator(e.get(0), e.get(1))) ++ seedRows.iterator.map(_.get(0)))
+        .filterNot(g.index.contains).toArray.distinct
+        .sorted(Ordering.by[Any, Option[Any]](Option(_))(Ordering.Option(sparkOrdering(g.idType))))
+        .zipWithIndex.map { case (id, i) => id -> (base + i) }.toMap
+    def node(id: Any): Int = g.index.getOrElse(id, added(id))
+    val (xs0, xd0, xw0) = bothDirections(extras, node)
+    val byKey = xs0.indices.sortBy(k => (xs0(k), xd0(k), xw0(k)))(
+      Ordering.Tuple3(Ordering.Int, Ordering.Int, Ordering.Double.TotalOrdering))
+    val xs = byKey.map(xs0).toArray
+    val xd = byKey.map(xd0).toArray
+    val xw = byKey.map(xw0).toArray
+    val n = base + added.size
 
     // the extras' out-weight deltas fold into a copy of the cached sums
     val wout = java.util.Arrays.copyOf(g.outW, n)
@@ -253,7 +292,8 @@ object Ppr {
 
     val pers = new Array[Double](n)
     val seen = new Array[Boolean](n)
-    for ((i, r) <- seedIdx.zip(seedRows)) {
+    for (r <- seedRows) {
+      val i = node(r.get(0))
       if (seen(i)) duplicateSeed(r.get(0))
       seen(i) = true
       pers(i) = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
@@ -264,7 +304,7 @@ object Ppr {
     def step(rank: Array[Double]): Array[Double] = {
       val inflow = new Array[Double](n)
       var s = 0
-      while (s < g.ids.length) {
+      while (s < base) {
         if (wout(s) != 0.0) {
           var e = g.offsets(s)
           while (e < g.offsets(s + 1)) {
@@ -294,12 +334,16 @@ object Ppr {
       iter += steps
     }
 
-    val addedIds = added.keys.toArray
-    val out = new java.util.ArrayList[Row]()
-    for (i <- 0 until n if rank(i) > minScore)
-      out.add(Row(if (i < g.ids.length) g.ids(i) else addedIds(i - g.ids.length), rank(i)))
-    spark.createDataFrame(out,
-      StructType(Seq(StructField("id", g.idType), StructField("rank", DoubleType))))
+    val addedIds = new Array[Any](added.size)
+    added.foreach { case (id, i) => addedIds(i - base) = id }
+    (0 until n).iterator.filter(i => rank(i) > minScore)
+      .map(i => Row(if (i < base) g.ids(i) else addedIds(i - base), rank(i))).toArray
+  }
+
+  /** Spark SQL's order on non-null values of `t`, over external (Row) values. */
+  private def sparkOrdering(t: DataType): Ordering[Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+    Ordering.by(toCatalyst)(TypeUtils.getInterpretedOrdering(t))
   }
 
   // ---- distributed path ----------------------------------------------------

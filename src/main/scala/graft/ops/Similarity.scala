@@ -21,18 +21,26 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  val cosineUdf = udf { (a: Seq[Float], b: Seq[Float]) =>
-    if (a == null || b == null || a.isEmpty || a.length != b.length) 0.0
+  /** Cosine of `a[aFrom, aFrom + aLen)` and `b[bFrom, bFrom + bLen)`,
+    * accumulated in double. 0.0 for a null or empty vector, mismatched
+    * lengths or a zero norm. The one kernel behind `cosineUdf` and the
+    * driver-side snapshot index (graft.query.SnapshotIndex), so both score
+    * a pair bit for bit alike.
+    */
+  def cosine(a: Array[Float], aFrom: Int, aLen: Int, b: Array[Float], bFrom: Int, bLen: Int): Double =
+    if (a == null || b == null || aLen == 0 || aLen != bLen) 0.0
     else {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = a.length
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
+      while (i < aLen) {
+        val x = a(aFrom + i).toDouble; val y = b(bFrom + i).toDouble
         dot += x * y; na += x * x; nb += y * y
         i += 1
       }
       if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
     }
+
+  val cosineUdf = udf { (a: Array[Float], b: Array[Float]) =>
+    cosine(a, 0, if (a == null) 0 else a.length, b, 0, if (b == null) 0 else b.length)
   }
 
   /** Brute-force cosine top-k: for each query row, the k nearest corpus

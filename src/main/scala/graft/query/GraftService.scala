@@ -14,13 +14,15 @@ import org.apache.spark.sql.functions._
   * wrappers) is out of scope.
   *
   * The committed tables are read once per service instance and
-  * plan-truncated (`localCheckpoint`) so every query plans against leaves
-  * — the "query service checkpoints its graph across queries" shape.
+  * plan-truncated (`localCheckpoint`) — the "query service checkpoints
+  * its graph across queries" shape. A snapshot below the loop width (see
+  * `index`) is also held on the driver, and each query runs there without
+  * planning a DataFrame; a larger one plans every query against those
+  * checkpointed leaves.
   */
 final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   import spark.implicits._
 
-  private lazy val concepts: DataFrame = store.read("concepts").localCheckpoint()
   private lazy val edges: DataFrame = store.read("edges").localCheckpoint()
   private lazy val rules: DataFrame = store.read("rules").localCheckpoint()
 
@@ -38,9 +40,36 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   private[query] lazy val pprGraph: graft.graph.Ppr.PreparedGraph =
     graft.graph.Ppr.prepare(edges)
 
+  /** The snapshot's concepts, graph and rule postings on the driver,
+    * built once per instance next to `pprGraph`. It exists exactly when
+    * `pprGraph` is a driver graph and the concepts have fewer than
+    * `Loops.RowsPerPartition` rows (the same size rule); then `query`
+    * answers from it with one small collect of the factors, caches no RDD
+    * and takes no `Loops` lock. Larger snapshots keep
+    * `Retrieval.retrieveFull`. A duplicate concept id fails the build.
+    */
+  private[query] lazy val index: Option[SnapshotIndex] = pprGraph match {
+    case g: graft.graph.Ppr.DriverGraph => SnapshotIndex.build(store.read("concepts"), rules, g)
+    case _ => None
+  }
+
+  /** With the index holding the embeddings, the checkpoint keeps only the
+    * columns explore, feedback credit and stats read, so the vectors are
+    * held once.
+    */
+  private lazy val concepts: DataFrame = {
+    val all = store.read("concepts")
+    (if (index.isDefined) all.select("id", "name", "domain", "confidence") else all).localCheckpoint()
+  }
+
+  /** Read per query, never cached: feedback commits them, and so may
+    * another service instance over the same warehouse.
+    */
+  private def storedFactors: Option[DataFrame] =
+    if (store.exists("factors")) Some(store.read("factors")) else None
+
   private def factors: DataFrame =
-    if (store.exists("factors")) store.read("factors")
-    else Seq.empty[(String, Double)].toDF("node_id", "factor")
+    storedFactors.getOrElse(Seq.empty[(String, Double)].toDF("node_id", "factor"))
 
   // service counters (service.py:439, 482-485)
   private val queryCounter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -69,12 +98,16 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   ): QueryResult = {
     val k = math.max(1, math.min(topK, 1000))
     val minConf = math.max(0.0, math.min(minConfidence, 1.0))
-    val cs0 =
-      if (domains.isEmpty) concepts
-      else concepts.filter(substring_index(col("id"), ":", 1).isin(domains: _*))
-    val cs = if (minConf > 0.0) cs0.filter(col("confidence") >= minConf) else cs0
-    val out = Retrieval.retrieveFull(cs, edges, factors, context, k,
-      rules = Some(rules), prepared = Some(pprGraph))
+    val out = index match {
+      case Some(ix) => ix.retrieve(context, k, domains, minConf, storedFactors)
+      case None =>
+        val cs0 =
+          if (domains.isEmpty) concepts
+          else concepts.filter(substring_index(col("id"), ":", 1).isin(domains: _*))
+        val cs = if (minConf > 0.0) cs0.filter(col("confidence") >= minConf) else cs0
+        Retrieval.retrieveFull(cs, edges, factors, context, k,
+          rules = Some(rules), prepared = Some(pprGraph))
+    }
     // the PPR graph spans all domains (cross-domain activation is the
     // HippoRAG point), so a domain restriction must ALSO filter the scored
     // items — hippocampus/retrieval.py:137-141 filters scores the same way
@@ -140,7 +173,11 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     * linked to anything visited. None if the node doesn't exist.
     */
   def explore(nodeId: String, depth: Int = 1): Option[ExploreResult] = {
-    if (concepts.filter(col("id") === nodeId).isEmpty) return None
+    val known = index match {
+      case Some(ix) => ix.contains(nodeId)
+      case None => !concepts.filter(col("id") === nodeId).isEmpty
+    }
+    if (!known) return None
     val d = math.max(1, math.min(depth, 3))
     val seeds = Seq(nodeId).toDF("id")
     val sub = graft.graph.Bfs.exploreEdges(edges, seeds, maxDepth = d).localCheckpoint()

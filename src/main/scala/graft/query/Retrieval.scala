@@ -18,10 +18,13 @@ import org.apache.spark.sql.functions._
   *   4. score = 0.5·vec + 0.5·(ppr / max ppr), top-k
   *      (adapter.py:546-592; max-normalization at :559-562) [T2, A8]
   *
-  * All stages are DataFrame ops; the driver-side values are the query
-  * vector (broadcast via literal), scalar aggregates and — on a graph below
-  * the loop width (graft.graph.Ppr) — the PPR iteration itself over the
-  * collected ≤ fetch_k seeds and online edges.
+  * Here every stage is a DataFrame op; the driver-side values are the
+  * query vector (broadcast via literal), scalar aggregates and — on a
+  * graph below the loop width (graft.graph.Ppr) — the PPR iteration itself
+  * over the collected ≤ fetch_k seeds and online edges. `SnapshotIndex`
+  * runs the same steps with the same arithmetic on the driver; a
+  * `GraftService` over a snapshot below the loop width answers from it,
+  * and every other caller runs this path.
   */
 object Retrieval {
 

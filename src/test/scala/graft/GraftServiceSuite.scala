@@ -1,10 +1,18 @@
 package graft
 
+import graft.core.{Embeddings, Loops}
 import graft.fixtures.PagesGen
 import graft.pipeline.Ingest
-import graft.query.GraftService
+import graft.query.{GraftService, GraftServiceTestAccess, Retrieval}
 import graft.store.SnapshotStore
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end service facade over a freshly ingested warehouse: the
   * reference's query/feedback/explore/stats/project call pattern.
@@ -21,6 +29,38 @@ class GraftServiceSuite extends SparkFunSuite {
   }
   private lazy val svc = new GraftService(store)(spark)
 
+  /** A new warehouse holding a copy of the suite's concepts, edges and
+    * rules tables (no factors), for tests that commit their own tables.
+    */
+  private def warehouseCopy(prefix: String): SnapshotStore = {
+    val src = java.nio.file.Paths.get(store.root)
+    val dst = java.nio.file.Files.createTempDirectory(prefix)
+    for (table <- Seq("concepts", "edges", "rules")) {
+      val walk = java.nio.file.Files.walk(src.resolve(table))
+      try walk.iterator().asScala.foreach { p =>
+        val to = dst.resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
+        else java.nio.file.Files.copy(p, to)
+      } finally walk.close()
+    }
+    new SnapshotStore(dst.toString)
+  }
+
+  /** Rows with every double as its raw bits, for bit-for-bit comparison. */
+  private def bits(rows: Seq[Row]): Seq[Seq[Any]] = rows.map(_.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case x => x
+  })
+
+  /** What a client sees of one query: items, rules and coverage. */
+  private def answer(s: GraftService, ctx: String): (Seq[Seq[Any]], Seq[Seq[Any]], Double) = {
+    val r = s.query(ctx, topK = 10)
+    (bits(r.items.collect().toSeq), bits(r.rules.collect().toSeq), r.kgCoverage)
+  }
+
+  private val contexts = Seq("platform access control tokens", "session timeout and retry policy",
+    "search index latency", "billing invoices", "deployment pipeline configuration")
+
   test("query: ranked items + bundled rules + coverage, clamped top_k") {
     val r = svc.query("platform access control tokens", topK = 5)
     assert(r.queryId.startsWith("q") && r.queryId.contains("-"))
@@ -35,6 +75,113 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(svc.queryCount == 1)
     // domain filter: an unknown domain yields no items
     assert(svc.query("anything", domains = Seq("nope")).items.isEmpty)
+  }
+
+  test("query: the driver index answers as Retrieval.retrieveFull does (grid, bit for bit)") {
+    val st = warehouseCopy("graft-svc-equiv")
+    val s = new GraftService(st)
+    val ix = GraftServiceTestAccess.index(s).getOrElse(fail("no driver index below the loop width"))
+    val graph = GraftServiceTestAccess.pprGraph(s)
+    val concepts = st.read("concepts")
+    val edges = st.read("edges")
+    val rules = st.read("rules")
+    // a context whose seeds gain online similarity edges
+    val onlineCtx = PagesGen.allEntities
+      .find(c => !ix.retrieve(c, 10, Nil, 0.0, None).onlineEdges.isEmpty)
+      .getOrElse(fail("no context gains online edges"))
+
+    /** The service's filters around the DataFrame path, over the same graph. */
+    def reference(ctx: String, k: Int, minConf: Double, domains: Seq[String]) = {
+      val inDomains = substring_index(col("id"), ":", 1).isin(domains: _*)
+      val cs0 = if (domains.isEmpty) concepts else concepts.filter(inDomains)
+      val cs = if (minConf > 0.0) cs0.filter(col("confidence") >= minConf) else cs0
+      val factors =
+        if (st.exists("factors")) st.read("factors")
+        else Seq.empty[(String, Double)].toDF("node_id", "factor")
+      val out = Retrieval.retrieveFull(cs, edges, factors, ctx, k,
+        rules = Some(rules), prepared = Some(graph))
+      val items = if (domains.isEmpty) out.results else out.results.filter(inDomains)
+      (items.collect().toSeq, out.rules.collect().toSeq, out.kgCoverage, out.onlineEdges.count())
+    }
+
+    var withOnline = 0
+    var belowFullCoverage = 0
+    for (factorsOn <- Seq(false, true)) {
+      if (factorsOn) {
+        // clamped low and high, inside the range, null, and an unknown id
+        val ids = Seq("platform access control tokens", onlineCtx)
+          .flatMap(c => s.query(c, topK = 10).items.select("id").as[String].collect()).distinct
+        val factors = ids.zipWithIndex.map { case (id, i) =>
+          (id, Seq(Some(0.05), Some(7.0), Some(1.3), None)(i % 4))
+        } :+ ("web:No Such Concept" -> Some(2.0))
+        st.commitReplace("factors", factors.toDF("node_id", "factor"), Seq.empty)
+      }
+      for (ctx <- Seq("platform access control tokens", onlineCtx); k <- Seq(1, 10);
+           minConf <- Seq(0.0, 0.8); domains <- Seq(Nil, Seq("web"))) {
+        val where = s"context '$ctx', topK $k, minConfidence $minConf, domains $domains, factors $factorsOn"
+        val got = s.query(ctx, domains, k, minConf)
+        val (items, rs, coverage, nOnline) = reference(ctx, k, minConf, domains)
+        assert(bits(got.items.collect().toSeq) == bits(items), where)
+        val gotRules = got.rules.collect().toSeq
+        assert(bits(gotRules.map(r => Row(r.getDouble(3)))) == bits(rs.map(r => Row(r.getDouble(3)))), where)
+        assert(bits(gotRules).map(_.toString).sorted == bits(rs).map(_.toString).sorted, where)
+        assert(got.kgCoverage == coverage, where)
+        if (nOnline > 0) withOnline += 1
+        if (coverage < 1.0) belowFullCoverage += 1
+      }
+    }
+    assert(withOnline > 0 && belowFullCoverage > 0)
+  }
+
+  test("index: a duplicate concept id fails the query loudly, naming the id") {
+    val st = warehouseCopy("graft-svc-dup")
+    val ctx = "platform access control tokens"
+    // the concept least like the query is never a seed, so without the
+    // index's check its duplicate went unnoticed
+    val q = Embeddings.embed(ctx)
+    val concepts = st.read("concepts")
+    val dupId = concepts.select("id", "embedding").collect()
+      .minBy(r => Embeddings.cosine(q, r.getSeq[Float](1).toArray))(Ordering.Double.TotalOrdering)
+      .getString(0)
+    val dup = concepts.unionByName(concepts.filter(col("id") === dupId)).localCheckpoint()
+    st.commitReplace("concepts", dup, Seq.empty)
+    val e = intercept[IllegalArgumentException](new GraftService(st).query(ctx, topK = 10))
+    assert(e.getMessage.contains(dupId))
+  }
+
+  test("query caches no RDD: the persistent RDDs after 20 queries are those after 1") {
+    val sc = spark.sparkContext
+    def ask(i: Int): Unit = svc.query(contexts(i % contexts.size), topK = 5).items.collect()
+    ask(0)
+    val after1 = sc.getPersistentRDDs.keySet
+    (1 until 20).foreach(ask)
+    // compared by id: an RDD only weakly held may leave the map at a GC,
+    // but no query may add one
+    assert((sc.getPersistentRDDs.keySet -- after1).isEmpty)
+  }
+
+  test("query completes while another thread holds a Loops.withShuffleWidth scope") {
+    val serial = answer(svc, contexts.head)
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val holder = Future(Loops.withShuffleWidth(spark, 0L) {
+      entered.countDown(); release.await(120, TimeUnit.SECONDS)
+    })
+    try {
+      assert(entered.await(60, TimeUnit.SECONDS))
+      assert(Await.result(Future(answer(svc, contexts.head)), 60.seconds) == serial)
+    } finally release.countDown()
+    Await.result(holder, 60.seconds)
+  }
+
+  test("two threads × 10 queries on one service return the serial answers") {
+    val serial = contexts.map(c => c -> answer(svc, c)).toMap
+    val threads = (0 until 2).map(t => Future((0 until 10).map { i =>
+      val c = contexts((i + t) % contexts.size)
+      c -> answer(svc, c)
+    }))
+    for (f <- threads; (c, a) <- Await.result(f, 300.seconds))
+      assert(a == serial(c), s"context '$c'")
   }
 
   test("feedback: validates, updates + persists factors, optional credit") {
@@ -125,5 +272,25 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(derivs == Set("explicit", "derived"))
     assert(rs.filter(col("provenance.derivation") === "derived")
       .filter(col("provenance.template_id").isNull).count() == 0)
+  }
+
+  test("GraftService.queryWithSession composes KG retrieval with session chunks") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-svc-session").toString
+    val store = new SnapshotStore(wh)
+    graft.pipeline.Ingest.run(
+      graft.fixtures.PagesGen.pages(spark, 40), store,
+      graft.pipeline.Ingest.Config(),
+      knownPartitions = Some(graft.fixtures.PagesGen.dayStrings(4)))
+
+    val svc = new graft.query.GraftService(store)
+    svc.sessions.ingestMessage(
+      "Earlier we decided the session timeout is thirty minutes.",
+      "sess-9", nowMillis = 1L)
+    val out = svc.queryWithSession(
+      "platform access control tokens", "sess-9", topK = 5)
+    assert(out.kg.items.count() >= 1)
+    val sess = out.sessionItems.collect()
+    assert(sess.nonEmpty && sess.forall(_.getString(0).startsWith("sess-9:")))
+    assert(sess.exists(_.getString(2).contains("thirty minutes")))
   }
 }

@@ -144,6 +144,32 @@ class GraphSuite extends SparkFunSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == widthBefore)
   }
 
+  test("PPR driver kernel: ranks do not depend on the order of extras and seeds (bit for bit)") {
+    val edges = (0 until 30).map(i => (s"n$i", s"n${(i * 7 + 3) % 30}", 0.4 + (i % 5) * 0.1))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val g = Ppr.prepare(edges)
+    assert(g.isInstanceOf[Ppr.DriverGraph])
+    // sums that depend on the order of their terms ((0.1 + 0.2) + 0.3 !=
+    // (0.3 + 0.2) + 0.1): one source with three extras (its out-weight),
+    // one target fed by two new nodes (its inflow), and three seeds beyond
+    // the graph (the personalization total), plus an edgeless seed
+    val extras = Seq(("n1", "n2", 0.1), ("n1", "n9", 0.2), ("n1", "x1", 0.3),
+      ("x2", "n4", 0.7), ("x1", "x3", 0.25), ("n5", "x2", 0.9),
+      ("x1", "n7", 0.3), ("x2", "n7", 0.6))
+    val seeds = Seq(("x1", 0.1), ("x2", 0.2), ("x3", 0.3), ("z9", 0.05))
+    def ranks(ex: Seq[(String, String, Double)], sd: Seq[(String, Double)]): Map[String, Long] =
+      Ppr.runPrepared(g, ex.toDF("source_id", "target_id", "confidence"), sd.toDF("id", "weight"),
+        tol = 0.0, maxIter = 25)
+        .as[(String, Double)].collect()
+        .map { case (id, r) => id -> java.lang.Double.doubleToRawLongBits(r) }.toMap
+    val expected = ranks(extras, seeds)
+    assert(expected.keySet.contains("z9") && expected.keySet.contains("n7"))
+    val rng = new scala.util.Random(11)
+    for (_ <- 0 until 8)
+      assert(ranks(rng.shuffle(extras), rng.shuffle(seeds)) == expected)
+    assert(ranks(extras.map { case (a, b, w) => (b, a, w) }.reverse, seeds.reverse) == expected)
+  }
+
   test("PPR: uniform personalization fallback when seeds are empty (memory.py:304-315)") {
     val edges = Seq(("a", "b", 1.0), ("b", "c", 1.0)).toDF("source_id", "target_id", "confidence")
     val seeds = Seq.empty[(String, Double)].toDF("id", "weight")

@@ -138,6 +138,37 @@ class OpsSuite extends SparkFunSuite {
     assert(math.abs(df(2) + 1.0) < 1e-12)
   }
 
+  test("cosine: cosineUdf and the driver kernel agree bit for bit (random 384-d, guards)") {
+    val rng = new scala.util.Random(384)
+    def vec(n: Int): Seq[Float] = Seq.fill(n)((rng.nextGaussian() * 0.3).toFloat)
+    val zeros = Seq.fill(384)(0f)
+    val pairs: Seq[(Option[Seq[Float]], Option[Seq[Float]])] =
+      Seq.fill(40)((Some(vec(384)), Some(vec(384)))) ++ Seq(
+        (None, Some(vec(384))), // null
+        (Some(vec(384)), None),
+        (None, None),
+        (Some(Seq.empty[Float]), Some(Seq.empty[Float])), // empty
+        (Some(vec(3)), Some(vec(4))), // mismatched length
+        (Some(zeros), Some(vec(384))), // zero norm
+        (Some(vec(384)), Some(zeros)))
+    val udfScores = pairs.toDF("a", "b")
+      .select(Similarity.cosineUdf($"a", $"b")).as[Double].collect()
+    // the driver side reads each vector as a slice of one flat array
+    val flat = pairs.flatMap { case (a, b) => a.getOrElse(Nil) ++ b.getOrElse(Nil) }.toArray
+    var at = 0
+    val kernelScores = pairs.map { case (a, b) =>
+      val (la, lb) = (a.fold(0)(_.length), b.fold(0)(_.length))
+      val s = Similarity.cosine(if (a.isEmpty) null else flat, at, la,
+        if (b.isEmpty) null else flat, at + la, lb)
+      at += la + lb
+      s
+    }
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(udfScores.toSeq) == bits(kernelScores))
+    assert(udfScores.takeRight(7).forall(_ == 0.0))
+    assert(udfScores.take(40).forall(s => s != 0.0 && math.abs(s) < 1.0))
+  }
+
   test("brute-force top-k returns k neighbors ranked by cosine") {
     val vecs = Seq(
       (0L, Seq(1f, 0f, 0f)), (1L, Seq(0.9f, 0.1f, 0f)),

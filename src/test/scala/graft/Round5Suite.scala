@@ -315,26 +315,6 @@ class Round5Suite extends SparkFunSuite {
     assert(si.index.count() == 0)
   }
 
-  test("GraftService.queryWithSession composes KG retrieval with session chunks") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-svc-session").toString
-    val store = new SnapshotStore(wh)
-    graft.pipeline.Ingest.run(
-      graft.fixtures.PagesGen.pages(spark, 40), store,
-      graft.pipeline.Ingest.Config(),
-      knownPartitions = Some(graft.fixtures.PagesGen.dayStrings(4)))
-
-    val svc = new graft.query.GraftService(store)
-    svc.sessions.ingestMessage(
-      "Earlier we decided the session timeout is thirty minutes.",
-      "sess-9", nowMillis = 1L)
-    val out = svc.queryWithSession(
-      "platform access control tokens", "sess-9", topK = 5)
-    assert(out.kg.items.count() >= 1)
-    val sess = out.sessionItems.collect()
-    assert(sess.nonEmpty && sess.forall(_.getString(0).startsWith("sess-9:")))
-    assert(sess.exists(_.getString(2).contains("thirty minutes")))
-  }
-
   // ---- C4 / Gopher web-corpus gates --------------------------------------
 
   test("c4LineClean keeps terminal-punctuation lines and gates the page") {
