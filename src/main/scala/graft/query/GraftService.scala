@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * The committed tables are read once per service instance and
   * plan-truncated (`localCheckpoint`) — the "query service checkpoints
   * its graph across queries" shape. A snapshot below the loop width (see
-  * `index`) is also held on the driver, and each query runs there without
-  * planning a DataFrame; a larger one plans every query against those
+  * `index`) is also held on the driver: each query and each explore runs
+  * there without planning a DataFrame, caching an RDD or taking the
+  * `Loops` lock. A larger one plans every query and explore against those
   * checkpointed leaves.
   */
 final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
@@ -44,9 +45,10 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     * built once per instance next to `pprGraph`. It exists exactly when
     * `pprGraph` is a driver graph and the concepts have fewer than
     * `Loops.RowsPerPartition` rows (the same size rule); then `query`
-    * answers from it with one small collect of the factors, caches no RDD
-    * and takes no `Loops` lock. Larger snapshots keep
-    * `Retrieval.retrieveFull`. A duplicate concept id fails the build.
+    * answers from it with one small collect of the factors and `explore`
+    * with no Spark job; neither caches an RDD or takes the `Loops` lock.
+    * Larger snapshots keep `Retrieval.retrieveFull` and `Bfs.exploreEdges`.
+    * A duplicate concept id fails the build.
     */
   private[query] lazy val index: Option[SnapshotIndex] = pprGraph match {
     case g: graft.graph.Ppr.DriverGraph => SnapshotIndex.build(store.read("concepts"), rules, g)
@@ -168,27 +170,43 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
       neighbors: DataFrame, // (id, name) of reached concepts
       rules: DataFrame) // rules linked to any reached concept
 
-  /** service.py:827-914 — BFS neighborhood to depth ≤ 3 from one node,
-    * returning the reachable edges, the neighbor concepts, and the rules
-    * linked to anything visited. None if the node doesn't exist.
+  /** service.py:827-914 — BFS neighborhood to depth d (clamped to [1, 3])
+    * from one concept, returning the edge rows with an endpoint within
+    * d − 1 hops, the concepts within d hops (the node included) and the
+    * rules listing any id within d hops. None if the node is not a concept.
+    *
+    * With the `index`, the BFS runs on the driver over the held graph:
+    * neighbours and rules come back as local rows, and the edges are a
+    * lazy filter of the committed edges checkpoint on the inner ids, so
+    * the call runs no Spark job, caches no RDD and takes no `Loops` lock.
+    * Larger snapshots run `Bfs.exploreEdges` as DataFrame joins.
     */
   def explore(nodeId: String, depth: Int = 1): Option[ExploreResult] = {
-    val known = index match {
-      case Some(ix) => ix.contains(nodeId)
-      case None => !concepts.filter(col("id") === nodeId).isEmpty
-    }
-    if (!known) return None
     val d = math.max(1, math.min(depth, 3))
-    val seeds = Seq(nodeId).toDF("id")
-    val sub = graft.graph.Bfs.exploreEdges(edges, seeds, maxDepth = d).localCheckpoint()
-    val reached = sub.select(col("source_id").as("id"))
-      .unionByName(sub.select(col("target_id").as("id")))
-      .unionByName(seeds)
-      .distinct()
-    val neighbors = reached.join(concepts.select(col("id"), col("name")), Seq("id"))
-    val linked = graft.rules.Rules.rulesForConcepts(
-      rules, reached.withColumn("score", lit(1.0)))
-    Some(ExploreResult(sub, neighbors, linked))
+    index match {
+      case Some(ix) =>
+        ix.explore(nodeId, d).map { n =>
+          val inner = n.inner.toIndexedSeq
+          ExploreResult(
+            edges.filter(col("source_id").isin(inner: _*) || col("target_id").isin(inner: _*)),
+            n.neighbors, n.rules)
+        }
+      case None =>
+        if (concepts.filter(col("id") === nodeId).isEmpty) None
+        else {
+          val seeds = Seq(nodeId).toDF("id")
+          // already a checkpointed leaf: every depth checkpoints it
+          val sub = graft.graph.Bfs.exploreEdges(edges, seeds, maxDepth = d)
+          val reached = sub.select(col("source_id").as("id"))
+            .unionByName(sub.select(col("target_id").as("id")))
+            .unionByName(seeds)
+            .distinct()
+          val neighbors = reached.join(concepts.select(col("id"), col("name")), Seq("id"))
+          val linked = graft.rules.Rules.rulesForConcepts(
+            rules, reached.withColumn("score", lit(1.0)))
+          Some(ExploreResult(sub, neighbors, linked))
+        }
+    }
   }
 
   /** Session-scoped online retrieval (service.py:724-785 + the gateway

@@ -15,9 +15,10 @@ object Service {
   /** service.py:461 — the only outcome values feedback accepts. */
   val AllowedOutcomes: Set[String] = Set("accepted", "rejected", "partial")
 
-  /** Hard cap on the [[propagateCredit]] outcomes collect. Outcomes are
-    * per-query-sized (one row per judged result item), so anything near
-    * this bound is a caller bug — fail loudly rather than OOM the driver.
+  /** Hard cap on the [[feedback]] and [[propagateCredit]] outcomes
+    * collects. Outcomes are per-query-sized (one row per judged result
+    * item), so anything near this bound is a caller bug — fail loudly
+    * rather than OOM the driver.
     */
   val MaxOutcomesCollect = 100000
 
@@ -31,7 +32,7 @@ object Service {
       df: DataFrame, max: Int = MaxOutcomesCollect): Seq[org.apache.spark.sql.Row] = {
     val probe = df.limit(max + 1).collect()
     require(probe.length <= max,
-      s"propagateCredit outcomes frame exceeds the driver cap ($max rows) — " +
+      s"feedback outcomes frame exceeds the driver cap ($max rows) — " +
         "outcomes are per-query result items; for stream-scale credit use " +
         "CreditAssigner.creditStream")
     probe.toSeq
@@ -65,7 +66,8 @@ object Service {
 
   /** One-call feedback orchestration, mirroring the reference's flow:
     * validate every outcome (an invalid one rejects the whole batch with
-    * the reference's error text, service.py:470-475), apply the
+    * the reference's error text, service.py:470-475; the outcomes are
+    * collected once, capped at [[MaxOutcomesCollect]] rows), apply the
     * teleportation-factor deltas (A4, clamped), optionally commit the
     * updated factors as a snapshot (persist_on_update,
     * interoception.py:284-293 / St4), and return the outcome tallies the
@@ -94,21 +96,18 @@ object Service {
         */
       creditConcepts: Option[DataFrame] = None
   ): Either[String, FeedbackResult] = {
-    // isNull guard: !isin(...) is SQL-NULL (not true) for a null outcome,
-    // which would silently pass validation instead of rejecting the batch
-    val invalid = outcomes
-      .filter(col("outcome").isNull || !col("outcome").isin(AllowedOutcomes.toSeq: _*))
-      .select(col("node_id"), col("outcome"))
-      .limit(1).collect()
+    // one bounded collect answers both the validation and the tallies;
+    // the first invalid row in collect order is the one named
+    val rows = collectOutcomesBounded(outcomes.select(col("node_id"), col("outcome")))
+    val invalid = rows.find(r => r.isNullAt(1) || !AllowedOutcomes.contains(r.getString(1)))
     if (invalid.nonEmpty) {
-      val r = invalid.head
+      val r = invalid.get
       val bad = if (r.isNullAt(1)) "null" else r.getString(1)
       Left(s"Invalid outcome '$bad' for item '${r.getString(0)}'. " +
         s"Must be one of: ${AllowedOutcomes.toSeq.sorted.mkString(", ")}")
     } else {
       val updated = EdgePromotion.updateFactors(factors, outcomes).localCheckpoint()
-      val tallies = outcomes.groupBy(col("outcome")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val tallies = rows.groupBy(_.getString(1)).map { case (o, rs) => o -> rs.size.toLong }
       persistTo.foreach { case (store, table) =>
         store.commitReplace(table, updated, Seq.empty)
       }

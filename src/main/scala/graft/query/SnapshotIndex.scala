@@ -13,7 +13,8 @@ import scala.collection.mutable
 
 /** One committed snapshot's retrieval inputs held on the driver, and the
   * retrieval of `Retrieval.retrieveFull` computed from them without a
-  * Spark job (apart from one small collect of the teleportation factors).
+  * Spark job (apart from one small collect of the teleportation factors),
+  * as is the neighbourhood `GraftService.explore` returns.
   *
   * A query service over a small snapshot pays per-job scheduling and
   * planning cost, not data work: every stage of the DataFrame retrieval
@@ -26,7 +27,7 @@ import scala.collection.mutable
   *   - concept ids, names and confidences, and the embeddings back to back
   *     in one `Float` array;
   *   - the PPR graph, whose `ends` give the edge rows' endpoints as dense
-  *     ids for the KG-coverage count;
+  *     ids for the KG-coverage count and the BFS of `explore`;
   *   - rule postings: concept id → the (id, text, category) of each rule
   *     row that lists it.
   *
@@ -164,9 +165,57 @@ final class SnapshotIndex private (
       local(online, "id_a" -> StringType, "id_b" -> StringType, "cosine" -> DoubleType),
       kgCoverage)
   }
+
+  /** `GraftService.explore(nodeId, depth)` for `depth` ≥ 1 on the driver:
+    * None when `nodeId` is not a concept. Breadth-first search runs over
+    * every edge row (`graph.ends`, null-confidence rows included, as
+    * `Bfs.exploreEdges` joins them) in both directions and never expands
+    * through a null endpoint. With V<d and V≤d the ids at distance below
+    * and up to `depth`:
+    *   - `inner` is V<d, whose edge rows are the edges `Bfs.exploreEdges`
+    *     returns;
+    *   - `neighbors` (id, name) is V≤d ∪ {nodeId} kept where the id is a
+    *     concept, in id order;
+    *   - `rules` (id, text, category, relevance = 1.0) are the distinct
+    *     rule rows listing an id of V≤d ∪ {nodeId}, in `retrieve`'s order.
+    */
+  def explore(nodeId: String, depth: Int)(implicit spark: SparkSession): Option[Neighbourhood] = {
+    if (!contains(nodeId)) return None
+    val ends = graph.ends
+    val dist = Array.fill(graph.ids.length)(-1)
+    graph.index.get(nodeId).foreach(dist(_) = 0)
+    // level by level: one pass over the edge rows per depth
+    for (level <- 0 until depth; e <- ends.indices by 2) {
+      val (a, b) = (ends(e), ends(e + 1))
+      if (dist(a) == level && dist(b) < 0 && graph.ids(b) != null) dist(b) = level + 1
+      if (dist(b) == level && dist(a) < 0 && graph.ids(a) != null) dist(a) = level + 1
+    }
+    def within(d: Int): Array[String] =
+      (nodeId +: dist.indices.filter(n => dist(n) >= 0 && dist(n) <= d)
+        .map(n => graph.ids(n).asInstanceOf[String])).distinct.toArray
+    val reached = within(depth)
+
+    val neighbors = reached.filter(position.contains).sorted(Asc)
+      .map(id => Row(id, names(position(id))))
+    // a rule row listing the same id twice, or two reached ids, counts once
+    val linked = reached.flatMap(id => postings.getOrElse(id, Array.empty[Int]))
+      .map(rules).distinct
+      .sorted(Ordering.Tuple3(Asc, Asc, Asc))
+      .map { case (id, text, category) => Row(id, text, category, 1.0) }
+    Some(Neighbourhood(
+      within(depth - 1),
+      local(neighbors, "id" -> StringType, "name" -> StringType),
+      local(linked, "id" -> StringType, "text" -> StringType, "category" -> StringType,
+        "relevance" -> DoubleType)))
+  }
 }
 
 object SnapshotIndex {
+
+  /** One `explore` answer: the ids whose edge rows make the subgraph, and
+    * the neighbour and rule frames (local rows).
+    */
+  final case class Neighbourhood(inner: Array[String], neighbors: DataFrame, rules: DataFrame)
 
   /** The index of `concepts` (id, name, confidence, embedding) and `rules`
     * (id, text, category, concept_ids) over `graph`, the snapshot's

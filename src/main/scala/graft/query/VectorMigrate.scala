@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * logger.info event names).
   *
   * Validation (the reference's per-batch shape checks, made global):
-  *  - every outgoing embedding shares ONE dimension (and matches
-  *    `expectDim` when given) — checked with a `limit(2)` distinct probe,
-  *    not a full aggregate;
+  *  - source ids are unique and non-null;
+  *  - no outgoing embedding is null, and all share ONE dimension (and
+  *    match `expectDim` when given);
   *  - the transform preserves the id count (a re-embed must not drop or
   *    duplicate vectors);
   *  - post-write, every migrated id resolves in the destination
@@ -41,20 +41,33 @@ object VectorMigrate {
         */
       transform: DataFrame => DataFrame = identity,
       expectDim: Option[Int] = None,
-      dryRun: Boolean = false): MigrateResult = {
+      dryRun: Boolean = false): MigrateResult =
+    migrateRows(source.read(), destination, transform, expectDim, dryRun)
+
+  /** `migrate` over a source's resolved (id, embedding) rows. */
+  private[graft] def migrateRows(
+      source: DataFrame,
+      destination: VectorIndex,
+      transform: DataFrame => DataFrame,
+      expectDim: Option[Int],
+      dryRun: Boolean): MigrateResult = {
     graft.observe.Observe.emit("vec.migrate.start",
       "dry_run" -> dryRun, "expect_dim" -> expectDim.getOrElse(-1))
     // resolve the merge-on-read log ONCE; both the count and the write
     // read this materialized frame
-    val resolved = source.read().localCheckpoint()
-    val vectorsRead = resolved.count()
+    val resolved = source.localCheckpoint()
+    val read = resolved.agg(count(lit(1)), countDistinct("id")).collect().head
+    val vectorsRead = read.getLong(0)
+    // unique source ids keep the left join below from inflating `n`
+    require(read.getLong(1) == vectorsRead,
+      s"vec.migrate: the source holds duplicate or null ids " +
+        s"($vectorsRead rows, ${read.getLong(1)} distinct ids)")
     val out = transform(resolved).localCheckpoint()
 
     // ONE aggregation job over the checkpointed frame answers every
-    // validation probe: row count, the dimension range (min==max ⇔ one
-    // shared dimension — replaces the separate limit(2)-distinct scan),
-    // distinct-id count, and the re-key count. The checks below fire in
-    // the same order as before, so failure modes are unchanged.
+    // validation probe: row count, null embeddings, the dimension range
+    // (min==max ⇔ one shared dimension — replaces the separate
+    // limit(2)-distinct scan), distinct-id count, and the re-key count.
     val stats = out
       .join(resolved.select(col("id"), lit(1).as("__src")), Seq("id"), "left")
       .agg(count(lit(1)).as("n"),
@@ -63,8 +76,13 @@ object VectorMigrate {
         countDistinct("id").as("d"),
         // coalesce: sum over an EMPTY out frame is null, not 0
         coalesce(sum(when(col("__src").isNull, 1L).otherwise(0L)), lit(0L))
-          .as("rk"))
+          .as("rk"),
+        coalesce(sum(when(col("embedding").isNull, 1L).otherwise(0L)), lit(0L))
+          .as("nulls"))
       .collect().head
+    // size(NULL) is NULL, so min/max skip null embeddings: count them apart
+    require(stats.getLong(5) == 0,
+      s"vec.migrate: ${stats.getLong(5)} vector(s) have a null embedding")
     val (dmin, dmax) =
       (if (stats.isNullAt(1)) 0 else stats.getInt(1),
         if (stats.isNullAt(2)) 0 else stats.getInt(2))

@@ -253,6 +253,133 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(ruleIds == linked)
   }
 
+  /** What a client sees of one explore: the edge rows as a multiset, the
+    * neighbours as a set and the rules in order.
+    */
+  private def exploreAnswer(s: GraftService, node: String, depth: Int)
+      : (Seq[String], Set[Row], Seq[Row]) = {
+    val ex = s.explore(node, depth).getOrElse(fail(s"explore '$node' returned None"))
+    (ex.edges.collect().map(_.toString).toSeq.sorted, ex.neighbors.collect().toSet,
+      ex.rules.collect().toSeq)
+  }
+
+  /** The concepts of `st` that are edge endpoints, by degree (highest
+    * first, then id).
+    */
+  private def conceptsByDegree(st: SnapshotStore): Array[String] =
+    st.read("edges").select(explode(array(col("source_id"), col("target_id"))).as("id"))
+      .join(st.read("concepts").select("id"), Seq("id"))
+      .groupBy("id").count().orderBy(col("count").desc, col("id"))
+      .select("id").as[String].collect()
+
+  private lazy val exploreNodes: Seq[String] = conceptsByDegree(store).take(6).toSeq
+
+  test("explore: the driver index answers as Bfs.exploreEdges does (grid)") {
+    val st = warehouseCopy("graft-svc-explore")
+    val concepts0 = st.read("concepts")
+    val edges0 = st.read("edges")
+    val rules0 = st.read("rules")
+    val byDegree = conceptsByDegree(st)
+    val hub = byDegree.head
+    val leaf = byDegree.last // the concept the extra edges hang off
+    val (isolated, far, ghost) = ("web:Isolated Probe", "web:Far Probe", "web:Ghost Probe")
+    // two new concepts: one with no edge, one reached only through a
+    // null-confidence edge and a node that is not a concept
+    def conceptLike(id: String) = concepts0.filter(col("id") === hub)
+      .withColumn("id", lit(id)).withColumn("name", lit(id.stripPrefix("web:")))
+    st.commitReplace("concepts",
+      concepts0.unionByName(conceptLike(isolated)).unionByName(conceptLike(far)).localCheckpoint(),
+      Seq.empty)
+    def edgeLike(src: String, dst: String, confidence: Option[Double]) = {
+      val t = edges0.schema("confidence").dataType
+      edges0.limit(1)
+        .withColumn("source_id", lit(src).cast("string"))
+        .withColumn("target_id", lit(dst).cast("string"))
+        .withColumn("confidence", confidence.fold(lit(null))(lit).cast(t))
+    }
+    st.commitReplace("edges",
+      edges0.unionByName(edgeLike(leaf, ghost, None)).unionByName(edgeLike(ghost, far, Some(0.5)))
+        .unionByName(edgeLike(leaf, null, Some(0.4))).localCheckpoint(),
+      Seq.empty)
+    def ruleLike(id: String, cids: Seq[String]) = rules0.limit(1)
+      .withColumn("id", lit(id)).withColumn("concept_ids", typedLit(cids))
+    st.commitReplace("rules",
+      rules0.unionByName(ruleLike("rule:twice", Seq(isolated, isolated)))
+        .unionByName(ruleLike("rule:ghost", Seq(ghost))).localCheckpoint(),
+      Seq.empty)
+
+    val s = new GraftService(st)
+    assert(GraftServiceTestAccess.index(s).isDefined, "no driver index below the loop width")
+    val concepts = st.read("concepts")
+    val edges = st.read("edges")
+    val rules = st.read("rules")
+    val reference = scala.collection.mutable.Map.empty[(String, Int), (Seq[String], Set[Row], Seq[Row])]
+    def expected(node: String, d: Int) = reference.getOrElseUpdate((node, d), {
+      val seeds = Seq(node).toDF("id")
+      val sub = graft.graph.Bfs.exploreEdges(edges, seeds, maxDepth = d)
+      val reached = sub.select(col("source_id").as("id"))
+        .unionByName(sub.select(col("target_id").as("id"))).unionByName(seeds).distinct()
+      (sub.collect().map(_.toString).toSeq.sorted,
+        reached.join(concepts.select("id", "name"), Seq("id")).collect().toSet,
+        graft.rules.Rules.rulesForConcepts(rules, reached.withColumn("score", lit(1.0)))
+          .collect().toSeq)
+    })
+    val ruleOrder: Ordering[Row] = Ordering.by((r: Row) => (r.getString(0), r.getString(1), r.getString(2)))
+    var reachedFar, ruledTwice, ruledGhost = false
+    for (node <- Seq(hub, leaf, isolated); depth <- Seq(0, 1, 2, 3, 5)) {
+      val where = s"explore '$node' at depth $depth"
+      val (gotEdges, gotNeighbors, gotRules) = exploreAnswer(s, node, depth)
+      val (wantEdges, wantNeighbors, wantRules) = expected(node, math.max(1, math.min(depth, 3)))
+      assert(gotEdges == wantEdges, where)
+      assert(gotNeighbors == wantNeighbors, where)
+      // the reference orders by relevance, then id; the driver path also
+      // orders rows of one id, by text and category
+      assert(gotRules.map(r => (r.getString(0), r.getDouble(3))) ==
+        wantRules.map(r => (r.getString(0), r.getDouble(3))), where)
+      assert(gotRules == wantRules.sorted(ruleOrder), where)
+      reachedFar ||= gotNeighbors.exists(_.getString(0) == far)
+      ruledTwice ||= gotRules.exists(_.getString(0) == "rule:twice")
+      ruledGhost ||= gotRules.exists(_.getString(0) == "rule:ghost")
+    }
+    assert(reachedFar && ruledTwice && ruledGhost)
+    assert(exploreAnswer(s, isolated, 3)._1.isEmpty)
+    assert(s.explore(ghost).isEmpty) // an edge endpoint, not a concept
+  }
+
+  test("explore caches no RDD: the persistent RDDs after 20 explores are those after 1") {
+    val sc = spark.sparkContext
+    def look(i: Int): Unit = exploreAnswer(svc, exploreNodes(i % exploreNodes.size), 1 + i % 3)
+    look(0)
+    val after1 = sc.getPersistentRDDs.keySet
+    (1 until 20).foreach(look)
+    assert((sc.getPersistentRDDs.keySet -- after1).isEmpty)
+  }
+
+  test("explore completes while another thread holds a Loops.withShuffleWidth scope") {
+    val serial = exploreAnswer(svc, exploreNodes.head, 2)
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val holder = Future(Loops.withShuffleWidth(spark, 0L) {
+      entered.countDown(); release.await(120, TimeUnit.SECONDS)
+    })
+    try {
+      assert(entered.await(60, TimeUnit.SECONDS))
+      assert(Await.result(Future(exploreAnswer(svc, exploreNodes.head, 2)), 60.seconds) == serial)
+    } finally release.countDown()
+    Await.result(holder, 60.seconds)
+  }
+
+  test("two threads × 10 explores on one service return the serial answers") {
+    val asks = exploreNodes.flatMap(n => Seq(n -> 1, n -> 2))
+    val serial = asks.map { case (n, d) => (n, d) -> exploreAnswer(svc, n, d) }.toMap
+    val threads = (0 until 2).map(t => Future((0 until 10).map { i =>
+      val (n, d) = asks((i + 3 * t) % asks.size)
+      (n, d) -> exploreAnswer(svc, n, d)
+    }))
+    for (f <- threads; (ask, a) <- Await.result(f, 300.seconds))
+      assert(a == serial(ask), s"explore $ask")
+  }
+
   test("knowledgeStats matches the committed tables") {
     val row = svc.knowledgeStats().filter(col("domain") === "web").collect().head
     assert(row.getAs[Long]("concepts") == store.read("concepts").count())

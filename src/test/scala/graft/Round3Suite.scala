@@ -85,6 +85,20 @@ class Round3Suite extends SparkFunSuite {
     assert(res2.isLeft && res2.left.toOption.get.startsWith("Invalid outcome 'null'"))
   }
 
+  test("Service.feedback: the first invalid row is named; tallies count every valid row") {
+    val factors = Seq(("a", 1.0)).toDF("node_id", "factor")
+    val twoBad = Seq(("a", "accepted"), ("b", "maybe"), ("c", null), ("d", "nope"))
+      .toDF("node_id", "outcome")
+    assert(graft.query.Service.feedback(factors, twoBad, "q-4").left.toOption.contains(
+      "Invalid outcome 'maybe' for item 'b'. Must be one of: accepted, partial, rejected"))
+    val nullFirst = Seq(("c", null), ("b", "maybe")).toDF("node_id", "outcome")
+    assert(graft.query.Service.feedback(factors, nullFirst, "q-4b").left.toOption.contains(
+      "Invalid outcome 'null' for item 'c'. Must be one of: accepted, partial, rejected"))
+    val ok = Seq(("a", "partial"), ("b", "partial"), ("c", "rejected")).toDF("node_id", "outcome")
+    val fb = graft.query.Service.feedback(factors, ok, "q-4c").fold(e => fail(e), identity)
+    assert((fb.outcomeCount, fb.accepted, fb.rejected, fb.partial) == ((3L, 0L, 1L, 2L)))
+  }
+
   test("Service.feedback: factor deltas, tallies, and snapshot persistence") {
     val factors = Seq(("a", 1.0), ("b", 1.0), ("c", 4.99)).toDF("node_id", "factor")
     val outcomes = Seq(("a", "accepted"), ("a", "accepted"), ("b", "rejected"),

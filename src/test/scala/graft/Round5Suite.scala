@@ -472,6 +472,33 @@ class Round5Suite extends SparkFunSuite {
     assert(dst.count() == 0) // nothing written by either failed migration
   }
 
+  test("VectorMigrate rejects a null embedding before writing anything") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-null").toString
+    val store = new SnapshotStore(wh)
+    val src = new VectorIndex(store, "vi_src3")
+    val dst = new VectorIndex(store, "vi_dst3")
+    src.upsert(Seq(("a", Some(vecOf(1))), ("b", None), ("c", Some(vecOf(3))))
+      .toDF("id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>")))
+    val ex = intercept[IllegalArgumentException](VectorMigrate.migrate(src, dst, expectDim = Some(4)))
+    assert(ex.getMessage.contains("1 vector(s) have a null embedding"))
+    assert(dst.count() == 0)
+  }
+
+  test("VectorMigrate rejects a source listing an id twice, naming it as such") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-dupsrc").toString
+    val dst = new VectorIndex(new SnapshotStore(wh), "vi_dst4")
+    val rows = Seq(("a", vecOf(1)), ("a", vecOf(2)), ("b", vecOf(3)))
+      .toDF("id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    // a count taken after the join with the source read 5 rows here and
+    // blamed the transform for changing the vector count
+    val ex = intercept[IllegalArgumentException](
+      VectorMigrate.migrateRows(rows, dst, identity, None, dryRun = false))
+    assert(ex.getMessage.contains("duplicate or null ids (3 rows, 2 distinct ids)"))
+    assert(dst.count() == 0)
+  }
+
   test("session messages sharing a 64-char prefix keep distinct vectors") {
     val wh = java.nio.file.Files.createTempDirectory("graft-sess-prefix").toString
     val si = new SessionIndex(new SnapshotStore(wh))
