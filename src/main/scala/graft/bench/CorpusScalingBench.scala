@@ -5,10 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N-vs-4N scaling evidence for the TRAINING-DATA operator family (the
-  * corpus-side sibling of [[ScalingBench]], same protocol): the same
-  * dedup-cluster + decontaminate + split + pack pipeline over an
+  * corpus-side sibling of [[ScalingBench]], run by its `nVs4n` protocol):
+  * the same dedup-cluster + decontaminate + split + pack pipeline over an
   * identical deterministic document corpus at local[N] and local[4N],
   * outputs checksum-verified identical across parallelism.
+  *
+  *   CorpusScalingBench [docs=100000] [n=2]
   *
   * The corpus carries real duplicate structure: every document whose
   * `id % 37 < 3` shares its family's text verbatim (families of ~3
@@ -18,20 +20,6 @@ import org.apache.spark.sql.functions._
   * efficiency = (T_N / T_4N) / 4; target ≥ 0.8 (north rule).
   */
 object CorpusScalingBench {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-corpus-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Deterministic corpus: ~60-word documents over a closed vocabulary,
     * text a pure function of the family id so duplicate families are
@@ -64,17 +52,16 @@ object CorpusScalingBench {
   /** One full corpus-ops pass; returns (wall, rowChecksum) — the checksum
     * pins output identity across parallelism.
     */
-  private def runOps(cpus: Int, nDocs: Long): (Double, Long) = {
-    implicit val spark: SparkSession = session(cpus)
+  private def runOps(spark: SparkSession, nDocs: Long): (Double, Long) = {
+    implicit val s: SparkSession = spark
     val docs = corpus(spark, nDocs).localCheckpoint()
     val bench = corpus(spark, nDocs).filter(col("doc_id") % 101 === 0)
       .withColumn("doc_id", col("doc_id") + 10000000L).localCheckpoint()
     // incremental-dedup leg: first 80 % committed as batch b0, the rest
     // arrives as batch b1 and is annotated against b0's signature index —
     // the daily-crawl shape the operator exists for, timed at both widths
-    val storeDir = java.nio.file.Files
-      .createTempDirectory(s"graft-corpus-bench-$cpus-").toString
-    val store = new graft.store.SnapshotStore(storeDir)
+    val storeDir = java.nio.file.Files.createTempDirectory("graft-corpus-bench-")
+    val store = new graft.store.SnapshotStore(storeDir.toString)
     val cut = nDocs * 8 / 10
     val t0 = System.nanoTime()
     val clusters = Dedup.dedupClusters(docs)
@@ -93,27 +80,14 @@ object CorpusScalingBench {
     val checksum = sig(clusters) + sig(contam) + sig(splits) + sig(shards) +
       sig(inc0.drop("est_jaccard")) + sig(inc1.drop("est_jaccard"))
     val wall = (System.nanoTime() - t0) / 1e9
-    spark.stop()
+    graft.Bench.deleteRecursively(storeDir)
     (wall, checksum)
   }
 
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 100000L
     val n = if (args.length > 1) args(1).toInt else 2
-    val n4 = n * 4
-
-    val _ = runOps(n4, math.max(2000L, nDocs / 10)) // JIT/codegen warmup
-    val (tN, sumN) = runOps(n, nDocs)
-    val (t4, sum4) = runOps(n4, nDocs)
-    require(sumN == sum4,
-      s"nondeterministic corpus-op outputs across parallelism: $sumN vs $sum4")
-
-    val efficiency = (tN / t4) / 4.0
-    println(
-      f"""{"docs":$nDocs,"n":$n,"n4":$n4,"wall_sec_n":$tN%.2f,""" +
-        f""""wall_sec_4n":$t4%.2f,"docs_per_sec_n":${nDocs / tN}%.1f,""" +
-        f""""docs_per_sec_4n":${nDocs / t4}%.1f,""" +
-        f""""output_checksum":$sumN,"scaling_efficiency":$efficiency%.3f,""" +
-        s""""cpu_probe":${CpuScaling.probeJson()}}""")
+    val (checksum, fields) = ScalingBench.nVs4n(nDocs, n)(runOps)(_ => Seq("docs" -> nDocs))
+    println(s"""{"docs":$nDocs,"output_checksum":$checksum,$fields}""")
   }
 }

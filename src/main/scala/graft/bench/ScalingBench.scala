@@ -1,5 +1,6 @@
 package graft.bench
 
+import graft.core.LocalSpark
 import graft.fixtures.PagesGen
 import graft.pipeline.Ingest
 import graft.store.SnapshotStore
@@ -9,44 +10,58 @@ import org.apache.spark.sql.SparkSession
   * on identical generated input at local[N] and local[4N] in one JVM
   * (cluster proxy — no real cluster in this sandbox; BASELINE.md §target).
   *
-  * Default N=2 (local[2] vs local[8]): a pure-compute probe
-  * (graft.bench.CpuScaling) shows this VM's 32 threads deliver only ~2.5×
-  * the throughput of 8 threads even for Spark-free, allocation-light JVM
-  * work — a machine memory-bandwidth/virtualization ceiling that caps ANY
-  * 8→32 efficiency at ~0.62. SURVEY.md §7.7 anticipated exactly this
-  * ("memory-bandwidth ceilings masquerade as poor scaling"); N=2 vs 4N=8
-  * measures the pipeline, not the box. The 8→32 pair is still reported in
-  * BENCH/BASELINE.md as disclosure.
+  *   ScalingBench [pages=40000] [n=2]
   *
-  * Protocol: a warmup ingest first (JIT + codegen warm for BOTH measured
-  * runs — the shared JVM would otherwise favor whichever runs second),
-  * then measure local[N], then local[4N], each on a fresh warehouse over
-  * the same deterministic pages (seed 42).
+  * Default N=2 (local[2] vs local[8]): a pure-compute probe
+  * (graft.bench.CpuScaling) shows the 32-thread host of BENCH/BASELINE.md
+  * delivers only ~2.5× the throughput of 8 threads even for Spark-free,
+  * allocation-light JVM work — a machine memory-bandwidth/virtualization
+  * ceiling that caps ANY 8→32 efficiency at ~0.62. SURVEY.md §7.7
+  * anticipated exactly this ("memory-bandwidth ceilings masquerade as poor
+  * scaling"); N=2 vs 4N=8 measures the pipeline, not the box.
   *
   * efficiency = (T_N / T_4N) / 4; target ≥ 0.8.
   */
 object ScalingBench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** The N-vs-4N protocol both scaling mains share: a warm-up at local[4N]
+    * on a tenth of the input (JIT and codegen warm for BOTH measured runs —
+    * the shared JVM would otherwise favor whichever runs second), then
+    * local[N], then local[4N], each in a fresh session over the same
+    * deterministic input.
+    *
+    * `run(spark, size)` makes one pass over `size` generated inputs and
+    * returns its wall seconds and its outputs; the outputs must be equal at
+    * both widths. Returns them with the protocol's JSON fields: the widths,
+    * both walls, a per-second rate at each width for every count `rated`
+    * names, the efficiency and the host's `cpu_probe`.
+    */
+  def nVs4n[O](size: Long, n: Int)(run: (SparkSession, Long) => (Double, O))(
+      rated: O => Seq[(String, Long)]): (O, String) = {
+    def at(cpus: Int, inputs: Long): (Double, O) = {
+      val spark = LocalSpark.session(s"graft-scaling-$cpus", cpus)
+      try run(spark, inputs)
+      finally spark.stop()
+    }
+    val n4 = n * 4
+    at(n4, math.max(2000L, size / 10))
+    val (tN, outN) = at(n, size)
+    val (t4, out4) = at(n4, size)
+    require(outN == out4, s"nondeterministic outputs across parallelism: $outN vs $out4")
+    val rates = rated(outN).map { case (name, count) =>
+      f""""${name}_per_sec_n":${count / tN}%.1f,"${name}_per_sec_4n":${count / t4}%.1f"""
+    }
+    val fields = (f""""n":$n,"n4":$n4,"wall_sec_n":$tN%.2f,"wall_sec_4n":$t4%.2f""" +: rates) :+
+      f""""scaling_efficiency":${(tN / t4) / 4.0}%.3f""" :+
+      s""""cpu_probe":${CpuScaling.probeJson()}"""
+    (outN, fields.mkString(","))
   }
 
-  private def runIngest(cpus: Int, nPages: Long, tag: String): (Double, Long, Long) = {
-    implicit val spark: SparkSession = session(cpus)
-    val wh = s"/tmp/graft-scaling-$tag"
-    graft.Bench.deleteRecursively(java.nio.file.Paths.get(wh))
-    val store = new SnapshotStore(wh)
+  /** One ingest into a fresh warehouse; returns (wall, (docs, triples)). */
+  private def ingest(spark: SparkSession, nPages: Long): (Double, (Long, Long)) = {
+    implicit val s: SparkSession = spark
+    val wh = java.nio.file.Files.createTempDirectory("graft-scaling-")
+    val store = new SnapshotStore(wh.toString)
     val t0 = System.nanoTime()
     Ingest.run(PagesGen.pages(spark, nPages), store,
       Ingest.Config(dictSizeHint = Some(2000L)),
@@ -54,30 +69,16 @@ object ScalingBench {
     val wall = (System.nanoTime() - t0) / 1e9
     val docs = store.read("pages_text").count()
     val triples = Ingest.triplesOf(store.read("extractions")).count()
-    spark.stop()
-    (wall, docs, triples)
+    graft.Bench.deleteRecursively(wh)
+    (wall, (docs, triples))
   }
 
   def main(args: Array[String]): Unit = {
-    val nPages = if (args.nonEmpty) args(0).toLong else
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES", "40000").toLong
-    val n = if (args.length > 1) args(1).toInt
-      else sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
-    val n4 = n * 4
-
-    val _ = runIngest(n4, math.max(2000L, nPages / 10), "warmup") // JIT/codegen warmup
-    val (tN, docsN, triplesN) = runIngest(n, nPages, s"n$n")
-    val (t4, docs4, triples4) = runIngest(n4, nPages, s"n$n4")
-    require(docsN == docs4 && triplesN == triples4,
-      s"nondeterministic outputs across parallelism: $docsN/$triplesN vs $docs4/$triples4")
-
-    val efficiency = (tN / t4) / 4.0
-    println(
-      f"""{"pages":$nPages,"docs":$docsN,"triples":$triplesN,"n":$n,"n4":$n4,""" +
-        f""""wall_sec_n":$tN%.2f,"wall_sec_4n":$t4%.2f,""" +
-        f""""docs_per_sec_n":${docsN / tN}%.1f,"docs_per_sec_4n":${docs4 / t4}%.1f,""" +
-        f""""triples_per_sec_n":${triplesN / tN}%.1f,"triples_per_sec_4n":${triples4 / t4}%.1f,""" +
-        f""""scaling_efficiency":$efficiency%.3f,""" +
-        s""""cpu_probe":${CpuScaling.probeJson()}}""")
+    val nPages = if (args.nonEmpty) args(0).toLong else 40000L
+    val n = if (args.length > 1) args(1).toInt else 2
+    val ((docs, triples), fields) = nVs4n(nPages, n)(ingest) { case (docs, triples) =>
+      Seq("docs" -> docs, "triples" -> triples)
+    }
+    println(s"""{"pages":$nPages,"docs":$docs,"triples":$triples,$fields}""")
   }
 }

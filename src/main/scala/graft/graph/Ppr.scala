@@ -4,6 +4,7 @@ import graft.core.Loops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
@@ -138,7 +139,27 @@ object Ppr {
       maxIter: Int = 100,
       minScore: Double = 1e-8
   )(implicit spark: SparkSession): DataFrame =
-    runGraph(prepare(edges), None, seeds, damping, tol, maxIter, minScore)
+    runOnce(prepare(edges), None, seeds, damping, tol, maxIter, minScore)
+
+  /** `runGraph` over a graph prepared for this call alone, which is
+    * released before returning: the result reads none of its blocks.
+    */
+  private[graph] def runOnce(
+      graph: PreparedGraph,
+      extraEdges: Option[DataFrame],
+      seeds: DataFrame,
+      damping: Double,
+      tol: Double,
+      maxIter: Int,
+      minScore: Double
+  )(implicit spark: SparkSession): DataFrame = {
+    val ranks = runGraph(graph, extraEdges, seeds, damping, tol, maxIter, minScore)
+    graph match {
+      case g: DistributedGraph => release(g.und); release(g.outW)
+      case _: DriverGraph =>
+    }
+    ranks
+  }
 
   /** Run from a prepared graph plus per-query extra edges (the online
     * similarity edges of one retrieval, adapter.py:532). Only the extras
@@ -157,7 +178,7 @@ object Ppr {
   )(implicit spark: SparkSession): DataFrame =
     runGraph(graph, Some(extraEdges), seeds, damping, tol, maxIter, minScore)
 
-  private[graph] def runGraph(
+  private def runGraph(
       graph: PreparedGraph,
       extraEdges: Option[DataFrame],
       seeds: DataFrame,
@@ -348,6 +369,14 @@ object Ppr {
 
   // ---- distributed path ----------------------------------------------------
 
+  /** Drop the cached blocks of a checkpointed frame once nothing returned
+    * reads them. A frame that is not itself a checkpoint is left alone.
+    */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
   private def runDistributed(
       graph: DistributedGraph,
       extraEdges: Option[DataFrame],
@@ -375,6 +404,7 @@ object Ppr {
       val adj0 = und.join(outW, Seq("src"))
         .select(col("src"), col("dst"), (col("w") / col("wout")).as("p"))
         .localCheckpoint()
+      extraUnd.foreach(release)
       runAdj(adj0, totalRows, seeds, damping, tol, maxIter, minScore)
     }
   }
@@ -396,7 +426,11 @@ object Ppr {
     val parts = math.max(1, (adjRows / Loops.RowsPerPartition).toInt + 1)
     val adj =
       if (adj0.rdd.getNumPartitions <= parts) adj0
-      else adj0.repartition(parts, col("src")).localCheckpoint()
+      else {
+        val a = adj0.repartition(parts, col("src")).localCheckpoint()
+        release(adj0)
+        a
+      }
 
     // scope the session's shuffle width to the measured graph for the
     // whole loop (graft.core.Loops): every published frame below is
@@ -471,10 +505,14 @@ object Ppr {
           .join(ranks.withColumnRenamed("rank", "prev"), Seq("id"))
           .agg(sum(abs(col("rank") - col("prev"))))
           .collect()(0).getDouble(0)
+      if (iter > 0) release(ranks) // a superseded block
       ranks = next
       iter += n
     }
-    adj.unpersist()
+    // the result reads only the last block, or `persisted` when no
+    // iteration ran
+    release(adj)
+    if (iter > 0) release(persisted)
     ranks.filter(col("rank") > minScore)
     }
   }

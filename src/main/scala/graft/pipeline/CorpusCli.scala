@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.LocalSpark
 import graft.ops.{Curation, Dedup, Ivf, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -224,17 +225,7 @@ object CorpusCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-corpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-corpus", LocalSpark.cpus)
     try run(args.toSeq, spark).foreach(println)
     finally spark.stop()
   }

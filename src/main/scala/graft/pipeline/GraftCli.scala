@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.LocalSpark
 import graft.query.GraftService
 import graft.store.SnapshotStore
 import org.apache.spark.sql.SparkSession
@@ -97,17 +98,7 @@ object GraftCli {
     } + "\""
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-cli", LocalSpark.cpus)
     try run(args.toSeq, spark).foreach(println)
     finally spark.stop()
   }

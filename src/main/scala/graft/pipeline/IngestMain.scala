@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.LocalSpark
 import graft.fixtures.PagesGen
 import graft.oracle.SeqOracle
 import graft.store.SnapshotStore
@@ -10,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * oracle.
   *
   * Usage:
-  *   IngestMain <warehouseDir> [nPages=2000] [cpus=32] [pagesParquet]
+  *   IngestMain <warehouseDir> [nPages=2000] [cpus] [pagesParquet]
+  *
+  * `cpus` defaults to `SPARK_GRAFT_CPUS`, else the host's core count.
   *
   * If `pagesParquet` is given, pages are read from it; otherwise they are
   * generated deterministically (seed 42) — the generated table is exactly
@@ -21,23 +24,9 @@ object IngestMain {
   def main(args: Array[String]): Unit = {
     val warehouse = if (args.length > 0) args(0) else "/tmp/graft-warehouse"
     val nPages = if (args.length > 1) args(1).toLong else 2000L
-    val cpus = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = if (args.length > 2) args(2).toInt else LocalSpark.cpus
 
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // ICU case-mapping class init costs ~60 s and blocks every task at
-      // the first codegen'd lower()/upper() while ICU's
-      // CollationAwareUTF8String class-initialises (once per JVM); our spec
-      // is ASCII-stable under JVM mappings, so skip ICU.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = LocalSpark.session("graft-ingest", cpus)
     import spark.implicits._
 
     val cfg = Ingest.Config()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.LocalSpark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -48,16 +49,7 @@ object StreamMain {
 
   def main(args: Array[String]): Unit = {
     val Array(obsDir, outDir, checkpointDir) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = LocalSpark.session("graft-stream", LocalSpark.cpus)
     runOnce(obsDir, outDir, checkpointDir)
     val n = spark.read.parquet(outDir).count()
     println(s"""{"promoted_edges":$n,"out":"$outDir"}""")

@@ -1,9 +1,11 @@
 package graft
 
+import graft.canon.Canon
 import graft.graph.{Ppr, PprTestAccess}
 import graft.streaming.EdgePromotion
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 class GraphSuite extends SparkFunSuite {
@@ -170,12 +172,158 @@ class GraphSuite extends SparkFunSuite {
     assert(ranks(extras.map { case (a, b, w) => (b, a, w) }.reverse, seeds.reverse) == expected)
   }
 
+  test("PPR distributed loop: each call leaves at most its result's checkpoint cached") {
+    // 12 iterations run 3 blocks; the extras, the adjacency, the
+    // personalization and the superseded blocks must all be released
+    val edges = (0 until 40).map(i => (s"n$i", s"n${(i * 7 + 1) % 40}", 0.8))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val extras = Seq(("n1", "n20", 0.95), ("n3", "n27", 0.9))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val seeds = Seq(("n0", 1.0), ("n5", 0.5)).toDF("id", "weight")
+    val sc = spark.sparkContext
+    def once(maxIter: Int) =
+      PprTestAccess.run(edges, seeds, rowLimit = 0L, Some(extras), tol = 0.0, maxIter = maxIter)
+    val results = scala.collection.mutable.ArrayBuffer(once(12))
+    val after1 = sc.getPersistentRDDs.keySet
+    val n = 5
+    (1 until n).foreach(_ => results += once(12))
+    // compared by id: an RDD only weakly held may leave the map at a GC
+    val added = sc.getPersistentRDDs.keySet -- after1
+    assert(added.size <= n - 1, s"${added.size} RDDs stayed cached after ${n - 1} calls")
+    // every result still reads its checkpoint; with no iteration the
+    // result is the personalization itself
+    def rounded(df: DataFrame) = ranks(df).view.mapValues(r => math.round(r * 1e12)).toMap
+    val expected = rounded(results.head)
+    results.foreach(r => assert(rounded(r) == expected))
+    val none = once(0)
+    assert(ranks(none) == Map("n0" -> 1.0 / 1.5, "n5" -> 0.5 / 1.5))
+  }
+
   test("PPR: uniform personalization fallback when seeds are empty (memory.py:304-315)") {
     val edges = Seq(("a", "b", 1.0), ("b", "c", 1.0)).toDF("source_id", "target_id", "confidence")
     val seeds = Seq.empty[(String, Double)].toDF("id", "weight")
     val got = Ppr.run(edges, seeds).as[(String, Double)].collect().toMap
     assert(got.size == 3)
     assert(math.abs(got.values.sum - 1.0) < 1e-6)
+  }
+
+  test("online edges merge into PPR exactly like reference extra_edges") {
+    import graft.core.Embeddings
+    // two disconnected nodes whose embeddings are similar: without online
+    // edges PPR gives the non-seed-ish node nothing; with the merged online
+    // edge it receives rank mass
+    val e1 = Embeddings.embedConcept("alpha cache layer", "caching tier")
+    val e2 = Embeddings.embedConcept("alpha cache layer tuning", "caching tier tuning")
+    val far = Embeddings.embedConcept("unrelated quantum chemistry", "molecules")
+    val concepts = Seq(
+      ("web:A", "A", e1), ("web:B", "B", e2), ("web:C", "C", far)
+    ).toDF("id", "name", "embedding")
+    // persistent graph links A—C only
+    val edges = Seq(("web:A", "web:C", 0.9)).toDF("source_id", "target_id", "confidence")
+    val factors = Seq.empty[(String, Double)].toDF("node_id", "factor")
+
+    val out = graft.query.Retrieval.retrieveFull(concepts, edges, factors,
+      "alpha cache layer", topK = 3, onlineThreshold = 0.5)
+    // e1·e2 cosine is high → an online edge A—B must exist
+    assert(out.onlineEdges.filter(
+      (col("id_a") === "web:A" && col("id_b") === "web:B") ||
+        (col("id_a") === "web:B" && col("id_b") === "web:A")).count() == 1)
+    // B is reachable ONLY through the online edge — it must carry ppr mass
+    val bPpr = out.results.filter(col("id") === "web:B").select("ppr").as[Double].head()
+    assert(bPpr > 0.0)
+    // coverage = persistent/(persistent+online) ∈ (0,1) here
+    assert(out.kgCoverage > 0.0 && out.kgCoverage < 1.0)
+  }
+
+  test("PPR: an isolated seed keeps (1−d)·pers mass (memory.py:304-315 parity)") {
+    val edges = Seq(("a", "b", 1.0)).toDF("source_id", "target_id", "confidence")
+    val seeds = Seq(("a", 1.0), ("z", 1.0)).toDF("id", "weight") // z has no edges
+    val got = Ppr.run(edges, seeds, damping = 0.85, tol = 1e-10)
+      .as[(String, Double)].collect().toMap
+
+    // dense reference over ALL nodes {a, b, z}, pers = (0.5, 0, 0.5)
+    val nodes = Seq("a", "b", "z")
+    val idx = nodes.zipWithIndex.toMap
+    val und = Seq(("a", "b", 1.0), ("b", "a", 1.0))
+    val outW = und.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    val pers = Array(0.5, 0.0, 0.5)
+    var rank = pers.clone()
+    for (_ <- 0 until 2000) {
+      val next = Array.fill(3)(0.0)
+      for ((u, v, w) <- und) next(idx(v)) += rank(idx(u)) * w / outW(u)
+      for (i <- 0 until 3) next(i) = 0.85 * next(i) + 0.15 * pers(i)
+      rank = next
+    }
+    for ((n, i) <- idx)
+      assert(math.abs(got.getOrElse(n, 0.0) - rank(i)) < 1e-6,
+        s"node $n: ${got.get(n)} vs ${rank(i)}")
+    // the isolated seed specifically: (1−d) · 0.5 = 0.075, not dropped
+    assert(math.abs(got("z") - 0.075) < 1e-9)
+  }
+
+  test("withShuffleWidth: concurrent PPR and CC on one session match serial runs") {
+    val edges = (0 until 40).map(i => (s"n$i", s"n${(i + 1) % 40}", 0.9))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val seeds = Seq(("n0", 1.0)).toDF("id", "weight").localCheckpoint()
+    val pairs = (0 until 30).map(i => (s"c${i / 3 * 3}", s"c$i"))
+      .toDF("id_a", "id_b").localCheckpoint()
+
+    // a graph this small runs PPR on the driver, outside Loops: force the
+    // distributed loop, which scopes the width
+    def pprRun() = PprTestAccess.run(edges, seeds, rowLimit = 0L, tol = 0.0, maxIter = 10)
+      .collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toSet
+    def ccRun() = Canon.connectedComponents(pairs)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+    val serialPpr = pprRun()
+    val serialCc = ccRun()
+    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // several interleaved rounds: each pair races loop-entry/planning/restore
+    for (_ <- 0 until 3) {
+      val fp = Future(pprRun())
+      val fc = Future(ccRun())
+      assert(Await.result(fp, 120.seconds) == serialPpr)
+      assert(Await.result(fc, 120.seconds) == serialCc)
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == prevWidth,
+      "loop scoping must restore the session shuffle width")
+  }
+
+  test("withShuffleWidth: non-numeric conf value skips scoping instead of throwing") {
+    // OSS Spark validates this conf as int at set-time, so the non-numeric
+    // case only arrives via platform defaults ("auto") — pin the parse
+    assert(graft.core.Loops.parseWidth("auto").isEmpty)
+    assert(graft.core.Loops.parseWidth(" 32 ").contains(32))
+  }
+
+  test("Ppr.runPrepared over a prepared graph matches Ppr.run on the merged edges") {
+    val edges = (0 until 30).map(i => (s"n$i", s"n${(i * 7 + 1) % 30}", 0.8))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val extras = Seq(("n1", "n20", 0.95), ("n3", "n27", 0.9))
+      .toDF("source_id", "target_id", "confidence").localCheckpoint()
+    val seeds = Seq(("n0", 1.0)).toDF("id", "weight")
+
+    def collectRanks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toMap
+
+    for ((path, limit) <- PprTestAccess.paths) {
+      val g = PprTestAccess.prepare(edges, limit)
+      // with extras: identical to one-shot run over the union
+      val prepared = collectRanks(Ppr.runPrepared(g, extras, seeds, tol = 0.0, maxIter = 12))
+      val oneShot = collectRanks(
+        PprTestAccess.run(edges.unionByName(extras), seeds, limit, tol = 0.0, maxIter = 12))
+      assert(prepared == oneShot, path)
+      // without extras: the cached normalization is used as-is
+      val noExtras = collectRanks(Ppr.runPrepared(g,
+        Seq.empty[(String, String, Double)].toDF("source_id", "target_id", "confidence"),
+        seeds, tol = 0.0, maxIter = 12))
+      assert(noExtras == collectRanks(PprTestAccess.run(edges, seeds, limit, tol = 0.0, maxIter = 12)),
+        path)
+    }
   }
 
   test("edge promotion batch: hits ≥ 3 AND avg ≥ 0.75 (buffer.py:110-112)") {

@@ -1,0 +1,31 @@
+package graft
+
+/** The one local session factory (`graft.core.LocalSpark`): the conf it
+  * gives the shared test session, and that no other code builds a session.
+  */
+class LocalSparkSuite extends SparkFunSuite {
+
+  test("LocalSpark: the shared test session carries the factory conf") {
+    val conf = spark.conf
+    assert(spark.sparkContext.master == "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.icu.caseMappings.enabled") == "false")
+    assert(conf.get("spark.ui.enabled") == "false")
+    // Spark 4 defaults the factory relies on rather than sets
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+  }
+
+  test("LocalSpark: no source outside the factory and the bench instruments builds a session") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("main/scala/graft/core/LocalSpark.scala", "main/scala/graft/Bench.scala",
+      "main/scala/graft/Verify.scala").map(Paths.get("src", _))
+    val builders = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p))
+      .filter((p: Path) => new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession." + "builder"))
+      .toList
+    assert(builders.isEmpty, s"session builders outside graft.core.LocalSpark: $builders")
+  }
+}

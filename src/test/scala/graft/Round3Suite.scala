@@ -1,10 +1,10 @@
 package graft
 
 import graft.extract.DetExtractor
-import graft.graph.Ppr
 
 /** Round-3 regression tests: repo hygiene (no control bytes in source),
-  * dedupMentions role tie-break and PPR isolated-seed mass.
+  * the dedupMentions role tie-break, Service.feedback, retrieveFull, the
+  * Thompson posterior, VectorIndex merge-on-read and StreamMain.
   */
 class Round3Suite extends SparkFunSuite {
   import spark.implicits._
@@ -43,32 +43,6 @@ class Round3Suite extends SparkFunSuite {
     val kept4 = DetExtractor.dedupMentions(Vector(
       m("Redis", 0.7, "generalizable", 0), m("Redis", 0.7, "generalizable", 10)))
     assert(kept4.head.begin == 0)
-  }
-
-  test("PPR: an isolated seed keeps (1−d)·pers mass (memory.py:304-315 parity)") {
-    val edges = Seq(("a", "b", 1.0)).toDF("source_id", "target_id", "confidence")
-    val seeds = Seq(("a", 1.0), ("z", 1.0)).toDF("id", "weight") // z has no edges
-    val got = Ppr.run(edges, seeds, damping = 0.85, tol = 1e-10)
-      .as[(String, Double)].collect().toMap
-
-    // dense reference over ALL nodes {a, b, z}, pers = (0.5, 0, 0.5)
-    val nodes = Seq("a", "b", "z")
-    val idx = nodes.zipWithIndex.toMap
-    val und = Seq(("a", "b", 1.0), ("b", "a", 1.0))
-    val outW = und.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    val pers = Array(0.5, 0.0, 0.5)
-    var rank = pers.clone()
-    for (_ <- 0 until 2000) {
-      val next = Array.fill(3)(0.0)
-      for ((u, v, w) <- und) next(idx(v)) += rank(idx(u)) * w / outW(u)
-      for (i <- 0 until 3) next(i) = 0.85 * next(i) + 0.15 * pers(i)
-      rank = next
-    }
-    for ((n, i) <- idx)
-      assert(math.abs(got.getOrElse(n, 0.0) - rank(i)) < 1e-6,
-        s"node $n: ${got.get(n)} vs ${rank(i)}")
-    // the isolated seed specifically: (1−d) · 0.5 = 0.075, not dropped
-    assert(math.abs(got("z") - 0.075) < 1e-9)
   }
 
   test("Service.feedback: invalid outcome rejects the batch with the reference error") {

@@ -2,58 +2,18 @@ package graft
 
 import graft.canon.Canon
 import graft.causal.{Causal, CausalDag}
-import graft.graph.{Ppr, PprTestAccess}
 import graft.learning.Thompson
 import graft.query.Service
 import org.apache.spark.sql.functions._
 
-/** Round-4 regression tests: loop shuffle-width concurrency safety, the
-  * causal driver-collect caps, DAG node seeding for credit propagation,
-  * and the Thompson baseline score shape.
+/** Round-4 regression tests: the causal driver-collect caps, DAG node
+  * seeding for credit propagation, the Thompson baseline score shape,
+  * VectorIndex concurrency and IVF layout, canonicalMap through star CC,
+  * incremental dedup, the native minhash/simhash expressions, PII
+  * redaction and streaming curation.
   */
 class Round4Suite extends SparkFunSuite {
   import spark.implicits._
-
-  // ---- Loops concurrency -------------------------------------------------
-
-  test("withShuffleWidth: concurrent PPR and CC on one session match serial runs") {
-    val edges = (0 until 40).map(i => (s"n$i", s"n${(i + 1) % 40}", 0.9))
-      .toDF("source_id", "target_id", "confidence").localCheckpoint()
-    val seeds = Seq(("n0", 1.0)).toDF("id", "weight").localCheckpoint()
-    val pairs = (0 until 30).map(i => (s"c${i / 3 * 3}", s"c$i"))
-      .toDF("id_a", "id_b").localCheckpoint()
-
-    // a graph this small runs PPR on the driver, outside Loops: force the
-    // distributed loop, which scopes the width
-    def pprRun() = PprTestAccess.run(edges, seeds, rowLimit = 0L, tol = 0.0, maxIter = 10)
-      .collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toSet
-    def ccRun() = Canon.connectedComponents(pairs)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-
-    val serialPpr = pprRun()
-    val serialCc = ccRun()
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // several interleaved rounds: each pair races loop-entry/planning/restore
-    for (_ <- 0 until 3) {
-      val fp = Future(pprRun())
-      val fc = Future(ccRun())
-      assert(Await.result(fp, 120.seconds) == serialPpr)
-      assert(Await.result(fc, 120.seconds) == serialCc)
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == prevWidth,
-      "loop scoping must restore the session shuffle width")
-  }
-
-  test("withShuffleWidth: non-numeric conf value skips scoping instead of throwing") {
-    // OSS Spark validates this conf as int at set-time, so the non-numeric
-    // case only arrives via platform defaults ("auto") — pin the parse
-    assert(graft.core.Loops.parseWidth("auto").isEmpty)
-    assert(graft.core.Loops.parseWidth(" 32 ").contains(32))
-  }
 
   // ---- causal driver-boundary caps ---------------------------------------
 
@@ -124,34 +84,6 @@ class Round4Suite extends SparkFunSuite {
     // Thompson rounds still score every candidate (reference scores dict)
     val t = Thompson.select(arms, Map.empty, k = 3, seed = 7L, baselineRate = 0.0)
     assert(t.scores.keySet == arms.map(_.id).toSet)
-  }
-
-  // ---- prepared-adjacency PPR (query-service amortization) ---------------
-
-  test("Ppr.runPrepared over a prepared graph matches Ppr.run on the merged edges") {
-    val edges = (0 until 30).map(i => (s"n$i", s"n${(i * 7 + 1) % 30}", 0.8))
-      .toDF("source_id", "target_id", "confidence").localCheckpoint()
-    val extras = Seq(("n1", "n20", 0.95), ("n3", "n27", 0.9))
-      .toDF("source_id", "target_id", "confidence").localCheckpoint()
-    val seeds = Seq(("n0", 1.0)).toDF("id", "weight")
-
-    def collectRanks(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toMap
-
-    for ((path, limit) <- PprTestAccess.paths) {
-      val g = PprTestAccess.prepare(edges, limit)
-      // with extras: identical to one-shot run over the union
-      val prepared = collectRanks(Ppr.runPrepared(g, extras, seeds, tol = 0.0, maxIter = 12))
-      val oneShot = collectRanks(
-        PprTestAccess.run(edges.unionByName(extras), seeds, limit, tol = 0.0, maxIter = 12))
-      assert(prepared == oneShot, path)
-      // without extras: the cached normalization is used as-is
-      val noExtras = collectRanks(Ppr.runPrepared(g,
-        Seq.empty[(String, String, Double)].toDF("source_id", "target_id", "confidence"),
-        seeds, tol = 0.0, maxIter = 12))
-      assert(noExtras == collectRanks(PprTestAccess.run(edges, seeds, limit, tol = 0.0, maxIter = 12)),
-        path)
-    }
   }
 
   // ---- VectorIndex intra-JVM write serialization -------------------------

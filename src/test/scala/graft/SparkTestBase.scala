@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.LocalSpark
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val s = LocalSpark.session("graft-test", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -15,11 +15,11 @@ object PprTestAccess {
   def prepare(edges: DataFrame, rowLimit: Long)(implicit spark: SparkSession): Ppr.PreparedGraph =
     Ppr.prepare(edges, rowLimit)
 
-  /** `Ppr.run` (or `runPrepared` when `extras` are given) with the path
-    * forced by `rowLimit`.
+  /** `Ppr.run` (or `runPrepared` over a graph prepared for this call when
+    * `extras` are given) with the path forced by `rowLimit`.
     */
   def run(edges: DataFrame, seeds: DataFrame, rowLimit: Long, extras: Option[DataFrame] = None,
       damping: Double = 0.85, tol: Double = 1e-6, maxIter: Int = 100)(
       implicit spark: SparkSession): DataFrame =
-    Ppr.runGraph(Ppr.prepare(edges, rowLimit), extras, seeds, damping, tol, maxIter, 1e-8)
+    Ppr.runOnce(Ppr.prepare(edges, rowLimit), extras, seeds, damping, tol, maxIter, 1e-8)
 }
