@@ -2,8 +2,10 @@ package graft.query
 
 import graft.projectors.Projectors
 import graft.store.SnapshotStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** The in-process service facade over a committed warehouse — the
   * orchestration surface of the reference's QortexService (service.py):
@@ -16,13 +18,23 @@ import org.apache.spark.sql.functions._
   * The committed tables are read once per service instance and
   * plan-truncated (`localCheckpoint`) — the "query service checkpoints
   * its graph across queries" shape. A snapshot below the loop width (see
-  * `index`) is also held on the driver: each query and each explore runs
-  * there without planning a DataFrame, caching an RDD or taking the
-  * `Loops` lock. A larger one plans every query and explore against those
-  * checkpointed leaves.
+  * `index`) is also held on the driver, and so is its `factors` table
+  * below the same size rule (see `factorsNow`): each query and each
+  * explore runs there with no Spark job, caching no RDD and taking no
+  * `Loops` lock, and each feedback runs one job, the commit of the new
+  * factors. A larger snapshot plans every query and explore against those
+  * checkpointed leaves and rewrites the factors with `Service.feedback`.
+  *
+  * `rowLimit` is the size rule's bound, `Loops.RowsPerPartition` outside
+  * tests.
   */
-final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
+final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
+    implicit spark: SparkSession) {
+  import GraftService.FactorsAt
   import spark.implicits._
+
+  def this(store: SnapshotStore)(implicit spark: SparkSession) =
+    this(store, graft.core.Loops.RowsPerPartition.toInt)
 
   private lazy val edges: DataFrame = store.read("edges").localCheckpoint()
   private lazy val rules: DataFrame = store.read("rules").localCheckpoint()
@@ -43,15 +55,15 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
 
   /** The snapshot's concepts, graph and rule postings on the driver,
     * built once per instance next to `pprGraph`. It exists exactly when
-    * `pprGraph` is a driver graph and the concepts have fewer than
-    * `Loops.RowsPerPartition` rows (the same size rule); then `query`
-    * answers from it with one small collect of the factors and `explore`
-    * with no Spark job; neither caches an RDD or takes the `Loops` lock.
+    * `pprGraph` is a driver graph and the concepts and the rules each have
+    * fewer than `rowLimit` rows (the same size rule); then `query` and
+    * `explore` answer from it with no Spark job (with the factors held,
+    * see `factorsNow`); neither caches an RDD or takes the `Loops` lock.
     * Larger snapshots keep `Retrieval.retrieveFull` and `Bfs.exploreEdges`.
     * A duplicate concept id fails the build.
     */
   private[query] lazy val index: Option[SnapshotIndex] = pprGraph match {
-    case g: graft.graph.Ppr.DriverGraph => SnapshotIndex.build(store.read("concepts"), rules, g)
+    case g: graft.graph.Ppr.DriverGraph => SnapshotIndex.build(store.read("concepts"), rules, g, rowLimit)
     case _ => None
   }
 
@@ -64,14 +76,71 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     (if (index.isDefined) all.select("id", "name", "domain", "confidence") else all).localCheckpoint()
   }
 
-  /** Read per query, never cached: feedback commits them, and so may
-    * another service instance over the same warehouse.
+  /** The latest committed factors, read per call without an `index`:
+    * feedback commits them, and so may another service instance over the
+    * same warehouse.
     */
-  private def storedFactors: Option[DataFrame] =
-    if (store.exists("factors")) Some(store.read("factors")) else None
-
   private def factors: DataFrame =
-    storedFactors.getOrElse(Seq.empty[(String, Double)].toDF("node_id", "factor"))
+    if (store.exists("factors")) store.read("factors")
+    else Seq.empty[(String, Double)].toDF("node_id", "factor")
+
+  /** Published whole, so a reader sees one snapshot's id and rows. */
+  @volatile private var factorsAt: Option[FactorsAt] = None
+
+  /** Serialises the factors' re-reads and each feedback's
+    * read-compute-commit-publish step, so no update is lost.
+    */
+  private val factorsLock = new Object
+
+  /** The factors of the latest committed snapshot, for a service with an
+    * `index`. Each call reads the table's snapshot pointer (two small file
+    * reads, no Spark job) and re-collects the table only when its id is
+    * not the one held: after another instance's feedback, a direct commit
+    * or a rollback, so a call always sees the latest snapshot.
+    */
+  private def factorsNow(): FactorsAt = {
+    def heldAt(snap: Option[SnapshotStore.Snapshot]) = factorsAt.filter(_.snapshot == snap.map(_.id))
+    heldAt(store.latest("factors")).getOrElse(factorsLock.synchronized {
+      // read again under the lock: a feedback may have published meanwhile
+      val snap = store.latest("factors")
+      heldAt(snap).getOrElse {
+        val at = FactorsAt(snap.map(_.id), snap.fold(Option(SnapshotIndex.Factors.empty))(s =>
+          SnapshotIndex.Factors.collect(store.read("factors", s.id), rowLimit)))
+        factorsAt = Some(at)
+        at
+      }
+    })
+  }
+
+  /** The factor update of one feedback on a service with an `index`,
+    * under `factorsLock`: held rows are folded on the driver and committed
+    * as one file, a larger table is rewritten as `Service.feedback` does;
+    * the new snapshot is then published.
+    */
+  private def commitFactors(outcomes: DataFrame, rows: Seq[Row]): DataFrame =
+    factorsLock.synchronized {
+      val at = factorsNow()
+      at.held match {
+        case Some(held) =>
+          // one summed delta per node id, as updateFactors' groupBy
+          val deltas = mutable.LinkedHashMap.empty[String, Double]
+          for (r <- rows) {
+            val id = r.getString(0)
+            deltas(id) = deltas.getOrElse(id, 0.0) + Service.OutcomeDelta(r.getString(1))
+          }
+          val updated = held.updated(deltas)
+          val frame = updated.toFrame
+          val snap = store.commitReplace("factors", frame.coalesce(1), Seq.empty)
+          factorsAt = Some(FactorsAt(Some(snap.id), Some(updated).filter(_.rows.length < rowLimit)))
+          frame
+        case None =>
+          val updated = Service.rewriteFactors(at.snapshot.fold(factors)(store.read("factors", _)),
+            outcomes, Some((store, "factors")))
+          // updateFactors' outer join keeps every row: still too large to hold
+          factorsAt = Some(FactorsAt(store.latest("factors").map(_.id), None))
+          updated
+      }
+    }
 
   // service counters (service.py:439, 482-485)
   private val queryCounter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -101,7 +170,12 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     val k = math.max(1, math.min(topK, 1000))
     val minConf = math.max(0.0, math.min(minConfidence, 1.0))
     val out = index match {
-      case Some(ix) => ix.retrieve(context, k, domains, minConf, storedFactors)
+      case Some(ix) =>
+        val at = factorsNow()
+        ix.retrieve(context, k, domains, minConf, at.held match {
+          case Some(held) => _ => held.byId
+          case None => SnapshotIndex.tableFactors(at.snapshot.map(store.read("factors", _)))
+        })
       case None =>
         val cs0 =
           if (domains.isEmpty) concepts
@@ -144,6 +218,10 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     * committed edge table (the _maybe_propagate_credit flag path) into
     * the credit learner's posteriors (learner.apply_credit_deltas,
     * service.py:1653-1655).
+    *
+    * With the `index`, the factor update is `commitFactors`: with the
+    * factors held, the commit is the update's only Spark job and
+    * `FeedbackResult.factors` is a local frame of the new rows.
     */
   def feedback(
       queryId: String,
@@ -151,10 +229,15 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
       propagateCredit: Boolean = false
   ): Either[String, Service.FeedbackResult] = {
     val df = outcomes.toSeq.toDF("node_id", "outcome")
-    val res = Service.feedback(factors, df, queryId,
-      persistTo = Some((store, "factors")),
-      creditEdges = if (propagateCredit) Some(edges) else None,
-      creditConcepts = if (propagateCredit) Some(concepts) else None)
+    val creditEdges = if (propagateCredit) Some(edges) else None
+    val creditConcepts = if (propagateCredit) Some(concepts) else None
+    val res = index match {
+      case Some(_) =>
+        Service.record(df, queryId, creditEdges, creditConcepts)(commitFactors(df, _))
+      case None =>
+        Service.feedback(factors, df, queryId, persistTo = Some((store, "factors")),
+          creditEdges = creditEdges, creditConcepts = creditConcepts)
+    }
     res.foreach { r =>
       feedbackCounter.incrementAndGet()
       r.credit.foreach { c =>
@@ -256,4 +339,13 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   /** Write a projection artifact next to the warehouse (atomic). */
   def projectToFile(path: String, persona: String, projectedAt: String): Unit =
     Projectors.writeArtifact(path, project(persona, projectedAt = projectedAt))
+}
+
+object GraftService {
+
+  /** One committed `factors` snapshot as a service last read it: its id
+    * (None when there is no table) and its rows on the driver (None when
+    * it has the service's `rowLimit` rows or more).
+    */
+  private final case class FactorsAt(snapshot: Option[Long], held: Option[SnapshotIndex.Factors])
 }

@@ -48,6 +48,12 @@ object Service {
   val OutcomeReward: Map[String, Double] =
     Map("accepted" -> 1.0, "rejected" -> -1.0, "partial" -> 0.3)
 
+  /** `EdgePromotion.updateFactors`' teleportation-factor delta per outcome
+    * (factors.py:36-45).
+    */
+  val OutcomeDelta: Map[String, Double] =
+    Map("accepted" -> 0.1, "rejected" -> -0.05, "partial" -> 0.03)
+
   final case class CreditSummary(
       conceptCount: Int,
       directCount: Int,
@@ -95,7 +101,34 @@ object Service {
         * edge-less concept still receives direct credit.
         */
       creditConcepts: Option[DataFrame] = None
-  ): Either[String, FeedbackResult] = {
+  ): Either[String, FeedbackResult] =
+    record(outcomes, queryId, creditEdges, creditConcepts)(_ => rewriteFactors(factors, outcomes, persistTo))
+
+  /** `EdgePromotion.updateFactors`, checkpointed and, with `persistTo`,
+    * committed as the table's new snapshot.
+    */
+  private[query] def rewriteFactors(
+      factors: DataFrame,
+      outcomes: DataFrame,
+      persistTo: Option[(SnapshotStore, String)]): DataFrame = {
+    val updated = EdgePromotion.updateFactors(factors, outcomes).localCheckpoint()
+    persistTo.foreach { case (store, table) =>
+      store.commitReplace(table, updated, Seq.empty)
+    }
+    updated
+  }
+
+  /** [[feedback]] with the factor update given as `update`: it receives
+    * the validated (node_id, outcome) rows, commits the updated factors
+    * wherever they are kept and returns them. Validation, tallies, credit
+    * and the events are the same for every caller.
+    */
+  private[query] def record(
+      outcomes: DataFrame,
+      queryId: String,
+      creditEdges: Option[DataFrame],
+      creditConcepts: Option[DataFrame]
+  )(update: Seq[org.apache.spark.sql.Row] => DataFrame): Either[String, FeedbackResult] = {
     // one bounded collect answers both the validation and the tallies;
     // the first invalid row in collect order is the one named
     val rows = collectOutcomesBounded(outcomes.select(col("node_id"), col("outcome")))
@@ -106,11 +139,8 @@ object Service {
       Left(s"Invalid outcome '$bad' for item '${r.getString(0)}'. " +
         s"Must be one of: ${AllowedOutcomes.toSeq.sorted.mkString(", ")}")
     } else {
-      val updated = EdgePromotion.updateFactors(factors, outcomes).localCheckpoint()
+      val updated = update(rows)
       val tallies = rows.groupBy(_.getString(1)).map { case (o, rs) => o -> rs.size.toLong }
-      persistTo.foreach { case (store, table) =>
-        store.commitReplace(table, updated, Seq.empty)
-      }
       val credit = creditEdges.flatMap(e => propagateCredit(e, outcomes, creditConcepts))
       graft.observe.Observe.emit("feedback.received",
         "query_id" -> queryId,

@@ -13,15 +13,18 @@ import scala.collection.mutable
 
 /** One committed snapshot's retrieval inputs held on the driver, and the
   * retrieval of `Retrieval.retrieveFull` computed from them without a
-  * Spark job (apart from one small collect of the teleportation factors),
-  * as is the neighbourhood `GraftService.explore` returns.
+  * Spark job, as is the neighbourhood `GraftService.explore` returns. The
+  * teleportation factors are an input of each call: `GraftService` holds
+  * them beside the index (`SnapshotIndex.Factors`) below the same size
+  * rule, else each query collects its seeds' rows from the table.
   *
   * A query service over a small snapshot pays per-job scheduling and
   * planning cost, not data work: every stage of the DataFrame retrieval
   * runs as one task over a few thousand rows. Below the loop width —
   * the PPR graph fits a `Ppr.DriverGraph` and the concepts have fewer than
-  * `Loops.RowsPerPartition` rows — the service holds this index instead
-  * (GraftService.index) and each query runs on the driver in milliseconds.
+  * `Loops.RowsPerPartition` rows, as do the rule rows — the service holds
+  * this index instead (GraftService.index) and each query runs on the
+  * driver in milliseconds.
   *
   * The index holds:
   *   - concept ids, names and confidences, and the embeddings back to back
@@ -65,15 +68,16 @@ final class SnapshotIndex private (
     * Some(rules), prepared = Some(graph))` where `cs` is the concepts
     * whose id's domain is in `domains` (all when empty) and whose
     * confidence is ≥ `minConfidence` (all when it is ≤ 0), as the service
-    * filters them. `factors` is the (node_id, factor) table, None when
-    * there is none; it is read once, for the seed ids only.
+    * filters them. `factorsOf` gives the seed ids' (node_id, factor) rows,
+    * the factor a double or null, every row of an id (see `Factors.byId`
+    * and `tableFactors`); it is called once, with the seed ids.
     */
   def retrieve(
       queryText: String,
       topK: Int,
       domains: Seq[String],
       minConfidence: Double,
-      factors: Option[DataFrame]
+      factorsOf: Seq[String] => Map[String, Seq[Row]]
   )(implicit spark: SparkSession): Retrieval.RetrievalOutput = {
     val k = math.max(1, math.min(topK, 1000))
     val fetchK = math.max(3 * k, 30)
@@ -109,13 +113,7 @@ final class SnapshotIndex private (
     // A6: weight = vec score × factor (null → 1.0) clamped to [0.1, 5]; a
     // seed joins every factor row of its id, or a null one, as the
     // DataFrame path's left join does
-    val factorRows: Map[String, Seq[Row]] = factors match {
-      case Some(f) if seeds.nonEmpty =>
-        f.filter(col("node_id").isin(seeds.map(ids).toIndexedSeq: _*))
-          .select(col("node_id"), col("factor").cast("double"))
-          .collect().toSeq.groupBy(_.getString(0))
-      case _ => Map.empty
-    }
+    val factorRows = if (seeds.isEmpty) Map.empty[String, Seq[Row]] else factorsOf(seeds.map(ids).toSeq)
     val weighted = seeds.flatMap { i =>
       factorRows.getOrElse(ids(i), Seq(Row(ids(i), null))).map { r =>
         Row(ids(i), score(i) * clampFactor(if (r.isNullAt(1)) 1.0 else r.getDouble(1)))
@@ -219,15 +217,19 @@ object SnapshotIndex {
 
   /** The index of `concepts` (id, name, confidence, embedding) and `rules`
     * (id, text, category, concept_ids) over `graph`, the snapshot's
-    * prepared PPR graph. None when the concepts have
+    * prepared PPR graph. None when the concepts or the rules have
     * `Loops.RowsPerPartition` rows or more, or the graph's ids are not
     * strings; those snapshots keep the DataFrame retrieval. Throws
     * `IllegalArgumentException` on a null or duplicate concept id.
     */
   def build(concepts: DataFrame, rules: DataFrame, graph: Ppr.DriverGraph)(
+      implicit spark: SparkSession): Option[SnapshotIndex] =
+    build(concepts, rules, graph, Loops.RowsPerPartition.toInt)
+
+  /** `build` with `limit` in place of `Loops.RowsPerPartition`. */
+  private[query] def build(concepts: DataFrame, rules: DataFrame, graph: Ppr.DriverGraph, limit: Int)(
       implicit spark: SparkSession): Option[SnapshotIndex] = {
     import spark.implicits._
-    val limit = Loops.RowsPerPartition.toInt
     if (graph.idType != StringType) return None
     val cs = concepts
       .select(col("id"), col("name"), col("confidence").cast("double"),
@@ -253,7 +255,9 @@ object SnapshotIndex {
     for ((i, r) <- ids.indices.sortWith((a, b) => utf8(a).binaryCompare(utf8(b)) < 0).zipWithIndex)
       idRank(i) = r
 
-    val ruleRows = rules.select(col("id"), col("text"), col("category"), col("concept_ids")).collect()
+    val ruleRows = rules.select(col("id"), col("text"), col("category"), col("concept_ids"))
+      .limit(limit).collect()
+    if (ruleRows.length >= limit) return None
     val categories = mutable.HashMap.empty[String, String]
     val postings = mutable.HashMap.empty[String, mutable.ArrayBuilder[Int]]
     for ((r, row) <- ruleRows.zipWithIndex if !r.isNullAt(3); cid <- r.getSeq[String](3) if cid != null)
@@ -277,6 +281,64 @@ object SnapshotIndex {
       },
       postings.map { case (cid, rows) => cid -> rows.result() }.toMap))
   }
+
+  /** A committed `factors` table on the driver: each (node_id, factor) row
+    * as stored, the factor cast to double, with duplicate ids, null ids,
+    * null factors and out-of-range values kept.
+    */
+  final class Factors private[query] (val rows: Array[Row]) {
+
+    /** node id → its rows, the shape `retrieve` reads; a null id matches
+      * no seed.
+      */
+    lazy val byId: Map[String, Seq[Row]] = rows.toSeq.filter(!_.isNullAt(0)).groupBy(_.getString(0))
+
+    /** `EdgePromotion.updateFactors` on the driver, with `deltas` the
+      * summed outcome delta of each touched node id: each row becomes
+      * clamp(coalesce(factor, 1.0) + delta), 0.0 for an untouched id, and
+      * each touched id with no row adds clamp(1.0 + delta). A null id
+      * matches no row.
+      */
+    def updated(deltas: collection.Map[String, Double]): Factors = {
+      val kept = rows.map { r =>
+        val d = if (r.isNullAt(0)) 0.0 else deltas.getOrElse(r.getString(0), 0.0)
+        Row(r.get(0), clampFactor((if (r.isNullAt(1)) 1.0 else r.getDouble(1)) + d))
+      }
+      val added = deltas.collect { case (id, d) if id == null || !byId.contains(id) =>
+        Row(id, clampFactor(1.0 + d))
+      }
+      new Factors(kept ++ added)
+    }
+
+    /** The rows as a local frame with `updateFactors`' schema. */
+    def toFrame(implicit spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), FactorsSchema)
+  }
+
+  object Factors {
+
+    val empty: Factors = new Factors(Array.empty)
+
+    /** The rows of `table`, None when it has `limit` rows or more. */
+    def collect(table: DataFrame, limit: Int): Option[Factors] = {
+      val rows = table.select(col("node_id"), col("factor").cast("double")).limit(limit).collect()
+      if (rows.length >= limit) None else Some(new Factors(rows))
+    }
+  }
+
+  /** `EdgePromotion.updateFactors`' output schema. */
+  private val FactorsSchema = StructType(Seq(
+    StructField("node_id", StringType), StructField("factor", DoubleType, nullable = false)))
+
+  /** `retrieve`'s factors read from a committed table, None when there is
+    * none: one collect of the seeds' rows.
+    */
+  def tableFactors(table: Option[DataFrame]): Seq[String] => Map[String, Seq[Row]] = seeds =>
+    table.fold(Map.empty[String, Seq[Row]]) { f =>
+      f.filter(col("node_id").isin(seeds: _*))
+        .select(col("node_id"), col("factor").cast("double"))
+        .collect().toSeq.groupBy(_.getString(0))
+    }
 
   /** `substring_index(id, ":", 1)`: the "{domain}" of a "{domain}:{name}" id. */
   private def domainOf(id: String): String = {

@@ -87,7 +87,7 @@ class GraftServiceSuite extends SparkFunSuite {
     val rules = st.read("rules")
     // a context whose seeds gain online similarity edges
     val onlineCtx = PagesGen.allEntities
-      .find(c => !ix.retrieve(c, 10, Nil, 0.0, None).onlineEdges.isEmpty)
+      .find(c => !ix.retrieve(c, 10, Nil, 0.0, _ => Map.empty).onlineEdges.isEmpty)
       .getOrElse(fail("no context gains online edges"))
 
     /** The service's filters around the DataFrame path, over the same graph. */
@@ -207,6 +207,265 @@ class GraftServiceSuite extends SparkFunSuite {
       .getOrElse(item, fail("credit learner has no state for the item"))
     assert(armState.alpha == 2.0 && armState.pulls == 1L) // 1.0 prior + 1.0 delta
     assert(store.exists("learner_credit"))
+  }
+
+  test("Service.feedback: invalid outcome rejects the batch with the reference error") {
+    val factors = Seq(("a", 1.0)).toDF("node_id", "factor")
+    val outcomes = Seq(("a", "accepted"), ("b", "maybe")).toDF("node_id", "outcome")
+    val res = graft.query.Service.feedback(factors, outcomes, "q-1")
+    assert(res.isLeft)
+    assert(res.left.toOption.get ==
+      "Invalid outcome 'maybe' for item 'b'. Must be one of: accepted, partial, rejected")
+    // a NULL outcome must also reject (SQL three-valued logic would
+    // otherwise let it slip past a plain !isin filter)
+    val withNull = Seq(("a", "accepted"), ("c", null)).toDF("node_id", "outcome")
+    val res2 = graft.query.Service.feedback(factors, withNull, "q-1b")
+    assert(res2.isLeft && res2.left.toOption.get.startsWith("Invalid outcome 'null'"))
+  }
+
+  test("Service.feedback: the first invalid row is named; tallies count every valid row") {
+    val factors = Seq(("a", 1.0)).toDF("node_id", "factor")
+    val twoBad = Seq(("a", "accepted"), ("b", "maybe"), ("c", null), ("d", "nope"))
+      .toDF("node_id", "outcome")
+    assert(graft.query.Service.feedback(factors, twoBad, "q-4").left.toOption.contains(
+      "Invalid outcome 'maybe' for item 'b'. Must be one of: accepted, partial, rejected"))
+    val nullFirst = Seq(("c", null), ("b", "maybe")).toDF("node_id", "outcome")
+    assert(graft.query.Service.feedback(factors, nullFirst, "q-4b").left.toOption.contains(
+      "Invalid outcome 'null' for item 'c'. Must be one of: accepted, partial, rejected"))
+    val ok = Seq(("a", "partial"), ("b", "partial"), ("c", "rejected")).toDF("node_id", "outcome")
+    val fb = graft.query.Service.feedback(factors, ok, "q-4c").fold(e => fail(e), identity)
+    assert((fb.outcomeCount, fb.accepted, fb.rejected, fb.partial) == ((3L, 0L, 1L, 2L)))
+  }
+
+  test("Service.feedback: factor deltas, tallies, and snapshot persistence") {
+    val factors = Seq(("a", 1.0), ("b", 1.0), ("c", 4.99)).toDF("node_id", "factor")
+    val outcomes = Seq(("a", "accepted"), ("a", "accepted"), ("b", "rejected"),
+      ("c", "accepted"), ("d", "partial")).toDF("node_id", "outcome")
+    val dir = java.nio.file.Files.createTempDirectory("graft-fb").toString
+    val store = new graft.store.SnapshotStore(dir)
+    val res = graft.query.Service.feedback(factors, outcomes, "q-2",
+      persistTo = Some((store, "factors")))
+    val fb = res.fold(e => fail(e), identity)
+    assert(fb.status == "recorded" && fb.queryId == "q-2")
+    assert(fb.outcomeCount == 5 && fb.accepted == 3 && fb.rejected == 1 && fb.partial == 1)
+    val got = fb.factors.as[(String, Double)].collect().toMap
+    assert(math.abs(got("a") - 1.2) < 1e-12) // +0.1 twice
+    assert(math.abs(got("b") - 0.95) < 1e-12) // −0.05
+    assert(got("c") == 5.0) // clamped at max
+    assert(math.abs(got("d") - 1.03) < 1e-12) // default 1.0 + 0.03
+    // persisted snapshot readable (St4 persist_on_update)
+    assert(store.read("factors").count() == 4)
+  }
+
+  test("feedback round re-ranks the next retrieval exactly as the factors imply") {
+    import graft.core.Embeddings
+    val qText = "feedback ranking probe"
+    val qv = Embeddings.embed(qText)
+    val perturbed = qv.clone(); perturbed(0) = perturbed(0) + 0.35f
+    val concepts = Seq(
+      ("web:Alpha", "Alpha", qv.toSeq), ("web:Beta", "Beta", perturbed.toSeq))
+      .toDF("id", "name", "embedding")
+    val edges = Seq.empty[(String, String, Double)]
+      .toDF("source_id", "target_id", "confidence")
+    val factors0 = Seq.empty[(String, Double)].toDF("node_id", "factor")
+
+    val before = graft.query.Retrieval.retrieve(concepts, edges, factors0, qText, topK = 2)
+      .select("id", "combined").as[(String, Double)].collect().toMap
+    assert(before("web:Alpha") > before("web:Beta")) // pure vec ordering
+
+    // 40 accepted outcomes for Beta → factor clamps at 5.0
+    val outcomes = (1 to 40).map(_ => ("web:Beta", "accepted")).toDF("node_id", "outcome")
+    val fb = graft.query.Service.feedback(factors0, outcomes, "q-3")
+      .fold(e => fail(e), identity)
+    val updatedFactors = fb.factors.as[(String, Double)].collect().toMap
+    assert(updatedFactors("web:Beta") == 5.0)
+
+    val after = graft.query.Retrieval.retrieve(concepts, edges, fb.factors, qText, topK = 2)
+      .select("id", "combined").as[(String, Double)].collect().toMap
+    // Beta's boosted teleportation factor flips the blended ranking
+    assert(after("web:Beta") > after("web:Alpha"))
+  }
+
+  /** A warehouse copy, a service over it (with the size rule at
+    * `rowLimit` rows when given) and the item ids of its first three
+    * contexts' queries.
+    */
+  private def feedbackService(prefix: String, rowLimit: Option[Int] = None)
+      : (SnapshotStore, GraftService, Seq[String]) = {
+    val st = warehouseCopy(prefix)
+    val s = rowLimit.fold(new GraftService(st))(GraftServiceTestAccess.withRowLimit(st, _))
+    (st, s, contexts.take(3).flatMap(c => s.query(c, topK = 10).items.select("id").as[String].collect())
+      .distinct)
+  }
+
+  /** A feedback call that must be recorded. */
+  private def rate(s: GraftService, qid: String, outcomes: Map[String, String]): Unit =
+    s.feedback(qid, outcomes).fold(e => fail(e), _ => ())
+
+  /** A stored factors table as a sorted multiset of rows, doubles as bits. */
+  private def factorsOf(st: SnapshotStore): Seq[String] =
+    bits(st.read("factors").select(col("node_id"), col("factor").cast("double")).collect().toSeq)
+      .map(_.toString).sorted
+
+  private val outcomeKinds = Seq("accepted", "rejected", "partial")
+
+  test("feedback caches no RDD: the persistent RDDs after 20 feedbacks are those after 1") {
+    val sc = spark.sparkContext
+    val (_, s, items) = feedbackService("graft-svc-fb-rdd")
+    def judge(i: Int): Unit = rate(s, s"q-$i", Map(items(i % items.length) -> outcomeKinds(i % 3)))
+    judge(0)
+    val after1 = sc.getPersistentRDDs.keySet
+    (1 until 20).foreach(judge)
+    assert((sc.getPersistentRDDs.keySet -- after1).isEmpty)
+  }
+
+  test("two threads × 10 feedbacks on one service lose no update") {
+    val (st, s, items) = feedbackService("graft-svc-fb-threads")
+    // thread t rates only the items at indices of parity t, so the serial
+    // fold of the 20 calls is the same in any interleaving
+    def calls(t: Int): Seq[Map[String, String]] = (0 until 10).map { i =>
+      Map(items(t + 2 * (i % 3)) -> outcomeKinds((i + t) % 3), items(t + 2 * (1 + i % 4)) -> "accepted")
+    }
+    val threads = (0 until 2).map(t => Future(calls(t).zipWithIndex.foreach { case (o, i) =>
+      rate(s, s"q-$t-$i", o)
+    }))
+    threads.foreach(Await.result(_, 300.seconds))
+    val serial = (calls(0) ++ calls(1)).foldLeft(Seq.empty[(String, Double)].toDF("node_id", "factor")) {
+      (f, o) => graft.query.Service.feedback(f, o.toSeq.toDF("node_id", "outcome"), "q-serial")
+        .fold(e => fail(e), _.factors)
+    }
+    assert(factorsOf(st) == bits(serial.collect().toSeq).map(_.toString).sorted)
+  }
+
+  test("feedback runs one Spark job, the commit, and the next query none") {
+    val sc = spark.sparkContext
+    val (_, s, items) = feedbackService("graft-svc-fb-jobs")
+    val group = "graft-svc-fb-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.ListenerBusTestAccess.drain(sc)
+      val before = jobs.get()
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusTestAccess.drain(sc)
+      jobs.get() - before
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(rate(s, "q-1", Map(items(0) -> "accepted", items(1) -> "rejected"))) == 1)
+      assert(jobsOf(s.query(contexts(1), topK = 10).items.collect()) == 0)
+      assert(jobsOf(rate(s, "q-2", Map(items(0) -> "partial"))) == 1)
+      assert(jobsOf(s.query(contexts.head, topK = 10).items.collect()) == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `calls` seeded random feedback calls through `s` over `st`, and the
+    * same calls through `Service.feedback` over a warehouse copy; both
+    * start from a factors table with rows near each clamp bound, out of
+    * range, NaN, null, a null id, a duplicate id and `filler` rows of
+    * unknown ids. After every call the stored tables are equal as
+    * multisets of bits, and `s.query` answers as `retrieveFull` over the
+    * reference's table does.
+    */
+  private def foldsAsServiceFeedback(st: SnapshotStore, s: GraftService, items: Seq[String], filler: Int,
+      calls: Int): Unit = {
+    val reference = warehouseCopy("graft-svc-fb-ref")
+    val (hi, lo, nan, none, unknown, dup) =
+      (items(0), items(1), items(2), items(3), "web:No Such Concept", "web:Duplicate Ghost")
+    // the duplicate id is not a concept: a seed listed twice fails PPR
+    val start = Seq(Row(hi, 4.93), Row(lo, 0.17), Row(nan, Double.NaN), Row(none, null),
+      Row(items(4), 7.0), Row(items(5), 0.01), Row(items(6), -3.0), Row(dup, 1.5), Row(dup, 0.2),
+      Row(null, 2.0), Row(null, null)) ++ (0 until filler).map(i => Row(s"web:Filler $i", 1.0))
+    val startFrame = spark.createDataFrame(start.asJava,
+      org.apache.spark.sql.types.StructType.fromDDL("node_id STRING, factor DOUBLE"))
+    for (t <- Seq(st, reference)) t.commitReplace("factors", startFrame, Seq.empty)
+    val graph = GraftServiceTestAccess.pprGraph(s)
+    val (concepts, edges, rules) = (reference.read("concepts"), reference.read("edges"), reference.read("rules"))
+
+    val pool = (items.take(12) :+ unknown :+ dup :+ null).toIndexedSeq
+    val rng = new scala.util.Random(20261019L)
+    var reachedHi, reachedLo = false
+    for (call <- 0 until calls) {
+      val drawn = rng.shuffle(pool).take(1 + rng.nextInt(4)).map(_ -> outcomeKinds(rng.nextInt(3)))
+      val outcomes = (drawn ++ (if (call % 2 == 0) Seq(hi -> "accepted", lo -> "rejected") else Nil)).toMap
+      val where = s"call $call: $outcomes"
+      val got = s.feedback(s"q-$call", outcomes).fold(e => fail(e), identity)
+      val want = graft.query.Service.feedback(reference.read("factors"),
+        outcomes.toSeq.toDF("node_id", "outcome"), s"q-$call", persistTo = Some((reference, "factors")))
+        .fold(e => fail(e), identity)
+      assert(got.factors.schema == want.factors.schema, where)
+      assert(bits(got.factors.collect().toSeq).map(_.toString).sorted ==
+        bits(want.factors.collect().toSeq).map(_.toString).sorted, where)
+      assert(factorsOf(st) == factorsOf(reference), where)
+      val stored = reference.read("factors").filter(col("node_id").isin(hi, lo)).as[(String, Double)].collect()
+      reachedHi ||= stored.contains(hi -> 5.0)
+      reachedLo ||= stored.contains(lo -> 0.1)
+
+      val ctx = contexts(call % contexts.size)
+      val out = Retrieval.retrieveFull(concepts, edges, reference.read("factors"), ctx, 10,
+        rules = Some(rules), prepared = Some(graph))
+      val gotQuery = s.query(ctx, topK = 10)
+      assert(bits(gotQuery.items.collect().toSeq) == bits(out.results.collect().toSeq), where)
+      val (gotRules, wantRules) = (gotQuery.rules.collect().toSeq, out.rules.collect().toSeq)
+      assert(gotRules.map(_.getDouble(3)) == wantRules.map(_.getDouble(3)), where)
+      assert(bits(gotRules).map(_.toString).sorted == bits(wantRules).map(_.toString).sorted, where)
+      assert(gotQuery.kgCoverage == out.kgCoverage, where)
+    }
+    assert(reachedHi && reachedLo)
+  }
+
+  test("feedback: the held factors fold as Service.feedback does (seeded random calls)") {
+    val (st, s, items) = feedbackService("graft-svc-fb-held")
+    foldsAsServiceFeedback(st, s, items, filler = 0, calls = 32)
+  }
+
+  test("feedback: a factors table at the size rule is rewritten as Service.feedback does") {
+    val limit = math.max(store.read("concepts").count(), store.read("rules").count()).toInt + 1
+    val (st, s, items) = feedbackService("graft-svc-fb-table", Some(limit))
+    assert(GraftServiceTestAccess.index(s).isDefined, "no driver index below the loop width")
+    foldsAsServiceFeedback(st, s, items, filler = limit, calls = 6)
+  }
+
+  test("feedback: another instance's feedback is seen by the next query and folded on") {
+    val (st, a, items) = feedbackService("graft-svc-fb-two")
+    val b = new GraftService(st)
+    rate(a, "q-a0", Map(items(1) -> "partial"))
+    val before = answer(a, contexts.head)
+    rate(b, "q-b", Map(items(0) -> "rejected", items(2) -> "accepted"))
+    val after = answer(a, contexts.head)
+    assert(after != before)
+    assert(after == answer(new GraftService(st), contexts.head))
+    rate(a, "q-a1", Map(items(0) -> "accepted"))
+    val stored = st.read("factors").as[(String, Double)].collect().toMap
+    assert(stored == Map(items(0) -> (1.0 - 0.05 + 0.1), items(1) -> (1.0 + 0.03), items(2) -> (1.0 + 0.1)))
+  }
+
+  test("index: too many rule rows fall back to Retrieval.retrieveFull with the same answers") {
+    val st = warehouseCopy("graft-svc-rules")
+    val nConcepts = st.read("concepts").count()
+    val rules0 = st.read("rules")
+    val copies = (nConcepts / rules0.count() + 1).toInt
+    st.commitReplace("rules", (1 to copies).foldLeft(rules0) { (all, c) =>
+      all.unionByName(rules0.withColumn("id", concat(col("id"), lit(s"#$c"))))
+    }.localCheckpoint(), Seq.empty)
+    val limit = nConcepts.toInt + 1
+    assert(st.read("rules").count() >= limit)
+    val fallback = GraftServiceTestAccess.withRowLimit(st, limit)
+    val indexed = new GraftService(st)
+    assert(GraftServiceTestAccess.index(fallback).isEmpty && GraftServiceTestAccess.index(indexed).isDefined)
+    rate(indexed, "q-rules", Map(indexed.query(contexts.head).items.select("id").as[String].head() -> "accepted"))
+    for (ctx <- contexts) {
+      val (got, want) = (fallback.query(ctx, topK = 10), indexed.query(ctx, topK = 10))
+      assert(bits(got.items.collect().toSeq) == bits(want.items.collect().toSeq), ctx)
+      val (gotRules, wantRules) = (got.rules.collect().toSeq, want.rules.collect().toSeq)
+      assert(gotRules.map(_.getDouble(3)) == wantRules.map(_.getDouble(3)), ctx)
+      assert(bits(gotRules).map(_.toString).sorted == bits(wantRules).map(_.toString).sorted, ctx)
+      assert(got.kgCoverage == want.kgCoverage, ctx)
+    }
   }
 
   test("GraftCli: query/stats/feedback/project command surface over the warehouse") {

@@ -3,8 +3,8 @@ package graft
 import graft.extract.DetExtractor
 
 /** Round-3 regression tests: repo hygiene (no control bytes in source),
-  * the dedupMentions role tie-break, Service.feedback, retrieveFull, the
-  * Thompson posterior, VectorIndex merge-on-read and StreamMain.
+  * the dedupMentions role tie-break, retrieveFull, the Thompson
+  * posterior, VectorIndex merge-on-read and StreamMain.
   */
 class Round3Suite extends SparkFunSuite {
   import spark.implicits._
@@ -43,83 +43,6 @@ class Round3Suite extends SparkFunSuite {
     val kept4 = DetExtractor.dedupMentions(Vector(
       m("Redis", 0.7, "generalizable", 0), m("Redis", 0.7, "generalizable", 10)))
     assert(kept4.head.begin == 0)
-  }
-
-  test("Service.feedback: invalid outcome rejects the batch with the reference error") {
-    val factors = Seq(("a", 1.0)).toDF("node_id", "factor")
-    val outcomes = Seq(("a", "accepted"), ("b", "maybe")).toDF("node_id", "outcome")
-    val res = graft.query.Service.feedback(factors, outcomes, "q-1")
-    assert(res.isLeft)
-    assert(res.left.toOption.get ==
-      "Invalid outcome 'maybe' for item 'b'. Must be one of: accepted, partial, rejected")
-    // a NULL outcome must also reject (SQL three-valued logic would
-    // otherwise let it slip past a plain !isin filter)
-    val withNull = Seq(("a", "accepted"), ("c", null)).toDF("node_id", "outcome")
-    val res2 = graft.query.Service.feedback(factors, withNull, "q-1b")
-    assert(res2.isLeft && res2.left.toOption.get.startsWith("Invalid outcome 'null'"))
-  }
-
-  test("Service.feedback: the first invalid row is named; tallies count every valid row") {
-    val factors = Seq(("a", 1.0)).toDF("node_id", "factor")
-    val twoBad = Seq(("a", "accepted"), ("b", "maybe"), ("c", null), ("d", "nope"))
-      .toDF("node_id", "outcome")
-    assert(graft.query.Service.feedback(factors, twoBad, "q-4").left.toOption.contains(
-      "Invalid outcome 'maybe' for item 'b'. Must be one of: accepted, partial, rejected"))
-    val nullFirst = Seq(("c", null), ("b", "maybe")).toDF("node_id", "outcome")
-    assert(graft.query.Service.feedback(factors, nullFirst, "q-4b").left.toOption.contains(
-      "Invalid outcome 'null' for item 'c'. Must be one of: accepted, partial, rejected"))
-    val ok = Seq(("a", "partial"), ("b", "partial"), ("c", "rejected")).toDF("node_id", "outcome")
-    val fb = graft.query.Service.feedback(factors, ok, "q-4c").fold(e => fail(e), identity)
-    assert((fb.outcomeCount, fb.accepted, fb.rejected, fb.partial) == ((3L, 0L, 1L, 2L)))
-  }
-
-  test("Service.feedback: factor deltas, tallies, and snapshot persistence") {
-    val factors = Seq(("a", 1.0), ("b", 1.0), ("c", 4.99)).toDF("node_id", "factor")
-    val outcomes = Seq(("a", "accepted"), ("a", "accepted"), ("b", "rejected"),
-      ("c", "accepted"), ("d", "partial")).toDF("node_id", "outcome")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fb").toString
-    val store = new graft.store.SnapshotStore(dir)
-    val res = graft.query.Service.feedback(factors, outcomes, "q-2",
-      persistTo = Some((store, "factors")))
-    val fb = res.fold(e => fail(e), identity)
-    assert(fb.status == "recorded" && fb.queryId == "q-2")
-    assert(fb.outcomeCount == 5 && fb.accepted == 3 && fb.rejected == 1 && fb.partial == 1)
-    val got = fb.factors.as[(String, Double)].collect().toMap
-    assert(math.abs(got("a") - 1.2) < 1e-12) // +0.1 twice
-    assert(math.abs(got("b") - 0.95) < 1e-12) // −0.05
-    assert(got("c") == 5.0) // clamped at max
-    assert(math.abs(got("d") - 1.03) < 1e-12) // default 1.0 + 0.03
-    // persisted snapshot readable (St4 persist_on_update)
-    assert(store.read("factors").count() == 4)
-  }
-
-  test("feedback round re-ranks the next retrieval exactly as the factors imply") {
-    import graft.core.Embeddings
-    val qText = "feedback ranking probe"
-    val qv = Embeddings.embed(qText)
-    val perturbed = qv.clone(); perturbed(0) = perturbed(0) + 0.35f
-    val concepts = Seq(
-      ("web:Alpha", "Alpha", qv.toSeq), ("web:Beta", "Beta", perturbed.toSeq))
-      .toDF("id", "name", "embedding")
-    val edges = Seq.empty[(String, String, Double)]
-      .toDF("source_id", "target_id", "confidence")
-    val factors0 = Seq.empty[(String, Double)].toDF("node_id", "factor")
-
-    val before = graft.query.Retrieval.retrieve(concepts, edges, factors0, qText, topK = 2)
-      .select("id", "combined").as[(String, Double)].collect().toMap
-    assert(before("web:Alpha") > before("web:Beta")) // pure vec ordering
-
-    // 40 accepted outcomes for Beta → factor clamps at 5.0
-    val outcomes = (1 to 40).map(_ => ("web:Beta", "accepted")).toDF("node_id", "outcome")
-    val fb = graft.query.Service.feedback(factors0, outcomes, "q-3")
-      .fold(e => fail(e), identity)
-    val updatedFactors = fb.factors.as[(String, Double)].collect().toMap
-    assert(updatedFactors("web:Beta") == 5.0)
-
-    val after = graft.query.Retrieval.retrieve(concepts, edges, fb.factors, qText, topK = 2)
-      .select("id", "combined").as[(String, Double)].collect().toMap
-    // Beta's boosted teleportation factor flips the blended ranking
-    assert(after("web:Beta") > after("web:Alpha"))
   }
 
   test("retrieveFull bundles rules for activated concepts; BFS fallback selectable") {
