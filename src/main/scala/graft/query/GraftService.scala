@@ -21,9 +21,10 @@ import scala.collection.mutable
   * `index`) is also held on the driver, and so is its `factors` table
   * below the same size rule (see `factorsNow`): each query and each
   * explore runs there with no Spark job, caching no RDD and taking no
-  * `Loops` lock, and each feedback runs one job, the commit of the new
-  * factors. A larger snapshot plans every query and explore against those
-  * checkpointed leaves and rewrites the factors with `Service.feedback`.
+  * `Loops` lock, and so does each feedback: the store writes the new
+  * factors from the driver. A larger snapshot plans every query and
+  * explore against those checkpointed leaves and rewrites the factors
+  * with `Service.feedback`.
   *
   * `rowLimit` is the size rule's bound, `Loops.RowsPerPartition` outside
   * tests.
@@ -114,10 +115,11 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
 
   /** The factor update of one feedback on a service with an `index`,
     * under `factorsLock`: held rows are folded on the driver and committed
-    * as one file, a larger table is rewritten as `Service.feedback` does;
-    * the new snapshot is then published.
+    * as a local frame, which the store writes from the driver as one file
+    * with no Spark job; a larger table is rewritten as `Service.feedback`
+    * does, from `outcomes`. The new snapshot is then published.
     */
-  private def commitFactors(outcomes: DataFrame, rows: Seq[Row]): DataFrame =
+  private def commitFactors(outcomes: => DataFrame, rows: Seq[Row]): DataFrame =
     factorsLock.synchronized {
       val at = factorsNow()
       at.held match {
@@ -130,7 +132,7 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
           }
           val updated = held.updated(deltas)
           val frame = updated.toFrame
-          val snap = store.commitReplace("factors", frame.coalesce(1), Seq.empty)
+          val snap = store.commitReplace("factors", frame, Seq.empty)
           factorsAt = Some(FactorsAt(Some(snap.id), Some(updated).filter(_.rows.length < rowLimit)))
           frame
         case None =>
@@ -219,8 +221,10 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * the credit learner's posteriors (learner.apply_credit_deltas,
     * service.py:1653-1655).
     *
-    * With the `index`, the factor update is `commitFactors`: with the
-    * factors held, the commit is the update's only Spark job and
+    * With the `index`, the outcomes are validated and tallied as the
+    * map's rows, the factor update is `commitFactors`, and the outcomes
+    * frame is built only when credit propagation or a table too large to
+    * hold reads it: with the factors held, the call runs no Spark job and
     * `FeedbackResult.factors` is a local frame of the new rows.
     */
   def feedback(
@@ -228,12 +232,13 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
       outcomes: Map[String, String],
       propagateCredit: Boolean = false
   ): Either[String, Service.FeedbackResult] = {
-    val df = outcomes.toSeq.toDF("node_id", "outcome")
+    lazy val df = outcomes.toSeq.toDF("node_id", "outcome")
     val creditEdges = if (propagateCredit) Some(edges) else None
     val creditConcepts = if (propagateCredit) Some(concepts) else None
     val res = index match {
       case Some(_) =>
-        Service.record(df, queryId, creditEdges, creditConcepts)(commitFactors(df, _))
+        val rows = outcomes.toSeq.map { case (id, o) => Row(id, o) }
+        Service.record(rows, df, queryId, creditEdges, creditConcepts)(commitFactors(df, _))
       case None =>
         Service.feedback(factors, df, queryId, persistTo = Some((store, "factors")),
           creditEdges = creditEdges, creditConcepts = creditConcepts)

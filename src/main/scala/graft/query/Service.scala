@@ -102,7 +102,8 @@ object Service {
         */
       creditConcepts: Option[DataFrame] = None
   ): Either[String, FeedbackResult] =
-    record(outcomes, queryId, creditEdges, creditConcepts)(_ => rewriteFactors(factors, outcomes, persistTo))
+    record(collectOutcomesBounded(outcomes.select(col("node_id"), col("outcome"))), outcomes, queryId,
+      creditEdges, creditConcepts)(_ => rewriteFactors(factors, outcomes, persistTo))
 
   /** `EdgePromotion.updateFactors`, checkpointed and, with `persistTo`,
     * committed as the table's new snapshot.
@@ -118,20 +119,20 @@ object Service {
     updated
   }
 
-  /** [[feedback]] with the factor update given as `update`: it receives
-    * the validated (node_id, outcome) rows, commits the updated factors
-    * wherever they are kept and returns them. Validation, tallies, credit
-    * and the events are the same for every caller.
+  /** [[feedback]] over the (node_id, outcome) `rows`, with the factor
+    * update given as `update`: it receives the validated rows, commits the
+    * updated factors wherever they are kept and returns them. `outcomes`
+    * is the same rows as a frame, built only for credit propagation.
+    * Validation, tallies, credit and the events are the same for every
+    * caller; the first invalid row in `rows` order is the one named.
     */
   private[query] def record(
-      outcomes: DataFrame,
+      rows: Seq[org.apache.spark.sql.Row],
+      outcomes: => DataFrame,
       queryId: String,
       creditEdges: Option[DataFrame],
       creditConcepts: Option[DataFrame]
   )(update: Seq[org.apache.spark.sql.Row] => DataFrame): Either[String, FeedbackResult] = {
-    // one bounded collect answers both the validation and the tallies;
-    // the first invalid row in collect order is the one named
-    val rows = collectOutcomesBounded(outcomes.select(col("node_id"), col("outcome")))
     val invalid = rows.find(r => r.isNullAt(1) || !AllowedOutcomes.contains(r.getString(1)))
     if (invalid.nonEmpty) {
       val r = invalid.get

@@ -1,8 +1,15 @@
 package graft.store
 
+import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Iceberg-style snapshot-committed tables over partitioned Parquet.
   *
@@ -16,18 +23,29 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * {{{
   *   <root>/<table>/data/batch=<batchId>/part-*.parquet   (data files)
   *   <root>/<table>/_snapshots/v<N>.json                  (snapshot manifest)
-  *   <root>/<table>/_snapshots/LATEST                     (atomic pointer)
+  *   <root>/<table>/_snapshots/LATEST                     (snapshot pointer)
   * }}}
   *
   * A snapshot manifest lists EVERY live batch directory (full snapshot, like
   * an Iceberg manifest list), its parent snapshot id, and the set of input
-  * partitions already ingested. Commit protocol: write data → write
-  * v<N>.json to a temp name → rename (atomic on a real FS) → overwrite
-  * LATEST via temp+rename. A killed run leaves either no new snapshot (data
-  * files are orphans, invisible to readers) or a complete one — this is the
-  * distributed analog of the reference's checkpoint/restore
+  * partitions already ingested. Commit protocol, one sequence for append,
+  * replace and rollback: take the next id N from the latest snapshot →
+  * write the batch to `batch=N` → write v<N>.json to a temp name and
+  * rename it into place → write LATEST = N the same way. A frame whose
+  * rows are already on the driver (its plan optimises to one
+  * `LocalRelation`) is written from the driver with Spark's own Parquet
+  * writer, to a `_`-prefixed temp file renamed to its `part-` name; any
+  * other frame is written by a Spark job.
+  *
+  * A killed run leaves either no new snapshot (data files are orphans,
+  * invisible to readers) or a complete one — this is the distributed
+  * analog of the reference's checkpoint/restore
   * (src/qortex/core/memory.py:446-494) and its manifest auto-save recovery
-  * (src/qortex/cli/ingest.py:210-222).
+  * (src/qortex/cli/ingest.py:210-222). A reader that finds no LATEST
+  * (a crash inside the flip, or a file system that must delete the old
+  * pointer before renaming the new one) reads the highest v<N>.json; that
+  * manifest was renamed into place before the pointer moved, so the
+  * fallback is never older than the pointer it stands in for.
   */
 object SnapshotStore {
   final case class Snapshot(
@@ -104,10 +122,12 @@ final class SnapshotStore(val root: String)(implicit spark: SparkSession) {
     Snapshot(longField("id"), longField("parent"), arrField("batches"), arrField("input_partitions"))
   }
 
-  /** Overwrite-rename (no delete-before-rename window): FileContext.rename
-    * with OVERWRITE is atomic on a real FS, so the target always holds
-    * either the old or the new content. Even if a crash were to leave no
-    * LATEST, `latest()` recovers from the max v<N>.json manifest.
+  /** Write `content` to a temp file and rename it onto `path`, so a reader
+    * never sees a partial file. A file system that refuses to rename onto
+    * an existing file (HDFS, and some local file system wrappers) has the
+    * target deleted and the rename retried; a second refusal throws. In
+    * that delete-to-rename gap there is no LATEST, and `latest()` reads
+    * the highest manifest, which is already the new one.
     */
   private def writeAtomic(path: Path, content: String): Unit = {
     val tmp = new Path(path.getParent, path.getName + ".tmp-" + System.nanoTime())
@@ -115,8 +135,8 @@ final class SnapshotStore(val root: String)(implicit spark: SparkSession) {
     val out = f.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    val ctx = org.apache.hadoop.fs.FileContext.getFileContext(path.toUri, hadoopConf)
-    ctx.rename(tmp, path, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    if (!f.rename(tmp, path) && !(f.delete(path, false) && f.rename(tmp, path)))
+      throw new IOException(s"cannot rename $tmp to $path")
   }
 
   private def readFile(path: Path): String = {
@@ -153,17 +173,21 @@ final class SnapshotStore(val root: String)(implicit spark: SparkSession) {
   }
 
   /** Latest committed snapshot, if any. If the LATEST pointer is missing
-    * (e.g. a crash in an older delete-before-rename writer), recover from
-    * the max v<N>.json manifest instead of treating the table as empty —
-    * otherwise snapshot ids would restart at 0 and overwrite batch=00000.
+    * (a crash inside the flip, or the delete-to-rename gap of `writeAtomic`)
+    * or is replaced while it is read (it vanishes after `exists`, or its
+    * checksum sidecar belongs to the other version), recover from the max
+    * v<N>.json manifest instead of treating the table as empty — otherwise
+    * snapshot ids would restart at 0 and overwrite batch=00000. That
+    * manifest is never older than the pointer, so a reader never goes back
+    * a snapshot.
     */
   def latest(table: String): Option[Snapshot] = {
-    val latestPtr = new Path(snapDir(table), "LATEST")
-    val f = fs(latestPtr)
-    if (f.exists(latestPtr)) {
-      val n = readFile(latestPtr).trim.toLong
-      Some(fromJson(readFile(new Path(snapDir(table), s"v$n.json"))))
-    } else snapshotIds(table).lastOption.flatMap(snapshot(table, _))
+    val ptr = new Path(snapDir(table), "LATEST")
+    val pointed =
+      try if (fs(ptr).exists(ptr)) Some(readFile(ptr).trim.toLong) else None
+      catch { case _: FileNotFoundException | _: ChecksumException => None }
+    pointed.map(n => fromJson(readFile(new Path(snapDir(table), s"v$n.json"))))
+      .orElse(snapshotIds(table).lastOption.flatMap(snapshot(table, _)))
   }
 
   /** Input partitions already ingested per the latest snapshot — resume
@@ -175,47 +199,75 @@ final class SnapshotStore(val root: String)(implicit spark: SparkSession) {
   /** Append a batch of rows for `inputPartitions` and commit a snapshot.
     * The write is invisible to readers until LATEST flips.
     */
-  def commitAppend(table: String, df: DataFrame, inputPartitions: Seq[String]): Snapshot = {
-    val prev = latest(table)
-    val nextId = prev.map(_.id + 1).getOrElse(0L)
-    val batchName = f"batch=$nextId%05d"
-    val batchPath = new Path(dataDir(table), batchName)
-
-    df.write.mode(SaveMode.Overwrite).parquet(batchPath.toString)
-
-    val snap = Snapshot(
-      id = nextId,
-      parent = prev.map(_.id).getOrElse(-1L),
-      batches = prev.map(_.batches).getOrElse(Seq.empty) :+ batchName,
-      inputPartitions =
-        (prev.map(_.inputPartitions).getOrElse(Seq.empty) ++ inputPartitions).distinct)
-
-    val f = fs(snapDir(table))
-    if (!f.exists(snapDir(table))) f.mkdirs(snapDir(table))
-    writeAtomic(new Path(snapDir(table), s"v$nextId.json"), toJson(snap))
-    writeAtomic(new Path(snapDir(table), "LATEST"), nextId.toString)
-    snap
-  }
+  def commitAppend(table: String, df: DataFrame, inputPartitions: Seq[String]): Snapshot =
+    commit(table, Some(df)) { prev =>
+      (prev.fold(Seq.empty[String])(_.batches), ingested(prev, inputPartitions))
+    }
 
   /** Replace table contents wholesale (for derived tables rebuilt per
     * snapshot, e.g. concepts after canonicalization).
     */
-  def commitReplace(table: String, df: DataFrame, inputPartitions: Seq[String]): Snapshot = {
+  def commitReplace(table: String, df: DataFrame, inputPartitions: Seq[String]): Snapshot =
+    commit(table, Some(df))(prev => (Seq.empty, ingested(prev, inputPartitions)))
+
+  private def ingested(prev: Option[Snapshot], inputPartitions: Seq[String]): Seq[String] =
+    (prev.fold(Seq.empty[String])(_.inputPartitions) ++ inputPartitions).distinct
+
+  /** The one commit sequence: the next id after the latest snapshot, the
+    * batch `df` (when given) written to `batch=<id>`, then the manifest
+    * listing `live(latest)`'s batches followed by that batch and its input
+    * partitions, then the pointer.
+    */
+  private def commit(table: String, df: Option[DataFrame])(
+      live: Option[Snapshot] => (Seq[String], Seq[String])): Snapshot = {
     val prev = latest(table)
-    val nextId = prev.map(_.id + 1).getOrElse(0L)
-    val batchName = f"batch=$nextId%05d"
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(dataDir(table), batchName).toString)
-    val snap = Snapshot(
-      id = nextId,
-      parent = prev.map(_.id).getOrElse(-1L),
-      batches = Seq(batchName),
-      inputPartitions =
-        (prev.map(_.inputPartitions).getOrElse(Seq.empty) ++ inputPartitions).distinct)
+    val id = prev.fold(0L)(_.id + 1)
+    val batch = f"batch=$id%05d"
+    df.foreach(writeBatch(_, new Path(dataDir(table), batch)))
+    val (batches, inputPartitions) = live(prev)
+    val snap = Snapshot(id, prev.fold(-1L)(_.id), batches ++ df.map(_ => batch), inputPartitions)
     val f = fs(snapDir(table))
     if (!f.exists(snapDir(table))) f.mkdirs(snapDir(table))
-    writeAtomic(new Path(snapDir(table), s"v$nextId.json"), toJson(snap))
-    writeAtomic(new Path(snapDir(table), "LATEST"), nextId.toString)
+    writeAtomic(new Path(snapDir(table), s"v$id.json"), toJson(snap))
+    writeAtomic(new Path(snapDir(table), "LATEST"), id.toString)
     snap
+  }
+
+  /** Write `df` as the batch directory `dir`, replacing whatever a killed
+    * run left there. Rows already on the driver — the analysed plan reads
+    * only local relations and optimises to one — are written from the
+    * driver by Spark's Parquet writer as one file, with no Spark job;
+    * every other frame is written by `df.write`.
+    */
+  private def writeBatch(df: DataFrame, dir: Path): Unit =
+    Some(df.queryExecution).filter(_.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+      .map(_.optimizedPlan) match {
+      case Some(rel: LocalRelation) => writeLocal(rel, dir)
+      case _ => df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+    }
+
+  /** `rel`'s rows as one Parquet file in `dir`, checked and encoded as a
+    * Spark write task would: the schema checks of a file write, then
+    * `ParquetFileFormat`'s writer factory under the session's conf. The
+    * file is written under a `_` name that readers skip, then renamed.
+    */
+  private def writeLocal(rel: LocalRelation, dir: Path): Unit = {
+    val schema = DataTypeUtils.fromAttributes(rel.output)
+    val format = new ParquetFileFormat()
+    DataSource.validateSchema(format.toString, schema, spark.sessionState.conf)
+    DataSourceUtils.verifySchema(format, schema)
+    DataSourceUtils.checkFieldNames(format, schema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}${factory.getFileExtension(task)}"
+    val (tmp, file) = (new Path(dir, "_" + name), new Path(dir, name))
+    val f = fs(dir)
+    f.delete(dir, true)
+    val out = factory.newInstance(tmp.toString, schema, task)
+    try rel.data.foreach(out.write)
+    finally out.close()
+    if (!f.rename(tmp, file)) throw new IOException(s"cannot rename $tmp to $file")
   }
 
   /** Read the latest committed snapshot of a table (reader isolation: only
@@ -248,12 +300,10 @@ final class SnapshotStore(val root: String)(implicit spark: SparkSession) {
     */
   def rollback(table: String, id: Long): Snapshot = {
     val target = snapshot(table, id).getOrElse(sys.error(s"no snapshot v$id for $table"))
-    val prev = latest(table).getOrElse(sys.error(s"no snapshots for $table"))
-    val nextId = prev.id + 1
-    val snap = Snapshot(nextId, prev.id, target.batches, target.inputPartitions)
-    writeAtomic(new Path(snapDir(table), s"v$nextId.json"), toJson(snap))
-    writeAtomic(new Path(snapDir(table), "LATEST"), nextId.toString)
-    snap
+    commit(table, None) { prev =>
+      if (prev.isEmpty) sys.error(s"no snapshots for $table")
+      (target.batches, target.inputPartitions)
+    }
   }
 
   /** Batch-level diff between two retained snapshots: (added, removed). */

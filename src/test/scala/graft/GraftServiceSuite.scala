@@ -309,7 +309,7 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(factorsOf(st) == bits(serial.collect().toSeq).map(_.toString).sorted)
   }
 
-  test("feedback runs one Spark job, the commit, and the next query none") {
+  test("feedback runs no Spark job, and the next query none") {
     val sc = spark.sparkContext
     val (_, s, items) = feedbackService("graft-svc-fb-jobs")
     val group = "graft-svc-fb-jobs"
@@ -328,11 +328,28 @@ class GraftServiceSuite extends SparkFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      assert(jobsOf(rate(s, "q-1", Map(items(0) -> "accepted", items(1) -> "rejected"))) == 1)
+      assert(jobsOf(rate(s, "q-1", Map(items(0) -> "accepted", items(1) -> "rejected"))) == 0)
       assert(jobsOf(s.query(contexts(1), topK = 10).items.collect()) == 0)
-      assert(jobsOf(rate(s, "q-2", Map(items(0) -> "partial"))) == 1)
+      assert(jobsOf(rate(s, "q-2", Map(items(0) -> "partial"))) == 0)
       assert(jobsOf(s.query(contexts.head, topK = 10).items.collect()) == 0)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("feedback: an invalid outcome is rejected with the reference error, naming the first in map order") {
+    val (st, s, items) = feedbackService("graft-svc-fb-invalid")
+    rate(s, "q-0", Map(items(0) -> "accepted"))
+    val committed = st.latest("factors").map(_.id)
+    // more than four entries: a hash map, whose iteration order names the row
+    val outcomes = Map(items(0) -> "accepted", items(1) -> "maybe", items(2) -> null,
+      items(3) -> "partial", items(4) -> "nope", items(5) -> "rejected")
+    val want = graft.query.Service.feedback(st.read("factors"), outcomes.toSeq.toDF("node_id", "outcome"), "q-1")
+    val got = s.feedback("q-1", outcomes)
+    assert(got.left.toOption.exists(_.matches(
+      "Invalid outcome '(maybe|null|nope)' for item '.*'\\. Must be one of: accepted, partial, rejected")))
+    assert(got.left.toOption == want.left.toOption)
+    assert(s.feedback("q-2", Map(items(1) -> "maybe")).left.toOption.contains(
+      s"Invalid outcome 'maybe' for item '${items(1)}'. Must be one of: accepted, partial, rejected"))
+    assert(st.latest("factors").map(_.id) == committed && s.feedbackCount == 1)
   }
 
   /** `calls` seeded random feedback calls through `s` over `st`, and the
