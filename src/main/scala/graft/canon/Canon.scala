@@ -1,5 +1,6 @@
 package graft.canon
 
+import graft.core.Loops.release
 import graft.core.TextSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +19,8 @@ import org.apache.spark.sql.functions._
   * CC is large-star/small-star over DataFrame edge sets checkpointed each
   * round ([[connectedComponents]]): O(log n) rounds, stopping when the
   * edges form a star forest, tested with one aggregation — counts only, no
-  * per-row driver work.
+  * per-row driver work. Each round's shuffles plan at the session width,
+  * which AQE coalesces on a small edge set.
   */
 object Canon {
 
@@ -135,7 +137,8 @@ object Canon {
     * has exactly one edge and no target is itself a source. Each edge then
     * points a node at its component minimum. A graph still not a star
     * forest after `MaxRounds` rounds throws rather than return labels that
-    * are not minima.
+    * are not minima. Each round releases the edges it supersedes; the
+    * labels read only the pair checkpoint and the final edges.
     */
   def connectedComponents(pairs: DataFrame)(implicit spark: SparkSession): DataFrame =
     componentsWithRounds(pairs)._1
@@ -151,19 +154,15 @@ object Canon {
       .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
       .distinct()
       .localCheckpoint()
-    val (nEdges, star0) = starForest(edges)
-    var star = star0
     var rounds = 0
-    // shuffle width sized to the measured edge set for the whole loop
-    graft.core.Loops.withShuffleWidth(spark, nEdges) {
-      while (!star) {
-        if (rounds == MaxRounds)
-          throw new IllegalStateException(
-            s"connectedComponents: edges are not a star forest after $MaxRounds rounds")
-        edges = smallStar(largeStar(edges)).localCheckpoint()
-        star = starForest(edges)._2
-        rounds += 1
-      }
+    while (!starForest(edges)) {
+      if (rounds == MaxRounds)
+        throw new IllegalStateException(
+          s"connectedComponents: edges are not a star forest after $MaxRounds rounds")
+      val next = smallStar(largeStar(edges)).localCheckpoint()
+      release(edges)
+      edges = next
+      rounds += 1
     }
     val labels = p.select(col("a").as("id")).union(p.select(col("b").as("id"))).distinct()
       .join(edges.withColumnRenamed("a", "id"), Seq("id"), "left")
@@ -171,18 +170,13 @@ object Canon {
     (labels, rounds)
   }
 
-  /** (edge count, whether the oriented edges form a star forest) in one
-    * aggregation.
-    */
-  private def starForest(e: DataFrame): (Long, Boolean) = {
-    val r = e.select(col("a").as("v"), lit(1L).as("out"), lit(false).as("in"))
+  /** Whether the oriented edges form a star forest, in one aggregation. */
+  private def starForest(e: DataFrame): Boolean =
+    e.select(col("a").as("v"), lit(1L).as("out"), lit(false).as("in"))
       .union(e.select(col("b").as("v"), lit(0L), lit(true)))
       .groupBy("v").agg(sum("out").as("out"), max("in").as("in"))
-      .agg(coalesce(sum("out"), lit(0L)),
-        count(when(col("out") > 1 || (col("out") > 0 && col("in")), 1)))
-      .head()
-    (r.getLong(0), r.getLong(1) == 0L)
-  }
+      .agg(count(when(col("out") > 1 || (col("out") > 0 && col("in")), 1)))
+      .head().getLong(0) == 0L
 
   /** (v, u) → (v, m(u)). One row per input edge, so duplicates are left
     * for [[smallStar]]'s `distinct`.

@@ -1,60 +1,26 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Shared discipline for iterative DataFrame loops (PPR / CC / BFS): the
-  * session's `spark.sql.shuffle.partitions` is sized for corpus-scale
-  * stages, so a 25-round loop over a small graph pays a fleet of
-  * mostly-empty tasks per round. Scope the shuffle width to the MEASURED
-  * loop input (~100k rows per partition) for the body's duration: a
-  * retrieval-sized graph runs each round in one task, a 10⁹-edge graph
-  * still gets real-cluster width.
-  *
-  * Contract: every frame the body publishes to callers must be
-  * checkpointed/materialized inside the body — the width is restored on
-  * exit, and only lazily-planned downstream shuffles would see it.
-  *
-  * Concurrency: the session conf is GLOBAL to the SparkSession, so two
-  * concurrent loops on one session (exactly what a multi-query
-  * GraftService invites) would race — loop B could plan corpus-scale
-  * shuffles at loop A's width, or A's restore could clobber B's scope. A
-  * JVM-wide lock serializes every scoped window: loops on small graphs
-  * (the only case that mutates the conf — `parts < prev`) run one at a
-  * time, which costs little because those are precisely the fast loops.
-  * Loops whose measured input already needs the full session width still
-  * take the lock (they must not plan while a narrow window is open) but
-  * never mutate the conf. Queries OUTSIDE Loops planned on another thread
-  * are not protected — the service routes every iterative algorithm
-  * through here, and plain one-shot queries are AQE-coalesced anyway.
+/** What the iterative DataFrame loops (PPR / CC / BFS) share. They plan at
+  * the session's shuffle width, which AQE coalesces to one reduce partition
+  * on a small graph; where a loop needs a width of its own it repartitions
+  * its data (`Ppr.runAdj`). Nothing here changes a session conf.
   */
 object Loops {
 
+  /** The size rule: an input of fewer rows is small enough for one task,
+    * and for the driver (the PPR `DriverGraph`, `SnapshotIndex`, the held
+    * factors of `GraftService`).
+    */
   val RowsPerPartition = 100000L
 
-  /** One lock per JVM, not per session: `spark.newSession()` clones share
-    * the conf object's underlying SQLConf only per-session, but a single
-    * service commonly funnels all work through one session — a global
-    * lock is the conservative choice and uncontended in the common case.
+  /** Drop the cached blocks of a checkpointed frame once nothing returned
+    * reads them. A frame that is not itself a checkpoint is left alone.
     */
-  private val widthLock = new java.util.concurrent.locks.ReentrantLock()
-
-  /** Platform variants allow non-numeric widths (e.g. "auto"); skip
-    * scoping for those rather than throw mid-loop.
-    */
-  private[graft] def parseWidth(s: String): Option[Int] =
-    scala.util.Try(s.trim.toInt).toOption
-
-  def withShuffleWidth[T](spark: SparkSession, measuredRows: Long)(body: => T): T = {
-    val conf = "spark.sql.shuffle.partitions"
-    val parts = math.max(1L, measuredRows / RowsPerPartition + 1L).toInt
-    widthLock.lock()
-    try {
-      val prevStr = spark.conf.get(conf)
-      val prev = parseWidth(prevStr)
-      val shrink = prev.exists(parts < _)
-      if (shrink) spark.conf.set(conf, parts.toString)
-      try body
-      finally if (shrink) spark.conf.set(conf, prevStr)
-    } finally widthLock.unlock()
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 }

@@ -1,10 +1,10 @@
 package graft.graph
 
 import graft.core.Loops
+import graft.core.Loops.release
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
@@ -39,12 +39,12 @@ import scala.collection.mutable
   *     does in milliseconds. The CSR is bounded by the same constant —
   *     < 100k adjacency rows, a few MB of arrays — and a query service
   *     holds it once (GraftService.pprGraph). A run collects only its
-  *     seeds and extra edges and never scopes the session's shuffle width,
-  *     so it does not take the JVM-wide `Loops` lock.
+  *     seeds and extra edges.
   *   - at or above it the adjacency stays distributed (`DistributedGraph`)
-  *     and the loop runs as DataFrame joins at the loop's scoped width:
-  *     ranks ⋈ edges (shuffle on src) → groupBy(dst).sum → join
-  *     personalization, checkpointed once per block of iterations.
+  *     and the loop runs as DataFrame joins over the adjacency
+  *     repartitioned on src to the loop's width: ranks ⋈ edges →
+  *     groupBy(dst).sum → join personalization, checkpointed once per
+  *     block of iterations.
   *
   * Both run blocks of `BlockSize` iterations with one Σ|Δ| convergence
   * probe per block (none when tol ≤ 0), so they stop at the same block.
@@ -121,9 +121,7 @@ object Ppr {
       // linking → pruning tree. Checkpointing truncates the plan to a leaf.
       val und = undirected(edges).localCheckpoint()
       val rows = und.count()
-      val outW = Loops.withShuffleWidth(spark, rows) {
-        und.groupBy("src").agg(sum("w").as("wout")).localCheckpoint()
-      }
+      val outW = und.groupBy("src").agg(sum("w").as("wout")).localCheckpoint()
       DistributedGraph(und, outW, rows)
     }
   }
@@ -369,14 +367,6 @@ object Ppr {
 
   // ---- distributed path ----------------------------------------------------
 
-  /** Drop the cached blocks of a checkpointed frame once nothing returned
-    * reads them. A frame that is not itself a checkpoint is left alone.
-    */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
-  }
-
   private def runDistributed(
       graph: DistributedGraph,
       extraEdges: Option[DataFrame],
@@ -388,25 +378,20 @@ object Ppr {
   )(implicit spark: SparkSession): DataFrame = {
     val extraUnd = extraEdges.map(undirected(_).localCheckpoint())
     val nExtra = extraUnd.fold(0L)(_.count()) // both directions already
-    val totalRows = graph.rows + nExtra
-    // the merged-adjacency build below runs at loop width instead of
-    // session width + a narrowing repartition
-    Loops.withShuffleWidth(spark, totalRows) {
-      val (und, outW) = extraUnd match {
-        case Some(x) if nExtra > 0L =>
-          val delta = x.groupBy("src").agg(sum("w").as("__dw"))
-          val merged = graph.outW.join(delta, Seq("src"), "full_outer")
-            .select(col("src"),
-              (coalesce(col("wout"), lit(0.0)) + coalesce(col("__dw"), lit(0.0))).as("wout"))
-          (graph.und.unionByName(x), merged)
-        case _ => (graph.und, graph.outW)
-      }
-      val adj0 = und.join(outW, Seq("src"))
-        .select(col("src"), col("dst"), (col("w") / col("wout")).as("p"))
-        .localCheckpoint()
-      extraUnd.foreach(release)
-      runAdj(adj0, totalRows, seeds, damping, tol, maxIter, minScore)
+    val (und, outW) = extraUnd match {
+      case Some(x) if nExtra > 0L =>
+        val delta = x.groupBy("src").agg(sum("w").as("__dw"))
+        val merged = graph.outW.join(delta, Seq("src"), "full_outer")
+          .select(col("src"),
+            (coalesce(col("wout"), lit(0.0)) + coalesce(col("__dw"), lit(0.0))).as("wout"))
+        (graph.und.unionByName(x), merged)
+      case _ => (graph.und, graph.outW)
     }
+    val adj0 = und.join(outW, Seq("src"))
+      .select(col("src"), col("dst"), (col("w") / col("wout")).as("p"))
+      .localCheckpoint()
+    extraUnd.foreach(release)
+    runAdj(adj0, graph.rows + nExtra, seeds, damping, tol, maxIter, minScore)
   }
 
   private def runAdj(
@@ -418,11 +403,11 @@ object Ppr {
       maxIter: Int,
       minScore: Double
   )(implicit spark: SparkSession): DataFrame = {
-    // right-size the loop's partitioning from the MEASURED adjacency: the
-    // session's spark.sql.shuffle.partitions (sized for corpus-scale
-    // stages) makes every one of the 25+ iterations pay mostly-empty
-    // tasks; ~100k edges per partition keeps a 10⁹-edge graph at
-    // real-cluster width.
+    // right-size the loop's partitioning from the MEASURED adjacency:
+    // ~100k edges per partition keeps a 10⁹-edge graph at real-cluster
+    // width and a small graph in one partition. The width travels with the
+    // data; the loop's own shuffles plan at the session width, which AQE
+    // coalesces.
     val parts = math.max(1, (adjRows / Loops.RowsPerPartition).toInt + 1)
     val adj =
       if (adj0.rdd.getNumPartitions <= parts) adj0
@@ -431,11 +416,6 @@ object Ppr {
         release(adj0)
         a
       }
-
-    // scope the session's shuffle width to the measured graph for the
-    // whole loop (graft.core.Loops): every published frame below is
-    // checkpointed before the width is restored.
-    Loops.withShuffleWidth(spark, adjRows) {
 
     // node set = edge endpoints ∪ seed ids: the reference's InMemory PPR
     // personalizes over ALL graph nodes (memory.py:304-315), so a seed with
@@ -514,6 +494,5 @@ object Ppr {
     release(adj)
     if (iter > 0) release(persisted)
     ranks.filter(col("rank") > minScore)
-    }
   }
 }

@@ -20,11 +20,10 @@ import scala.collection.mutable
   * its graph across queries" shape. A snapshot below the loop width (see
   * `index`) is also held on the driver, and so is its `factors` table
   * below the same size rule (see `factorsNow`): each query and each
-  * explore runs there with no Spark job, caching no RDD and taking no
-  * `Loops` lock, and so does each feedback: the store writes the new
-  * factors from the driver. A larger snapshot plans every query and
-  * explore against those checkpointed leaves and rewrites the factors
-  * with `Service.feedback`.
+  * explore runs there with no Spark job and caches no RDD, and so does
+  * each feedback: the store writes the new factors from the driver. A
+  * larger snapshot plans every query and explore against those
+  * checkpointed leaves and rewrites the factors with `Service.feedback`.
   *
   * `rowLimit` is the size rule's bound, `Loops.RowsPerPartition` outside
   * tests.
@@ -47,9 +46,9 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * factors, never edges, so no invalidation is needed mid-instance.
     * Below `Loops.RowsPerPartition` adjacency rows this holds the graph as
     * driver arrays (a few MB at most), and each query's PPR runs on the
-    * driver in milliseconds without taking the JVM-wide `Loops` lock, so
-    * concurrent queries do not queue behind one another's loops; larger
-    * graphs keep checkpointed DataFrames and the distributed loop.
+    * driver in milliseconds with no Spark job, so concurrent queries do
+    * not queue for the cluster's cores; larger graphs keep checkpointed
+    * DataFrames and the distributed loop.
     */
   private[query] lazy val pprGraph: graft.graph.Ppr.PreparedGraph =
     graft.graph.Ppr.prepare(edges)
@@ -59,7 +58,7 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * `pprGraph` is a driver graph and the concepts and the rules each have
     * fewer than `rowLimit` rows (the same size rule); then `query` and
     * `explore` answer from it with no Spark job (with the factors held,
-    * see `factorsNow`); neither caches an RDD or takes the `Loops` lock.
+    * see `factorsNow`); neither caches an RDD.
     * Larger snapshots keep `Retrieval.retrieveFull` and `Bfs.exploreEdges`.
     * A duplicate concept id fails the build.
     */
@@ -89,7 +88,9 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
   @volatile private var factorsAt: Option[FactorsAt] = None
 
   /** Serialises the factors' re-reads and each feedback's
-    * read-compute-commit-publish step, so no update is lost.
+    * read-compute-commit-publish step, with or without an `index`, so no
+    * update is lost and no two commits of this instance take one snapshot
+    * id.
     */
   private val factorsLock = new Object
 
@@ -225,7 +226,9 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * map's rows, the factor update is `commitFactors`, and the outcomes
     * frame is built only when credit propagation or a table too large to
     * hold reads it: with the factors held, the call runs no Spark job and
-    * `FeedbackResult.factors` is a local frame of the new rows.
+    * `FeedbackResult.factors` is a local frame of the new rows. Without
+    * it, the whole `Service.feedback` call runs under `factorsLock`, which
+    * reads the latest factors inside it.
     */
   def feedback(
       queryId: String,
@@ -240,8 +243,10 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
         val rows = outcomes.toSeq.map { case (id, o) => Row(id, o) }
         Service.record(rows, df, queryId, creditEdges, creditConcepts)(commitFactors(df, _))
       case None =>
-        Service.feedback(factors, df, queryId, persistTo = Some((store, "factors")),
-          creditEdges = creditEdges, creditConcepts = creditConcepts)
+        factorsLock.synchronized {
+          Service.feedback(factors, df, queryId, persistTo = Some((store, "factors")),
+            creditEdges = creditEdges, creditConcepts = creditConcepts)
+        }
     }
     res.foreach { r =>
       feedbackCounter.incrementAndGet()
@@ -266,8 +271,8 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * With the `index`, the BFS runs on the driver over the held graph:
     * neighbours and rules come back as local rows, and the edges are a
     * lazy filter of the committed edges checkpoint on the inner ids, so
-    * the call runs no Spark job, caches no RDD and takes no `Loops` lock.
-    * Larger snapshots run `Bfs.exploreEdges` as DataFrame joins.
+    * the call runs no Spark job and caches no RDD. Larger snapshots run
+    * `Bfs.exploreEdges` as DataFrame joins.
     */
   def explore(nodeId: String, depth: Int = 1): Option[ExploreResult] = {
     val d = math.max(1, math.min(depth, 3))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Embeddings, Loops}
+import graft.core.Embeddings
 import graft.fixtures.PagesGen
 import graft.pipeline.Ingest
 import graft.query.{GraftService, GraftServiceTestAccess, Retrieval}
@@ -8,7 +8,6 @@ import graft.store.SnapshotStore
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -160,18 +159,10 @@ class GraftServiceSuite extends SparkFunSuite {
     assert((sc.getPersistentRDDs.keySet -- after1).isEmpty)
   }
 
-  test("query completes while another thread holds a Loops.withShuffleWidth scope") {
+  test("query completes while a Spark job holds every core") {
     val serial = answer(svc, contexts.head)
-    val entered = new CountDownLatch(1)
-    val release = new CountDownLatch(1)
-    val holder = Future(Loops.withShuffleWidth(spark, 0L) {
-      entered.countDown(); release.await(120, TimeUnit.SECONDS)
-    })
-    try {
-      assert(entered.await(60, TimeUnit.SECONDS))
-      assert(Await.result(Future(answer(svc, contexts.head)), 60.seconds) == serial)
-    } finally release.countDown()
-    Await.result(holder, 60.seconds)
+    // the driver index answers with no Spark job
+    BusyCores.during(spark)(assert(Await.result(Future(answer(svc, contexts.head)), 60.seconds) == serial))
   }
 
   test("two threads × 10 queries on one service return the serial answers") {
@@ -307,6 +298,28 @@ class GraftServiceSuite extends SparkFunSuite {
         .fold(e => fail(e), _.factors)
     }
     assert(factorsOf(st) == bits(serial.collect().toSeq).map(_.toString).sorted)
+  }
+
+  test("two threads × 10 feedbacks on a service without an index lose no update") {
+    val conceptCount = store.read("concepts").count().toInt
+    val (st, s, items) = feedbackService("graft-svc-fb-noindex", Some(conceptCount))
+    assert(GraftServiceTestAccess.index(s).isEmpty)
+    def calls(t: Int): Seq[Map[String, String]] = (0 until 10).map { i =>
+      Map(items(t + 2 * (i % 3)) -> outcomeKinds((i + t) % 3), items(t + 2 * (1 + i % 4)) -> "accepted")
+    }
+    val threads = (0 until 2).map(t => Future(calls(t).zipWithIndex.foreach { case (o, i) =>
+      rate(s, s"q-$t-$i", o)
+    }))
+    threads.foreach(Await.result(_, 300.seconds))
+    // each call's delta per node, summed from 1.0 and clamped as updateFactors does
+    val serial = (calls(0) ++ calls(1)).foldLeft(Map.empty[String, Double]) { (f, o) =>
+      f ++ o.map { case (id, out) =>
+        id -> math.min(5.0, math.max(0.1, f.getOrElse(id, 1.0) + graft.query.Service.OutcomeDelta(out)))
+      }
+    }
+    val stored = st.read("factors").as[(String, Double)].collect()
+    assert(stored.map(_._1).sorted.toSeq == serial.keys.toSeq.sorted)
+    for ((id, f) <- stored) assert(math.abs(f - serial(id)) < 1e-9, s"$id: $f vs ${serial(id)}")
   }
 
   test("feedback runs no Spark job, and the next query none") {
@@ -603,18 +616,15 @@ class GraftServiceSuite extends SparkFunSuite {
     assert((sc.getPersistentRDDs.keySet -- after1).isEmpty)
   }
 
-  test("explore completes while another thread holds a Loops.withShuffleWidth scope") {
+  test("explore completes while a Spark job holds every core") {
     val serial = exploreAnswer(svc, exploreNodes.head, 2)
-    val entered = new CountDownLatch(1)
-    val release = new CountDownLatch(1)
-    val holder = Future(Loops.withShuffleWidth(spark, 0L) {
-      entered.countDown(); release.await(120, TimeUnit.SECONDS)
-    })
-    try {
-      assert(entered.await(60, TimeUnit.SECONDS))
-      assert(Await.result(Future(exploreAnswer(svc, exploreNodes.head, 2)), 60.seconds) == serial)
-    } finally release.countDown()
-    Await.result(holder, 60.seconds)
+    // the driver index answers with no Spark job; the edges are a lazy
+    // filter of the edges checkpoint, read once the cores are free
+    val (ex, neighbors, rules) = BusyCores.during(spark)(Await.result(Future {
+      val ex = svc.explore(exploreNodes.head, 2).getOrElse(fail("explore returned None"))
+      (ex, ex.neighbors.collect().toSet, ex.rules.collect().toSeq)
+    }, 60.seconds))
+    assert((ex.edges.collect().map(_.toString).toSeq.sorted, neighbors, rules) == serial)
   }
 
   test("two threads × 10 explores on one service return the serial answers") {

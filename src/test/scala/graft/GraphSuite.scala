@@ -109,8 +109,6 @@ class GraphSuite extends SparkFunSuite {
   }
 
   test("PPR driver path: no cached RDDs, no shuffle-width scope, concurrent calls match serial") {
-    import graft.core.Loops
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -128,18 +126,9 @@ class GraphSuite extends SparkFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == widthBefore)
 
-    // a query completes while another thread holds a loop's width scope:
-    // the driver path never waits on the JVM-wide Loops lock
-    val entered = new CountDownLatch(1)
-    val release = new CountDownLatch(1)
-    val holder = Future(Loops.withShuffleWidth(spark, 0L) {
-      entered.countDown(); release.await(120, TimeUnit.SECONDS)
-    })
-    try {
-      assert(entered.await(60, TimeUnit.SECONDS))
-      assert(Await.result(Future(query()), 60.seconds) == serial)
-    } finally release.countDown()
-    Await.result(holder, 60.seconds)
+    // a query completes while a Spark job holds every core: the driver
+    // path runs no Spark job
+    BusyCores.during(spark)(assert(Await.result(Future(query()), 60.seconds) == serial))
 
     val both = Seq(Future(query()), Future(query()))
     both.foreach(f => assert(Await.result(f, 120.seconds) == serial))
@@ -261,43 +250,69 @@ class GraphSuite extends SparkFunSuite {
     assert(math.abs(got("z") - 0.075) < 1e-9)
   }
 
-  test("withShuffleWidth: concurrent PPR and CC on one session match serial runs") {
+  test("concurrent PPR, CC and pattern completion match serial runs and never change the shuffle width") {
+    import graft.graph.Bfs
     val edges = (0 until 40).map(i => (s"n$i", s"n${(i + 1) % 40}", 0.9))
       .toDF("source_id", "target_id", "confidence").localCheckpoint()
     val seeds = Seq(("n0", 1.0)).toDF("id", "weight").localCheckpoint()
     val pairs = (0 until 30).map(i => (s"c${i / 3 * 3}", s"c$i"))
       .toDF("id_a", "id_b").localCheckpoint()
 
-    // a graph this small runs PPR on the driver, outside Loops: force the
-    // distributed loop, which scopes the width
+    // a graph this small runs PPR on the driver: force the distributed loop
     def pprRun() = PprTestAccess.run(edges, seeds, rowLimit = 0L, tol = 0.0, maxIter = 10)
       .collect().map(r => (r.getString(0), math.round(r.getDouble(1) * 1e9))).toSet
     def ccRun() = Canon.connectedComponents(pairs)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    def bfsRun() = Bfs.patternCompletion(edges, seeds.select("id"), maxDepth = 3)
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
 
-    val serialPpr = pprRun()
-    val serialCc = ccRun()
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    val serial = (pprRun(), ccRun(), bfsRun())
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // several interleaved rounds: each pair races loop-entry/planning/restore
-    for (_ <- 0 until 3) {
-      val fp = Future(pprRun())
-      val fc = Future(ccRun())
-      assert(Await.result(fp, 120.seconds) == serialPpr)
-      assert(Await.result(fc, 120.seconds) == serialCc)
+    // a watcher samples the session's width while the loops run
+    @volatile var running = true
+    val seen = Future {
+      val widths = scala.collection.mutable.Set.empty[String]
+      while (running) { widths += spark.conf.get("spark.sql.shuffle.partitions"); Thread.sleep(1) }
+      widths.toSet
     }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == prevWidth,
-      "loop scoping must restore the session shuffle width")
+    try for (_ <- 0 until 3) {
+      val (fp, fc, fb) = (Future(pprRun()), Future(ccRun()), Future(bfsRun()))
+      assert((Await.result(fp, 120.seconds), Await.result(fc, 120.seconds),
+        Await.result(fb, 120.seconds)) == serial)
+    } finally running = false
+    assert(Await.result(seen, 60.seconds) == Set(width), "a loop changed the session's shuffle width")
   }
 
-  test("withShuffleWidth: non-numeric conf value skips scoping instead of throwing") {
-    // OSS Spark validates this conf as int at set-time, so the non-numeric
-    // case only arrives via platform defaults ("auto") — pin the parse
-    assert(graft.core.Loops.parseWidth("auto").isEmpty)
-    assert(graft.core.Loops.parseWidth(" 32 ").contains(32))
+  test("CC, exploreEdges and patternCompletion keep only the checkpoints their results read") {
+    import graft.graph.Bfs
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    // a 20-node chain needs several CC rounds; the BFS runs reach 3 hops
+    val chain = (0 until 19).map(i => (f"c$i%02d", f"c${i + 1}%02d")).toDF("id_a", "id_b").localCheckpoint()
+    val edges = chain.select(col("id_a").as("source_id"), col("id_b").as("target_id"),
+      org.apache.spark.sql.functions.lit("RELATED").as("relation_type")).localCheckpoint()
+    val seeds = Seq("c05").toDF("id").localCheckpoint()
+    def reads(df: DataFrame): Set[Int] =
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    for ((name, call) <- Seq[(String, () => DataFrame)](
+        "connectedComponents" -> (() => Canon.connectedComponents(chain)),
+        "exploreEdges" -> (() => Bfs.exploreEdges(edges, seeds, maxDepth = 3)),
+        "patternCompletion" -> (() => Bfs.patternCompletion(edges, seeds, maxDepth = 3)))) {
+      val expected = call().collect().toSet
+      for (i <- 0 until 4) {
+        // compared by id: an RDD only weakly held may leave the map at a GC
+        val before = sc.getPersistentRDDs.keySet
+        val result = call()
+        val kept = sc.getPersistentRDDs.keySet -- before
+        assert(kept.subsetOf(reads(result)), s"$name call $i kept ${kept -- reads(result)} beyond its result")
+        assert(result.collect().toSet == expected, s"$name call $i")
+      }
+      for (df <- Seq(chain, edges, seeds)) df.collect() // the callers' frames stay readable
+    }
   }
 
   test("Ppr.runPrepared over a prepared graph matches Ppr.run on the merged edges") {

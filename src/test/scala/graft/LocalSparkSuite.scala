@@ -28,4 +28,16 @@ class LocalSparkSuite extends SparkFunSuite {
       .toList
     assert(builders.isEmpty, s"session builders outside graft.core.LocalSpark: $builders")
   }
+
+  test("LocalSpark: no program source sets a session conf at run time") {
+    // a session conf is global to the session: a value set on one thread
+    // also plans every query another thread runs meanwhile
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val setters = Files.walk(Paths.get("src", "main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter((p: Path) => new String(Files.readAllBytes(p), "UTF-8").contains("conf.set("))
+      .toList
+    assert(setters.isEmpty, s"session conf writes under src/main: $setters")
+  }
 }

@@ -18,3 +18,34 @@ object SparkTestBase {
 abstract class SparkFunSuite extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestBase.spark
 }
+
+/** Keeps every core of a local session busy while `body` runs: one Spark
+  * job whose tasks wait on a latch until `body` returns. Local-mode tasks
+  * run in this JVM, so they read the latches from this object, not from a
+  * serialized closure.
+  */
+object BusyCores extends Serializable {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  import scala.concurrent.{Await, ExecutionContext, Future}
+  import scala.concurrent.duration._
+
+  @volatile private var started = new CountDownLatch(0)
+  @volatile private var release = new CountDownLatch(0)
+
+  def during[T](spark: SparkSession)(body: => T): T = synchronized {
+    val cores = spark.sparkContext.defaultParallelism
+    started = new CountDownLatch(cores)
+    release = new CountDownLatch(1)
+    val job = Future(spark.sparkContext.parallelize(0 until cores, cores).foreach { _ =>
+      BusyCores.started.countDown()
+      BusyCores.release.await(120, TimeUnit.SECONDS)
+    })(ExecutionContext.global)
+    try {
+      assert(started.await(60, TimeUnit.SECONDS), s"the $cores blocking tasks did not all start")
+      body
+    } finally {
+      release.countDown()
+      Await.result(job, 60.seconds)
+    }
+  }
+}
