@@ -250,7 +250,7 @@ class GraphSuite extends SparkFunSuite {
     assert(math.abs(got("z") - 0.075) < 1e-9)
   }
 
-  test("concurrent PPR, CC and pattern completion match serial runs and never change the shuffle width") {
+  test("concurrent PPR, CC and pattern completion match serial; shuffle width unchanged") {
     import graft.graph.Bfs
     val edges = (0 until 40).map(i => (s"n$i", s"n${(i + 1) % 40}", 0.9))
       .toDF("source_id", "target_id", "confidence").localCheckpoint()
