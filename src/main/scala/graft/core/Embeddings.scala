@@ -61,12 +61,7 @@ object Embeddings {
     v
   }
 
-  def cosine(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-      i += 1
-    }
-    if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
-  }
+  /** `Similarity.cosine` of the whole arrays. */
+  def cosine(a: Array[Float], b: Array[Float]): Double =
+    graft.ops.Similarity.cosine(a, 0, a.length, b, 0, b.length)
 }

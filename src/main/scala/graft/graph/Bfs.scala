@@ -8,6 +8,8 @@ import scala.collection.mutable
 
 /** Frontier-expansion graph ops (G2/G3 in SURVEY.md §2.7) as iterative
   * DataFrame joins — the same checkpointed-frontier skeleton as CC/PPR.
+  * `patternCompletion` is the one frontier loop; `exploreEdges` selects
+  * the edges of the nodes it reaches.
   */
 object Bfs {
 
@@ -25,8 +27,9 @@ object Bfs {
   )(implicit spark: SparkSession): DataFrame = {
     // localCheckpoint: truncate the upstream plan once so each depth's join
     // plans against a leaf instead of re-optimizing the full pipeline tree.
-    // Both directions come from one pass over the caller's plan.
-    val und = edges
+    // Both directions come from one pass over the caller's plan, made at
+    // the first depth: at maxDepth 0 (`exploreEdges` at depth 1) none is.
+    lazy val und = edges
       .select(explode(array(
         struct(col("source_id").as("src"), col("target_id").as("dst")),
         struct(col("target_id").as("src"), col("source_id").as("dst")))).as("e"))
@@ -53,47 +56,37 @@ object Bfs {
       best = combined
       depth += 1
     }
-    (und +: superseded).foreach(release)
+    if (depth > 0) release(und)
+    superseded.foreach(release)
     best
   }
 
-  /** G3 — `explore` neighborhood (src/qortex/service.py:827-914): BFS to
-    * `maxDepth` (reference ≤3) collecting the unique edges and neighbor
-    * node ids reachable from the seed set. Returns the edge subset, which
-    * reads only its own checkpoint: every other one is released.
+  /** G3 — `explore` neighborhood (src/qortex/service.py:827-914): the
+    * unique edge rows (by source_id, target_id, relation_type) with an
+    * endpoint within `maxDepth` − 1 hops of the seeds, over the undirected
+    * edges and never through a null endpoint: `edgesTouching` the nodes
+    * `patternCompletion` reaches in `maxDepth` − 1 steps. `maxDepth` (the
+    * reference allows ≤ 3) must be at least 1. The result reads `edges`
+    * and only `patternCompletion`'s own checkpoint.
     */
   def exploreEdges(
       edges: DataFrame,
       seeds: DataFrame,
       maxDepth: Int = 3
   )(implicit spark: SparkSession): DataFrame = {
-    val e = edges.localCheckpoint() // plan leaf — joined once per depth
-    var visited = seeds.select(col("id")).distinct().localCheckpoint()
-    var frontier = visited
-    var depth = 0
-    var collected = edges.limit(0)
-    while (depth < maxDepth) {
-      val cols = e.columns.map(col).toIndexedSeq
-      val touched = e
-        .join(frontier.withColumnRenamed("id", "source_id"), Seq("source_id"), "left_semi")
-        .select(cols: _*)
-        .union(e.join(frontier.withColumnRenamed("id", "target_id"),
-          Seq("target_id"), "left_semi")
-          .select(cols: _*))
-      val c = collected.union(touched).dropDuplicates(
-        "source_id", "target_id", "relation_type")
-        .localCheckpoint() // union-in-loop would otherwise double the plan per depth
-      val neighbors = touched.select(col("source_id").as("id"))
-        .union(touched.select(col("target_id").as("id"))).distinct()
-      val f = neighbors.join(visited, Seq("id"), "left_anti").localCheckpoint()
-      val v = visited.union(f).distinct().localCheckpoint()
-      Seq(collected, frontier, visited).foreach(release)
-      collected = c
-      frontier = f
-      visited = v
-      depth += 1
-    }
-    Seq(e, frontier, visited).foreach(release)
-    collected
+    require(maxDepth >= 1, s"exploreEdges: maxDepth must be at least 1, got $maxDepth")
+    edgesTouching(edges, patternCompletion(edges, seeds, maxDepth - 1))
+  }
+
+  /** The rows of `edges` (every column kept) whose source_id or target_id
+    * is an id of `nodes` (id, ...), one per (source_id, target_id,
+    * relation_type).
+    */
+  private[graft] def edgesTouching(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    // a using-join puts its key first: select restores the column order union matches by
+    def touching(end: String) = edges.join(nodes.select(col("id").as(end)), Seq(end), "left_semi")
+      .select(edges.columns.map(col).toIndexedSeq: _*)
+    touching("source_id").union(touching("target_id"))
+      .dropDuplicates("source_id", "target_id", "relation_type")
   }
 }

@@ -45,28 +45,19 @@ object Ivf {
     */
   private val FixedScale = (1L << 20).toDouble
 
-  private def cos(v: Seq[Float], c: Array[Float]): Double = {
-    if (v == null || v.isEmpty || v.length != c.length) return 0.0
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    val n = c.length
-    while (i < n) {
-      val x = v(i).toDouble; val y = c(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
-  /** The `n` nearest centroids of `v`, by cosine desc then cluster id
-    * asc (the tie-break the oracle mirrors with `ORDER BY sim DESC,
-    * cluster ASC`).
+  /** The `n` nearest centroids of `v`, by `Similarity.cosine` desc then
+    * cluster id asc (the tie-break the oracle mirrors with `ORDER BY sim
+    * DESC, cluster ASC`).
     */
-  def nearestClusters(cents: Array[Array[Float]], v: Seq[Float], n: Int): Seq[Int] =
+  def nearestClusters(cents: Array[Array[Float]], v: Seq[Float], n: Int): Seq[Int] = {
+    val a = if (v == null) null else v.toArray
+    val len = if (a == null) 0 else a.length
     cents.indices
-      .map(i => (cos(v, cents(i)), i))
+      .map(i => (Similarity.cosine(a, 0, len, cents(i), 0, cents(i).length), i))
       .sortBy { case (s, i) => (-s, i) }
       .take(n)
       .map(_._2)
+  }
 
   /** Per-cluster fixed-point vector sum. Buffer is a mutable long array
     * (k×dim longs per task at the partial-agg boundary — no row

@@ -18,12 +18,13 @@ import scala.collection.mutable
   * The committed tables are read once per service instance and
   * plan-truncated (`localCheckpoint`) — the "query service checkpoints
   * its graph across queries" shape. A snapshot below the loop width (see
-  * `index`) is also held on the driver, and so is its `factors` table
-  * below the same size rule (see `factorsNow`): each query and each
-  * explore runs there with no Spark job and caches no RDD, and so does
-  * each feedback: the store writes the new factors from the driver. A
-  * larger snapshot plans every query and explore against those
-  * checkpointed leaves and rewrites the factors with `Service.feedback`.
+  * `index`) is also held on the driver: each query and each explore runs
+  * there with no Spark job and caches no RDD. A larger snapshot plans
+  * every query and explore against those checkpointed leaves. At every
+  * snapshot size a `factors` table below the same size rule is held on
+  * the driver too (see `factorsNow`): each feedback folds it there and the
+  * store writes the new factors from the driver with no Spark job; a
+  * larger table is rewritten as `Service.feedback` does.
   *
   * `rowLimit` is the size rule's bound, `Loops.RowsPerPartition` outside
   * tests.
@@ -59,7 +60,8 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * fewer than `rowLimit` rows (the same size rule); then `query` and
     * `explore` answer from it with no Spark job (with the factors held,
     * see `factorsNow`); neither caches an RDD.
-    * Larger snapshots keep `Retrieval.retrieveFull` and `Bfs.exploreEdges`.
+    * Larger snapshots keep `Retrieval.retrieveFull` and the DataFrame BFS
+    * (`Bfs.patternCompletion`).
     * A duplicate concept id fails the build.
     */
   private[query] lazy val index: Option[SnapshotIndex] = pprGraph match {
@@ -76,7 +78,7 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     (if (index.isDefined) all.select("id", "name", "domain", "confidence") else all).localCheckpoint()
   }
 
-  /** The latest committed factors, read per call without an `index`:
+  /** The latest committed factors, read per query without an `index`:
     * feedback commits them, and so may another service instance over the
     * same warehouse.
     */
@@ -88,17 +90,17 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
   @volatile private var factorsAt: Option[FactorsAt] = None
 
   /** Serialises the factors' re-reads and each feedback's
-    * read-compute-commit-publish step, with or without an `index`, so no
-    * update is lost and no two commits of this instance take one snapshot
-    * id.
+    * read-compute-commit-publish step, so no update is lost and no two
+    * commits of this instance take one snapshot id.
     */
   private val factorsLock = new Object
 
-  /** The factors of the latest committed snapshot, for a service with an
-    * `index`. Each call reads the table's snapshot pointer (two small file
-    * reads, no Spark job) and re-collects the table only when its id is
-    * not the one held: after another instance's feedback, a direct commit
-    * or a rollback, so a call always sees the latest snapshot.
+  /** The factors of the latest committed snapshot, for every feedback and
+    * for the queries of a service with an `index`. Each call reads the
+    * table's snapshot pointer (two small file reads, no Spark job) and
+    * re-collects the table only when its id is not the one held: after
+    * another instance's feedback, a direct commit or a rollback, so a call
+    * always sees the latest snapshot.
     */
   private def factorsNow(): FactorsAt = {
     def heldAt(snap: Option[SnapshotStore.Snapshot]) = factorsAt.filter(_.snapshot == snap.map(_.id))
@@ -114,11 +116,11 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     })
   }
 
-  /** The factor update of one feedback on a service with an `index`,
-    * under `factorsLock`: held rows are folded on the driver and committed
-    * as a local frame, which the store writes from the driver as one file
-    * with no Spark job; a larger table is rewritten as `Service.feedback`
-    * does, from `outcomes`. The new snapshot is then published.
+  /** The factor update of one feedback, under `factorsLock`: held rows are
+    * folded on the driver and committed as a local frame, which the store
+    * writes from the driver as one file with no Spark job; a larger table
+    * is rewritten as `Service.feedback` does, from `outcomes`. The new
+    * snapshot is then published.
     */
   private def commitFactors(outcomes: => DataFrame, rows: Seq[Row]): DataFrame =
     factorsLock.synchronized {
@@ -222,13 +224,11 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * the credit learner's posteriors (learner.apply_credit_deltas,
     * service.py:1653-1655).
     *
-    * With the `index`, the outcomes are validated and tallied as the
-    * map's rows, the factor update is `commitFactors`, and the outcomes
-    * frame is built only when credit propagation or a table too large to
-    * hold reads it: with the factors held, the call runs no Spark job and
-    * `FeedbackResult.factors` is a local frame of the new rows. Without
-    * it, the whole `Service.feedback` call runs under `factorsLock`, which
-    * reads the latest factors inside it.
+    * The outcomes are validated and tallied as the map's rows, the factor
+    * update is `commitFactors`, and the outcomes frame is built only when
+    * credit propagation or a table too large to hold reads it: with the
+    * factors held, the call runs no Spark job and `FeedbackResult.factors`
+    * is a local frame of the new rows.
     */
   def feedback(
       queryId: String,
@@ -238,16 +238,8 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     lazy val df = outcomes.toSeq.toDF("node_id", "outcome")
     val creditEdges = if (propagateCredit) Some(edges) else None
     val creditConcepts = if (propagateCredit) Some(concepts) else None
-    val res = index match {
-      case Some(_) =>
-        val rows = outcomes.toSeq.map { case (id, o) => Row(id, o) }
-        Service.record(rows, df, queryId, creditEdges, creditConcepts)(commitFactors(df, _))
-      case None =>
-        factorsLock.synchronized {
-          Service.feedback(factors, df, queryId, persistTo = Some((store, "factors")),
-            creditEdges = creditEdges, creditConcepts = creditConcepts)
-        }
-    }
+    val rows = outcomes.toSeq.map { case (id, o) => Row(id, o) }
+    val res = Service.record(rows, df, queryId, creditEdges, creditConcepts)(commitFactors(df, _))
     res.foreach { r =>
       feedbackCounter.incrementAndGet()
       r.credit.foreach { c =>
@@ -272,7 +264,9 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * neighbours and rules come back as local rows, and the edges are a
     * lazy filter of the committed edges checkpoint on the inner ids, so
     * the call runs no Spark job and caches no RDD. Larger snapshots run
-    * `Bfs.exploreEdges` as DataFrame joins.
+    * one `Bfs.patternCompletion` to depth d as DataFrame joins: the ids it
+    * reaches give the neighbours and rules, and those within d − 1 hops
+    * the edges, as `Bfs.exploreEdges` selects them.
     */
   def explore(nodeId: String, depth: Int = 1): Option[ExploreResult] = {
     val d = math.max(1, math.min(depth, 3))
@@ -287,17 +281,12 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
       case None =>
         if (concepts.filter(col("id") === nodeId).isEmpty) None
         else {
-          val seeds = Seq(nodeId).toDF("id")
-          // already a checkpointed leaf: every depth checkpoints it
-          val sub = graft.graph.Bfs.exploreEdges(edges, seeds, maxDepth = d)
-          val reached = sub.select(col("source_id").as("id"))
-            .unionByName(sub.select(col("target_id").as("id")))
-            .unionByName(seeds)
-            .distinct()
-          val neighbors = reached.join(concepts.select(col("id"), col("name")), Seq("id"))
-          val linked = graft.rules.Rules.rulesForConcepts(
-            rules, reached.withColumn("score", lit(1.0)))
-          Some(ExploreResult(sub, neighbors, linked))
+          // V≤d scored 0.5^hops, exactly: V<d is the rows above 0.5^d
+          val reached = graft.graph.Bfs.patternCompletion(edges, Seq(nodeId).toDF("id"), maxDepth = d)
+          val inner = reached.filter(col("score") > math.pow(0.5, d))
+          val neighbors = reached.select("id").join(concepts.select(col("id"), col("name")), Seq("id"))
+          val linked = graft.rules.Rules.rulesForConcepts(rules, reached.withColumn("score", lit(1.0)))
+          Some(ExploreResult(graft.graph.Bfs.edgesTouching(edges, inner), neighbors, linked))
         }
     }
   }

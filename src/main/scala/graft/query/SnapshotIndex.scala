@@ -167,11 +167,11 @@ final class SnapshotIndex private (
   /** `GraftService.explore(nodeId, depth)` for `depth` ≥ 1 on the driver:
     * None when `nodeId` is not a concept. Breadth-first search runs over
     * every edge row (`graph.ends`, null-confidence rows included, as
-    * `Bfs.exploreEdges` joins them) in both directions and never expands
-    * through a null endpoint. With V<d and V≤d the ids at distance below
-    * and up to `depth`:
+    * `Bfs.patternCompletion` joins them) in both directions and never
+    * expands through a null endpoint. With V<d and V≤d the ids at distance
+    * below and up to `depth`:
     *   - `inner` is V<d, whose edge rows are the edges `Bfs.exploreEdges`
-    *     returns;
+    *     returns (`Bfs.edgesTouching` of V<d);
     *   - `neighbors` (id, name) is V≤d ∪ {nodeId} kept where the id is a
     *     concept, in id order;
     *   - `rules` (id, text, category, relevance = 1.0) are the distinct

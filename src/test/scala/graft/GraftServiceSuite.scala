@@ -300,8 +300,10 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(factorsOf(st) == bits(serial.collect().toSeq).map(_.toString).sorted)
   }
 
+  /** A size rule at which the suite's warehouse has no `index`. */
+  private lazy val conceptCount: Int = store.read("concepts").count().toInt
+
   test("two threads × 10 feedbacks on a service without an index lose no update") {
-    val conceptCount = store.read("concepts").count().toInt
     val (st, s, items) = feedbackService("graft-svc-fb-noindex", Some(conceptCount))
     assert(GraftServiceTestAccess.index(s).isEmpty)
     def calls(t: Int): Seq[Map[String, String]] = (0 until 10).map { i =>
@@ -323,29 +325,16 @@ class GraftServiceSuite extends SparkFunSuite {
   }
 
   test("feedback runs no Spark job, and the next query none") {
-    val sc = spark.sparkContext
     val (_, s, items) = feedbackService("graft-svc-fb-jobs")
-    val group = "graft-svc-fb-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.ListenerBusTestAccess.drain(sc)
-      val before = jobs.get()
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusTestAccess.drain(sc)
-      jobs.get() - before
-    }
-    sc.addSparkListener(listener)
-    try {
-      assert(jobsOf(rate(s, "q-1", Map(items(0) -> "accepted", items(1) -> "rejected"))) == 0)
-      assert(jobsOf(s.query(contexts(1), topK = 10).items.collect()) == 0)
-      assert(jobsOf(rate(s, "q-2", Map(items(0) -> "partial"))) == 0)
-      assert(jobsOf(s.query(contexts.head, topK = 10).items.collect()) == 0)
-    } finally sc.removeSparkListener(listener)
+    assert(jobsOf(rate(s, "q-1", Map(items(0) -> "accepted", items(1) -> "rejected"))) == 0)
+    assert(jobsOf(s.query(contexts(1), topK = 10).items.collect()) == 0)
+    assert(jobsOf(rate(s, "q-2", Map(items(0) -> "partial"))) == 0)
+    assert(jobsOf(s.query(contexts.head, topK = 10).items.collect()) == 0)
+    // without an index the factors are held below the same size rule
+    val (_, plain, plainItems) = feedbackService("graft-svc-fb-jobs-noindex", Some(conceptCount))
+    assert(GraftServiceTestAccess.index(plain).isEmpty)
+    assert(jobsOf(rate(plain, "q-1", Map(plainItems(0) -> "accepted", plainItems(1) -> "rejected"))) == 0)
+    assert(jobsOf(rate(plain, "q-2", Map(plainItems(0) -> "partial"))) == 0)
   }
 
   test("feedback: an invalid outcome is rejected with the reference error, naming the first in map order") {
@@ -430,6 +419,12 @@ class GraftServiceSuite extends SparkFunSuite {
     val (st, s, items) = feedbackService("graft-svc-fb-table", Some(limit))
     assert(GraftServiceTestAccess.index(s).isDefined, "no driver index below the loop width")
     foldsAsServiceFeedback(st, s, items, filler = limit, calls = 6)
+  }
+
+  test("feedback: without an index the held factors fold as Service.feedback does") {
+    val (st, s, items) = feedbackService("graft-svc-fb-noindex-fold", Some(conceptCount))
+    assert(GraftServiceTestAccess.index(s).isEmpty)
+    foldsAsServiceFeedback(st, s, items, filler = 0, calls = 8)
   }
 
   test("feedback: another instance's feedback is seen by the next query and folded on") {
@@ -571,6 +566,8 @@ class GraftServiceSuite extends SparkFunSuite {
 
     val s = new GraftService(st)
     assert(GraftServiceTestAccess.index(s).isDefined, "no driver index below the loop width")
+    val plain = GraftServiceTestAccess.withRowLimit(st, st.read("concepts").count().toInt)
+    assert(GraftServiceTestAccess.index(plain).isEmpty)
     val concepts = st.read("concepts")
     val edges = st.read("edges")
     val rules = st.read("rules")
@@ -598,13 +595,19 @@ class GraftServiceSuite extends SparkFunSuite {
       assert(gotRules.map(r => (r.getString(0), r.getDouble(3))) ==
         wantRules.map(r => (r.getString(0), r.getDouble(3))), where)
       assert(gotRules == wantRules.sorted(ruleOrder), where)
+      // the DataFrame path without an index answers as the driver index
+      val (plainEdges, plainNeighbors, plainRules) = exploreAnswer(plain, node, depth)
+      assert((plainEdges, plainNeighbors) == (gotEdges, gotNeighbors), s"$where without an index")
+      assert(plainRules.map(r => (r.getString(0), r.getDouble(3))) ==
+        gotRules.map(r => (r.getString(0), r.getDouble(3))), s"$where without an index")
+      assert(plainRules.sorted(ruleOrder) == gotRules, s"$where without an index")
       reachedFar ||= gotNeighbors.exists(_.getString(0) == far)
       ruledTwice ||= gotRules.exists(_.getString(0) == "rule:twice")
       ruledGhost ||= gotRules.exists(_.getString(0) == "rule:ghost")
     }
     assert(reachedFar && ruledTwice && ruledGhost)
     assert(exploreAnswer(s, isolated, 3)._1.isEmpty)
-    assert(s.explore(ghost).isEmpty) // an edge endpoint, not a concept
+    assert(s.explore(ghost).isEmpty && plain.explore(ghost).isEmpty) // an edge endpoint, not a concept
   }
 
   test("explore caches no RDD: the persistent RDDs after 20 explores are those after 1") {

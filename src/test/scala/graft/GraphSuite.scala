@@ -315,6 +315,54 @@ class GraphSuite extends SparkFunSuite {
     }
   }
 
+  private type Edge = (String, String, String, Option[Double])
+
+  test("exploreEdges matches a plain BFS over the collected rows (seeded random graphs)") {
+    import graft.graph.Bfs
+    val rng = new scala.util.Random(20261019L)
+    def node(): String = if (rng.nextInt(10) == 0) null else s"n${rng.nextInt(12)}"
+    // the edge rows with an endpoint within maxDepth − 1 hops of the seeds,
+    // never expanding through a null endpoint
+    def reference(rows: Seq[Edge], seeds: Set[String], maxDepth: Int): Set[(String, String, String)] = {
+      val adjacent = rows.flatMap { case (s, t, _, _) => Seq(s -> t, t -> s) }
+        .filter { case (a, b) => a != null && b != null }
+      var inner = seeds
+      for (_ <- 1 until maxDepth) inner ++= adjacent.collect { case (a, b) if inner(a) => b }
+      rows.filter { case (s, t, _, _) => inner(s) || inner(t) }.map { case (s, t, r, _) => (s, t, r) }.toSet
+    }
+    for (g <- 0 until 8) {
+      val drawn = Seq.fill(4 + rng.nextInt(16))((node(), node(), if (rng.nextBoolean()) "RELATED" else "USES",
+        if (rng.nextInt(4) == 0) None else Some(rng.nextInt(10) / 10.0)))
+      // exact duplicates, and a key repeated with another confidence
+      val rows: Seq[Edge] = drawn ++ drawn.take(2) ++ drawn.take(1).map(_.copy(_4 = Some(0.05)))
+      val edges = rows.toDF("source_id", "target_id", "relation_type", "confidence")
+      val seeds = Seq.fill(1 + rng.nextInt(3))(if (rng.nextInt(3) == 0) "off-graph" else s"n${rng.nextInt(12)}")
+      for (d <- 1 to 3) {
+        val where = s"graph $g, seeds $seeds, depth $d"
+        val got = Bfs.exploreEdges(edges, seeds.toDF("id"), maxDepth = d).as[Edge].collect().toSeq
+        val keys = got.map { case (s, t, r, _) => (s, t, r) }
+        assert(keys.distinct.size == keys.size, s"$where: a key twice")
+        assert(keys.toSet == reference(rows, seeds.toSet, d), where)
+        assert(got.forall(rows.contains), s"$where: a row not in the input")
+      }
+    }
+  }
+
+  test("exploreEdges jobs <= patternCompletion(d - 1) + one edgesTouching collect") {
+    import graft.graph.Bfs
+    // 2,000 edges over 1,000 nodes: two out-edges each, reaching further per depth
+    val edges = (0 until 2000).map(i => (s"n${i % 1000}", s"n${(i * 37 + 11) % 1000}", "RELATED", 0.5))
+      .toDF("source_id", "target_id", "relation_type", "confidence").localCheckpoint()
+    val seeds = Seq("n0").toDF("id")
+    for (d <- 1 to 3) {
+      val explore = jobsOf(Bfs.exploreEdges(edges, seeds, maxDepth = d).collect())
+      var inner: DataFrame = null
+      val completion = jobsOf { inner = Bfs.patternCompletion(edges, seeds, maxDepth = d - 1) }
+      val touching = jobsOf(Bfs.edgesTouching(edges, inner).collect())
+      assert(explore <= completion + touching, s"depth $d: $explore > $completion + $touching jobs")
+    }
+  }
+
   test("Ppr.runPrepared over a prepared graph matches Ppr.run on the merged edges") {
     val edges = (0 until 30).map(i => (s"n$i", s"n${(i * 7 + 1) % 30}", 0.8))
       .toDF("source_id", "target_id", "confidence").localCheckpoint()

@@ -17,6 +17,26 @@ object SparkTestBase {
 
 abstract class SparkFunSuite extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Spark jobs started while `body` runs on this thread, counted once the
+    * listener bus has delivered every event posted by then.
+    */
+  protected def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusTestAccess.drain(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Keeps every core of a local session busy while `body` runs: one Spark

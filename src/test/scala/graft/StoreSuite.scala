@@ -22,24 +22,6 @@ class StoreSuite extends SparkFunSuite {
   private def newStore(prefix: String): SnapshotStore =
     new SnapshotStore(java.nio.file.Files.createTempDirectory(prefix).toString)
 
-  /** Spark jobs started while `body` runs on this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-store-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusTestAccess.drain(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A value with every float and double as its raw bits, arrays and maps
     * as sequences in stored order.
     */
