@@ -24,30 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Canon {
 
-  /** Alias pairs from explicit "X is also known as Y" sentences.
-    * Deterministic textual alias rule (our spec; plays the role of the
-    * LLM's illustrative-concept matching at ingest/base.py:184-223).
-    * Input: chunks DF (url, chunk_id, text). Output: (name_a, name_b).
-    */
-  def aliasPairsFromText(chunks: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val aliasRe =
-      "([A-Z][A-Za-z0-9'\\-]*(?: [A-Z][A-Za-z0-9'\\-]*)*) is also known as ([A-Z][A-Za-z0-9'\\-]*(?: [A-Z][A-Za-z0-9'\\-]*)*)".r
-    chunks
-      .select(col("text"))
-      .as[String]
-      .flatMap { text =>
-        if (text == null) Iterator.empty
-        else
-          aliasRe
-            .findAllMatchIn(text)
-            .map(m => (TextSpec.titleCase(m.group(1)), TextSpec.titleCase(m.group(2))))
-      }
-      .toDF("name_a", "name_b")
-      .filter(col("name_a") =!= col("name_b"))
-      .distinct()
-  }
-
   /** Abbreviation synonym edges: a short ALL-CAPS concept name equal to the
     * initials of a multi-word concept name ("DI" ↔ "Dependency Injection").
     * Computed as an equi-join on the initials key — no quadratic pass.

@@ -125,7 +125,7 @@ final class CausalDag private (
       * nodes before the edges (dag.py:105-113), so an edge-less concept is
       * still a DAG node and receives direct credit.
       */
-    extraNodes: Seq[String] = Seq.empty) extends Serializable {
+    extraNodes: Seq[String]) extends Serializable {
 
   private val adj = scala.collection.mutable.Map.empty[String, scala.collection.mutable.LinkedHashSet[String]]
   private val radj = scala.collection.mutable.Map.empty[String, scala.collection.mutable.LinkedHashSet[String]]

@@ -2,18 +2,9 @@ package graft.core
 
 import java.sql.Timestamp
 
-/** Core row types of the KG-construction pipeline.
-  *
-  * Schema lineage (reference = /root/reference, read-only):
-  *  - PageRow   : BASELINE.json input_hint (url, warc_ts, html, text, lang)
-  *  - ChunkRow  : packages/qortex-online/src/qortex/online/chunker.py:16-22
-  *  - MentionRow: packages/qortex-online/src/qortex/online/extractor.py:35-41
-  *  - TripleRow : extractor.py:44-51 (ExtractedRelation) + provenance columns
-  *  - ConceptRow: src/qortex/core/models.py:55-74 (ConceptNode)
-  *  - EdgeRow   : src/qortex/core/models.py:77-89 (ConceptEdge) + pruning tags
-  *  - RuleRow   : src/qortex/core/models.py:122-143 (ExplicitRule)
-  *  - LineageRow: our Iceberg-style per-partition lineage (SURVEY.md §7.4);
-  *                drop counters mirror src/qortex/core/pruning.py:160-201
+/** Input row of the KG-construction pipeline: one crawled page
+  * (BASELINE.json input_hint: url, warc_ts, html, text, lang). The schemas
+  * of the tables `Ingest.run` commits are pinned by PipelineSuite.
   */
 final case class PageRow(
     url: String,
@@ -24,84 +15,9 @@ final case class PageRow(
     day: String // partition column: days(warc_ts) rendered yyyy-MM-dd
 )
 
-final case class ChunkRow(
-    url: String,
-    chunk_id: String, // sha256(source:idx:head64)[0,16) — chunker.py:71-82
-    chunk_index: Int,
-    text: String
-)
-
-final case class MentionRow(
-    url: String,
-    chunk_id: String,
-    name: String, // title-cased surface form (extractor.py:113-115)
-    description: String,
-    confidence: Double, // 0.9 entity-like span, 0.7 noun-phrase-like span
-    begin: Int,
-    end: Int
-)
-
-final case class TripleRow(
-    subj: String,
-    pred: String, // one of RelationTypes.all
-    obj: String,
-    confidence: Double,
-    url: String,
-    chunk_id: String,
-    sentence: String, // evidence (source_text) — feeds pruning P1/P3/P4
-    extractor_version: String
-)
-
-final case class ConceptRow(
-    id: String, // "{domain}:{Name}" — ingest/base.py:174
-    name: String,
-    description: String,
-    domain: String,
-    source_id: String,
-    source_location: String,
-    confidence: Double,
-    canonical_id: String,
-    extractor_version: String,
-    // core/models.py:69 ConceptNode.properties — carries the E10
-    // reconciliation outputs: "examples" (JSON array of attached
-    // illustrative mentions) or "concept_role"/"illustrates" for orphans
-    properties: Map[String, String] = Map.empty
-)
-
-final case class EdgeRow(
-    source_id: String,
-    target_id: String,
-    relation_type: String,
-    confidence: Double,
-    bidirectional: Boolean,
-    source_text: String,
-    source_location: String,
-    strength: String, // strong | weak       (pruning.py:386-388)
-    layer: String, // structural | causal (pruning.py:317-326)
-    properties: Map[String, String] = Map.empty // core/models.py:86
-)
-
-final case class LineageRow(
-    snapshot_id: Long,
-    input_partition: String,
-    docs: Long,
-    chunks: Long,
-    mentions: Long,
-    triples_raw: Long,
-    triples: Long,
-    dropped_low_evidence: Long,
-    dropped_low_confidence: Long,
-    dropped_duplicate: Long,
-    dropped_competing: Long,
-    dropped_isolated: Long,
-    wall_ms: Long,
-    extractor_version: String
-)
-
 object RelationTypes {
   // src/qortex/core/models.py:25-52 — 13 typed relations (+RELATED_TO default
   // used by the online extractor, extractor.py:380).
-  val ContradictS = "CONTRADICTS"
   val all: Seq[String] = Seq(
     "CONTRADICTS", "REQUIRES", "REFINES", "IMPLEMENTS", "PART_OF", "USES",
     "SIMILAR_TO", "ALTERNATIVE_TO", "SUPPORTS", "CHALLENGES",

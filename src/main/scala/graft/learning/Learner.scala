@@ -243,19 +243,6 @@ final class Learner private (
       .unionByName(row))
   }
 
-  /** learner.py:234-250 — top-k arms by posterior mean within a context. */
-  def topArms(context: Map[String, String] = Map.empty, k: Int = 10)
-      : Seq[(String, ArmState)] =
-    stateDf.filter(col("context_hash") === contextHash(context))
-      .withColumn("mean", col("alpha") / (col("alpha") + col("beta")))
-      .orderBy(col("mean").desc, col("arm_id").asc)
-      .limit(k)
-      .collect()
-      .map(r => r.getAs[String]("arm_id") -> ArmState(
-        r.getAs[Double]("alpha"), r.getAs[Double]("beta"),
-        r.getAs[Long]("pulls"), r.getAs[Double]("total_reward")))
-      .toSeq
-
   /** learner.py:200-216 — delete arm states; returns rows removed. */
   def reset(
       armIds: Option[Seq[String]] = None,

@@ -119,11 +119,6 @@ object Projectors {
             when(col("derivation") === "derived", lit("derived"))),
           c => c.isNotNull))
 
-  /** PassthroughEnricher (enrichers/passthrough.py): the Enricher protocol
-    * with no enrichment — identity.
-    */
-  def enrichPassthrough(rules: DataFrame): DataFrame = rules
-
   private def hasEnrichment(df: DataFrame): Boolean = df.columns.contains("context")
 
   /** One seed entry per rule, flat scalar columns — the SQL-checkable

@@ -2,7 +2,6 @@ package graft.query
 
 import graft.core.Embeddings
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** A9 (complete) — the retrieval-quality eval harness: recall@k,
   * precision@k, and MRR over expected/distractor query sets, comparing
@@ -126,17 +125,17 @@ object Eval {
 
   /** The corpus as engine tables: concepts with feature-hash embeddings of
     * the same "name: description" template (E11), typed edges conf 0.9.
+    * Both are driver-local Seqs, so each frame is a LocalRelation and
+    * needs no checkpoint.
     */
   def authCorpus(implicit spark: SparkSession): (DataFrame, DataFrame) = {
     import spark.implicits._
     val concepts = AuthConcepts
       .map { case (n, d) => (s"auth:$n", n, Embeddings.embedConcept(n, d).toSeq) }
       .toDF("id", "name", "embedding")
-      .localCheckpoint()
     val edges = AuthEdges
       .map { case (s, t, r) => (s"auth:$s", s"auth:$t", r, 0.9) }
       .toDF("source_id", "target_id", "relation_type", "confidence")
-      .localCheckpoint()
     (concepts, edges)
   }
 

@@ -261,9 +261,9 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     * rules listing any id within d hops. None if the node is not a concept.
     *
     * With the `index`, the BFS runs on the driver over the held graph:
-    * neighbours and rules come back as local rows, and the edges are a
-    * lazy filter of the committed edges checkpoint on the inner ids, so
-    * the call runs no Spark job and caches no RDD. Larger snapshots run
+    * neighbours and rules come back as local rows, and the edges are the
+    * lazy `Bfs.edgesTouching` of the committed edges checkpoint on the
+    * inner ids, so the call runs no Spark job and caches no RDD. Larger snapshots run
     * one `Bfs.patternCompletion` to depth d as DataFrame joins: the ids it
     * reaches give the neighbours and rules, and those within d − 1 hops
     * the edges, as `Bfs.exploreEdges` selects them.
@@ -273,10 +273,7 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
     index match {
       case Some(ix) =>
         ix.explore(nodeId, d).map { n =>
-          val inner = n.inner.toIndexedSeq
-          ExploreResult(
-            edges.filter(col("source_id").isin(inner: _*) || col("target_id").isin(inner: _*)),
-            n.neighbors, n.rules)
+          ExploreResult(graft.graph.Bfs.edgesTouching(edges, n.inner.toSeq.toDF("id")), n.neighbors, n.rules)
         }
       case None =>
         if (concepts.filter(col("id") === nodeId).isEmpty) None

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.core.LocalSpark
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.DetExtractor
+import graft.extract.{CodeExamples, DetExtractor}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DetExtractorSuite extends AnyFunSuite {
@@ -93,5 +93,68 @@ class DetExtractorSuite extends AnyFunSuite {
     val a = DetExtractor.extract(text)
     val b = DetExtractor.extract(text)
     assert(a == b)
+  }
+
+  test("dedupMentions: generalizable beats illustrative on a confidence tie") {
+    def m(name: String, conf: Double, role: String, pos: Int) =
+      DetExtractor.Mention(name, name, pos, pos + name.length, pos, pos + 1, conf,
+        s"at $pos", role = role, illustrates = if (role == "illustrative") "Parent" else null)
+    // illustrative occurrence precedes an equal-confidence generalizable one
+    val kept = DetExtractor.dedupMentions(Vector(
+      m("Redis", 0.7, "illustrative", 0), m("Redis", 0.7, "generalizable", 10)))
+    assert(kept.size == 1 && kept.head.role == "generalizable")
+    // reverse arrival order: generalizable still wins (first kept)
+    val kept2 = DetExtractor.dedupMentions(Vector(
+      m("Redis", 0.7, "generalizable", 0), m("Redis", 0.7, "illustrative", 10)))
+    assert(kept2.head.role == "generalizable")
+    // higher confidence still dominates role
+    val kept3 = DetExtractor.dedupMentions(Vector(
+      m("Redis", 0.7, "generalizable", 0), m("Redis", 0.9, "illustrative", 10)))
+    assert(kept3.head.role == "illustrative" && kept3.head.confidence == 0.9)
+    // equal confidence, both generalizable: earlier position wins (unchanged)
+    val kept4 = DetExtractor.dedupMentions(Vector(
+      m("Redis", 0.7, "generalizable", 0), m("Redis", 0.7, "generalizable", 10)))
+    assert(kept4.head.begin == 0)
+  }
+
+  // ---- E10: illustrative mention tagging (extract side) ----
+
+  test("E10: 'such as' mention is illustrative of the nearest preceding mention") {
+    val s = "Auth Module offers integrations such as Key Vault in production."
+    val ms = DetExtractor.detectMentions(s, DetExtractor.tokens(s))
+    val kv = ms.find(_.name == "Key Vault").get
+    assert(kv.role == "illustrative" && kv.illustrates == "Auth Module")
+    assert(ms.find(_.name == "Auth Module").get.role == "generalizable")
+  }
+
+  test("E10: sentence-initial 'For example' mention is an orphan (no parent)") {
+    val s = "For example Zephyr Ledger handles overflow gracefully."
+    val ms = DetExtractor.detectMentions(s, DetExtractor.tokens(s))
+    val z = ms.find(_.name == "Zephyr Ledger").get
+    assert(z.role == "illustrative" && z.illustrates == null)
+  }
+
+  // ---- code examples (models.py:91-119; anthropic.py:385-454) ----
+
+  test("code examples: fenced blocks with language, description, antipattern flag") {
+    val text = Seq(
+      "The following example shows Auth Module usage reliably.",
+      "```python",
+      "client = connect(\"auth_module\")",
+      "client.retry(3)",
+      "```",
+      "Do not copy this bad example for Key Vault.",
+      "```",
+      "x = 1",
+      "```",
+      "```python",
+      "unterminated block is ignored").mkString("\n")
+    val blocks = CodeExamples.extractBlocks(text)
+    assert(blocks.size == 2)
+    assert(blocks(0).language == "python" && !blocks(0).is_antipattern)
+    assert(blocks(0).code == "client = connect(\"auth_module\")\nclient.retry(3)")
+    assert(blocks(0).names == Seq("auth module"))
+    assert(blocks(1).language == "unknown" && blocks(1).is_antipattern)
+    assert(blocks(1).names == Seq("key vault"))
   }
 }

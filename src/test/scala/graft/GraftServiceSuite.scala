@@ -553,9 +553,11 @@ class GraftServiceSuite extends SparkFunSuite {
         .withColumn("target_id", lit(dst).cast("string"))
         .withColumn("confidence", confidence.fold(lit(null))(lit).cast(t))
     }
+    // plus one exact copy of an edge row of the hub: every path keeps one row per key
+    val hubEdge = edges0.filter(col("source_id") === hub || col("target_id") === hub).limit(1)
     st.commitReplace("edges",
       edges0.unionByName(edgeLike(leaf, ghost, None)).unionByName(edgeLike(ghost, far, Some(0.5)))
-        .unionByName(edgeLike(leaf, null, Some(0.4))).localCheckpoint(),
+        .unionByName(edgeLike(leaf, null, Some(0.4))).unionByName(hubEdge).localCheckpoint(),
       Seq.empty)
     def ruleLike(id: String, cids: Seq[String]) = rules0.limit(1)
       .withColumn("id", lit(id)).withColumn("concept_ids", typedLit(cids))

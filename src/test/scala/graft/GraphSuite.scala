@@ -435,4 +435,38 @@ class GraphSuite extends SparkFunSuite {
     assert(math.abs(out("n3") - 1.03) < 1e-9)
     assert(math.abs(out("n4") - 1.1) < 1e-9)
   }
+
+  test("retrieveFull bundles rules for activated concepts; BFS fallback selectable") {
+    import graft.core.Embeddings
+    val qText = "bundled rules probe"
+    val qv = Embeddings.embed(qText)
+    val concepts = Seq(
+      ("web:Alpha", "Alpha", qv.toSeq),
+      ("web:Gamma", "Gamma", Embeddings.embed("something unrelated entirely").toSeq))
+      .toDF("id", "name", "embedding")
+    val edges = Seq(("web:Alpha", "web:Gamma", 0.9))
+      .toDF("source_id", "target_id", "confidence")
+    val factors = Seq.empty[(String, Double)].toDF("node_id", "factor")
+    val rules = Seq(
+      ("rule:1", "Alpha must be monitored.", "requirement", Seq("web:Alpha")),
+      ("rule:2", "Unrelated rule.", "requirement", Seq("web:Nowhere")))
+      .toDF("id", "text", "category", "concept_ids")
+
+    val out = graft.query.Retrieval.retrieveFull(concepts, edges, factors, qText,
+      topK = 2, rules = Some(rules))
+    val bundled = out.rules.as[(String, String, String, Double)].collect()
+    assert(bundled.map(_._1).toSeq == Seq("rule:1")) // only the activated concept's rule
+    val topCombined = out.results
+      .orderBy(org.apache.spark.sql.functions.col("combined").desc)
+      .select("combined").as[Double].head()
+    assert(math.abs(bundled.head._4 - topCombined) < 1e-12) // relevance = max activation
+
+    // BFS fallback: same contract, scores from pattern completion
+    val bfs = graft.query.Retrieval.retrieveFull(concepts, edges, factors, qText,
+      topK = 2, rules = Some(rules), strategy = graft.query.Retrieval.BfsCompletion)
+    val byId = bfs.results.select("id", "ppr").as[(String, Double)].collect().toMap
+    assert(byId("web:Alpha") == 1.0) // seed depth 0
+    assert(byId("web:Gamma") >= 0.5) // neighbor at depth 1 (or a vec seed itself)
+    assert(bfs.rules.count() == 1)
+  }
 }

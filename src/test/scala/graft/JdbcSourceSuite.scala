@@ -97,4 +97,55 @@ class JdbcSourceSuite extends SparkFunSuite {
     assert(names.contains("The Platform"))
     assert(concepts.count() > 0)
   }
+
+  // ---- structured/DB source modality (S8/S9, J8, F6–F8) ----
+
+  test("F6/F7: natural-language row serialization skips internals, formats values") {
+    import graft.sources.Structured
+    val df = Seq(
+      (1L, "Widget", "Does things", 2.5, true, "2020-01-01", 7L)
+    ).toDF("id", "name", "description", "weight", "active", "created_at", "owner_id")
+    val text = df.select(Structured.serializeNatural(df, "food_items").as("t"))
+      .as[String].head()
+    assert(text == "A food item named 'Widget' Does things with weight: 2.5, active: yes")
+    val kv = df.select(Structured.serializeKeyValue(df, "food_items").as("t"))
+      .as[String].head()
+    assert(kv == "table=food_items, name=Widget, description=Does things, " +
+      "weight=2.5, active=yes")
+  }
+
+  test("J8: FK classification priority order (mapping_rules.py:38-81)") {
+    import graft.sources.Structured
+    val cases = Seq(
+      // (source_column, on_delete, table, nFks, nNonKey, expected)
+      ("owner_id", "NO ACTION", "posts", 1, 5, "BELONGS_TO"),
+      ("post_id", "NO ACTION", "post_tags", 2, 0, "USES"), // junction suffix
+      ("a_id", "NO ACTION", "pairs", 2, 1, "USES"), // 2 FKs, ≤2 non-key cols
+      ("parent_id", "CASCADE", "items", 1, 5, "PART_OF"),
+      ("meal_template_id", "NO ACTION", "meals", 1, 5, "INSTANCE_OF"),
+      ("other_id", "NO ACTION", "things", 1, 5, "PART_OF"))
+    val df = cases.toDF("c", "d", "t", "nf", "nk", "expected")
+    val got = df.select(col("expected"),
+      Structured.classifyFk(col("c"), col("d"), col("t"), col("nf"), col("nk")).as("got"))
+    assert(got.filter(col("expected") =!= col("got")).count() == 0)
+  }
+
+  test("F8/S9: schema metadata → concepts, typed edges, constraint rules") {
+    import graft.sources.Structured
+    val tables = Seq(
+      ("users", Seq("id", "name", "email"), Seq("id")),
+      ("posts", Seq("id", "title", "user_id", "created_at"), Seq("id"))
+    ).toDF("table_name", "columns", "pk_columns")
+    val fks = Seq(("posts", "user_id", "users", "NO ACTION"))
+      .toDF("table_name", "source_column", "ref_table", "on_delete")
+    val constraints = Seq(("posts", "posts_title_check", "((length(title) > 0))"))
+      .toDF("table_name", "constraint_name", "check_clause")
+    val (concepts, edges, rules) = Structured.schemaToKg(tables, fks, constraints, "db")
+    assert(concepts.count() == 2)
+    assert(concepts.filter(col("id") === "db:User").count() == 1) // singularized + titled
+    val e = edges.as[(String, String, String, Double, String)].head()
+    assert(e._1 == "db:Post" && e._2 == "db:User" && e._3 == "BELONGS_TO")
+    val r = rules.select("text", "category").as[(String, String)].head()
+    assert(r == (("In posts, length(title) > 0", "constraint")))
+  }
 }

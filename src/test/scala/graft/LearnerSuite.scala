@@ -150,4 +150,75 @@ class LearnerSuite extends SparkFunSuite {
       .collect()(0)
     assert(alt.getAs[Double]("alpha") == 2.0 && alt.getAs[Double]("beta") == 1.0)
   }
+
+  test("Thompson: ArmState.update matches the distributed posterior aggregation") {
+    import graft.learning.Thompson
+    val rewards = Seq(1.0, 0.0, 1.0, 0.3, 0.0, 1.0)
+    val sequential = rewards.foldLeft(Thompson.ArmState())(_.update(_))
+    val agg = Thompson.posteriors(rewards.map(("arm", _)).toDF("arm_id", "reward"))
+      .collect().head
+    assert(math.abs(agg.getAs[Double]("alpha") - sequential.alpha) < 1e-12)
+    assert(math.abs(agg.getAs[Double]("beta") - sequential.beta) < 1e-12)
+    assert(agg.getAs[Long]("pulls") == sequential.pulls)
+    assert(math.abs(agg.getAs[Double]("total_reward") - sequential.totalReward) < 1e-12)
+  }
+
+  test("Thompson: posterior mean converges to the true rate (property)") {
+    import graft.learning.Thompson
+    val rng = new java.util.Random(42L)
+    val trueRates = Map("good" -> 0.8, "bad" -> 0.2)
+    val obs = (1 to 2000).flatMap { _ =>
+      trueRates.map { case (arm, p) => (arm, if (rng.nextDouble() < p) 1.0 else 0.0) }
+    }
+    val means = Thompson.posteriors(obs.toDF("arm_id", "reward"))
+      .select("arm_id", "posterior_mean").as[(String, Double)].collect().toMap
+    assert(math.abs(means("good") - 0.8) < 0.03)
+    assert(math.abs(means("bad") - 0.2) < 0.03)
+  }
+
+  test("Thompson.select: exploit, cold-start force-include, budget, determinism") {
+    import graft.learning.Thompson
+    val arms = Seq(Thompson.Arm("good", 10), Thompson.Arm("bad", 10),
+      Thompson.Arm("fresh", 10))
+    val states = Map(
+      "good" -> Thompson.ArmState(80, 20, 100, 80),
+      "bad" -> Thompson.ArmState(20, 80, 100, 20))
+    // exploit: over many seeded rounds the high-posterior arm dominates
+    val wins = (1 to 200).count { s =>
+      Thompson.select(Seq(Thompson.Arm("good"), Thompson.Arm("bad")), states,
+        k = 1, seed = s.toLong).selected.head.id == "good"
+    }
+    assert(wins > 160, s"good arm won only $wins/200 rounds")
+    // cold start: an arm below minPulls is always forced in
+    val withFresh = Thompson.select(arms, states, k = 1, seed = 7L, minPulls = 5)
+    assert(withFresh.selected.exists(_.id == "fresh"))
+    // token budget caps the selection
+    val budgeted = Thompson.select(arms, states, k = 3, seed = 7L, tokenBudget = 20)
+    assert(budgeted.usedTokens <= 20 && budgeted.selected.size == 2)
+    // determinism: same seed, same outcome
+    val a = Thompson.select(arms, states, k = 2, seed = 99L)
+    val b = Thompson.select(arms, states, k = 2, seed = 99L)
+    assert(a.selected.map(_.id) == b.selected.map(_.id) && a.scores == b.scores)
+    // degenerate posteriors from signed credit (alpha ≤ 1/3) must sample a
+    // finite probability, never NaN
+    val rng = new java.util.Random(1L)
+    for (shape <- Seq(0.0, 0.1, 0.3, 0.5)) {
+      val s = Thompson.betaSample(rng, shape, 1.0)
+      assert(!s.isNaN && s >= 0.0 && s <= 1.0, s"betaSample(a=$shape) gave $s")
+    }
+  }
+
+  // ---- Thompson baseline score shape (ADVICE r3, low) --------------------
+
+  test("Thompson baseline round scores only the selected arms at 0.5") {
+    val arms = (0 until 6).map(i => Thompson.Arm(s"a$i"))
+    val r = Thompson.select(arms, Map.empty, k = 3, seed = 7L, baselineRate = 1.0)
+    assert(r.isBaseline)
+    assert(r.selected.size == 3)
+    assert(r.scores.keySet == r.selected.map(_.id).toSet)
+    assert(r.scores.values.forall(_ == 0.5))
+    // Thompson rounds still score every candidate (reference scores dict)
+    val t = Thompson.select(arms, Map.empty, k = 3, seed = 7L, baselineRate = 0.0)
+    assert(t.scores.keySet == arms.map(_.id).toSet)
+  }
 }

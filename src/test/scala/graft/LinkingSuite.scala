@@ -1,6 +1,7 @@
 package graft
 
 import graft.link.Linking
+import org.apache.spark.sql.functions._
 
 class LinkingSuite extends SparkFunSuite {
   import spark.implicits._
@@ -52,5 +53,42 @@ class LinkingSuite extends SparkFunSuite {
       .collect().map(_.toString).toSet
     val counted = Linking.resolveEdges(triples, concepts).collect().map(_.toString).toSet
     assert(hinted == counted)
+  }
+
+  // ---- E10: buildConcepts reconciliation (link side, base.py:159-223) ----
+
+  private def mentionRows(rows: (String, String, String, String, Double, String, String)*) =
+    rows.toSeq.toDF("url", "day", "chunk_id", "name", "confidence__", "role", "illustrates")
+      .withColumnRenamed("confidence__", "confidence")
+      .select(col("url"), col("day"), col("chunk_id"), col("name"),
+        concat(lit("d:"), col("name")).as("description"),
+        col("confidence").cast("double"), col("role"), col("illustrates"))
+
+  test("E10: illustrative mentions attach to parent properties[examples]") {
+    val m = mentionRows(
+      ("u1", "d", "c1", "Auth Module", 0.9, "generalizable", null),
+      ("u1", "d", "c1", "Key Vault", 0.9, "illustrative", "Auth Module"),
+      ("u2", "d", "c2", "Token Bucket", 0.7, "illustrative", "auth module"))
+    val c = Linking.buildConcepts(m, "web", "v1")
+    assert(c.count() == 1) // only the parent becomes a concept
+    val props = c.select(col("properties")("examples")).as[String].head()
+    assert(props.contains("\"Key Vault\"") && props.contains("\"Token Bucket\""))
+    assert(props.contains("\"source_location\":\"c1\""))
+  }
+
+  test("E10: orphan illustrative becomes a tagged concept; existing name wins") {
+    val m = mentionRows(
+      ("u1", "d", "c1", "Auth Module", 0.9, "generalizable", null),
+      ("u1", "d", "c1", "Ghost Feature", 0.7, "illustrative", "Unknown Parent"),
+      ("u2", "d", "c2", "Auth Module", 0.7, "illustrative", "Other Unknown"))
+    val c = Linking.buildConcepts(m, "web", "v1")
+    assert(c.count() == 2) // Auth Module (generalizable wins) + Ghost Feature orphan
+    val ghost = c.filter(col("name") === "Ghost Feature")
+    val (role, ill) = ghost.select(col("properties")("concept_role"),
+      col("properties")("illustrates")).as[(String, String)].head()
+    assert(role == "illustrative" && ill == "Unknown Parent")
+    // the illustrative "Auth Module" mention must NOT demote the concept
+    val auth = c.filter(col("name") === "Auth Module")
+    assert(auth.select("confidence").as[Double].head() == 0.9)
   }
 }

@@ -40,4 +40,18 @@ class LocalSparkSuite extends SparkFunSuite {
       .toList
     assert(setters.isEmpty, s"session conf writes under src/main: $setters")
   }
+
+  test("repo hygiene: no source file contains control bytes other than \\n and \\t") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val bad = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val bytes = Files.readAllBytes(p)
+        val idx = bytes.indexWhere(b => b >= 0 && b < 0x20 && b != '\n' && b != '\t')
+        if (idx >= 0) Some(s"$p byte offset $idx value 0x${bytes(idx).toHexString}") else None
+      }
+      .toList
+    assert(bad.isEmpty, s"control bytes found (git treats these files as binary): $bad")
+  }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.learning.{ArmOutcome, Learner, LearnerConfig}
 import graft.learning.Thompson.Arm
 import graft.observe.Observe
-import org.apache.spark.sql.functions._
 
 /** qortex-observe analog: typed events from learner/service calls, no-op
   * when unconfigured, bounded in-memory sink, JSONL sink, traced timing.

@@ -152,4 +152,52 @@ class StoreSuite extends SparkFunSuite {
     assert(st.commitReplace("t", Seq(3L).toDF("k"), Seq.empty).id == 3L)
     assert(st.latest("t").map(_.id).contains(3L))
   }
+
+  // ---- snapshot store: time travel / rollback / expire / recovery ----
+
+  test("snapshot time travel, rollback, diff and expire") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tt").toString
+    val store = new SnapshotStore(dir)
+    store.commitAppend("t", Seq((1, "a")).toDF("k", "v"), Seq("p1"))
+    store.commitAppend("t", Seq((2, "b")).toDF("k", "v"), Seq("p2"))
+    assert(store.read("t").count() == 2)
+    assert(store.read("t", 0L).count() == 1) // time travel to v0
+    val (added, removed) = store.diff("t", 0L, 1L)
+    assert(added == Seq("batch=00001") && removed.isEmpty)
+
+    store.rollback("t", 0L) // new snapshot v2 with v0's content
+    assert(store.read("t").count() == 1)
+    assert(store.latest("t").get.id == 2L)
+    // resume-after-rollback converges: appending p2 again is allowed because
+    // v2 carries v0's inputPartitions
+    assert(!store.ingestedPartitions("t").contains("p2"))
+
+    // orphan batch dir from a killed write + expiry of old snapshots
+    val orphan = new java.io.File(s"$dir/t/data/batch=99999"); orphan.mkdirs()
+    val removedDirs = store.expire("t", keepLast = 1)
+    assert(removedDirs.contains("batch=99999"))
+    assert(store.read("t").count() == 1) // latest still readable
+  }
+
+  test("latest() recovers from max manifest when LATEST pointer is missing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rec").toString
+    val store = new SnapshotStore(dir)
+    store.commitAppend("t", Seq((1, "a")).toDF("k", "v"), Seq("p1"))
+    store.commitAppend("t", Seq((2, "b")).toDF("k", "v"), Seq("p2"))
+    new java.io.File(s"$dir/t/_snapshots/LATEST").delete()
+    assert(store.latest("t").get.id == 1L)
+    assert(store.read("t").count() == 2)
+    // and the next commit continues the id sequence instead of restarting
+    store.commitAppend("t", Seq((3, "c")).toDF("k", "v"), Seq("p3"))
+    assert(store.latest("t").get.id == 2L)
+  }
+
+  test("manifest JSON escape/unescape round-trips hostile strings") {
+    val hostile = Seq("plain", "back\\slash", "qu\"ote", "new\nline",
+      "tab\there", "ctrl\u0001char", "mix\\\"\n\u0002")
+    val dir = java.nio.file.Files.createTempDirectory("graft-esc").toString
+    val store = new SnapshotStore(dir)
+    store.commitAppend("t", Seq((1, "a")).toDF("k", "v"), hostile)
+    assert(store.ingestedPartitions("t") == hostile.toSet)
+  }
 }
