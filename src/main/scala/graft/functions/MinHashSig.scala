@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `UTF8String`) and writes its result directly as `GenericArrayData` —
   * on the 100-TB dedup path the signature scan is the dominant CPU
   * stage, so the per-row overhead is the throughput (PlanQualitySuite
-  * pins the UDF-free plan; OpsSuite pins value-equality vs the UDF).
+  * pins the UDF-free plan; Round4Suite pins value-equality vs the UDF).
   *
   * Null contract matches the UDF exactly: a NULL document yields the
   * all-MaxValue sentinel signature, never NULL (downstream banding

@@ -201,35 +201,4 @@ class CanonSuite extends SparkFunSuite {
     assert(updated == Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 6L -> 1L, 9L -> 1L,
       20L -> 20L, 21L -> 20L))
   }
-
-  // ---- canonicalMap through star CC --------------------------------------
-
-  test("connectedComponentsAuto: shallow graph stays on min-label; deep chain escalates to star") {
-    // the min-label/star switch is gone: both shapes now run through the one
-    // star entry point and must still get component-minimum labels
-    // path graph a00-a01-...-a19: diameter 19
-    val chain = (0 until 19).map(i => (f"a$i%02d", f"a${i + 1}%02d")).toDF("id_a", "id_b")
-    val got = Canon.connectedComponents(chain)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got.size == 20 && got.values.forall(_ == "a00"))
-    // shallow star-shaped graph
-    val shallow = (1 until 6).map(i => ("hub", s"s$i")).toDF("id_a", "id_b")
-    val got2 = Canon.connectedComponents(shallow)
-      .collect().map(r => r.getString(1)).toSet
-    assert(got2 == Set("hub"))
-  }
-
-  test("canonicalMap labels are component minima through the star-CC path") {
-    val concepts = Seq("web:A Cache", "web:B Cache", "web:C Cache", "web:Solo Thing")
-      .map(id => (id, id.stripPrefix("web:")))
-      .toDF("id", "name")
-    val aliases = Seq(("A Cache", "B Cache"), ("B Cache", "C Cache"))
-      .toDF("name_a", "name_b")
-    val got = Canon.canonicalMap(concepts, aliases, nameSimThreshold = 2.0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got("web:A Cache") == "web:A Cache")
-    assert(got("web:B Cache") == "web:A Cache")
-    assert(got("web:C Cache") == "web:A Cache")
-    assert(got("web:Solo Thing") == "web:Solo Thing") // identity fallback
-  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.causal._
-import graft.query.Service
 import org.apache.spark.sql.functions._
 
 class CausalSuite extends SparkFunSuite {
@@ -202,78 +201,5 @@ class CausalSuite extends SparkFunSuite {
     // causal rules flow through seed entries with null template provenance
     val entries = Projectors.seedEntries(Projectors.enrichTemplate(all))
     assert(entries.filter(col("prov_derivation") === "causal").count() == 6)
-  }
-
-  // ---- causal driver-boundary caps ---------------------------------------
-
-  test("fromEdgeFrame: over-cap edge collect truncates to the strongest, loudly") {
-    // 10 REQUIRES edges, strengths descending with source index
-    val edges = (0 until 10).map(i =>
-        (s"d:s$i", s"d:t$i", "REQUIRES", 1.0 - i * 0.05))
-      .toDF("source_id", "target_id", "relation_type", "confidence")
-    val dag = CausalDag.fromEdgeFrame(edges, maxEdges = 4)
-    assert(dag.edgeCount == 4)
-    // strongest-first deterministic truncation: s0..s3 survive (highest conf)
-    assert(dag.edges.map(_._1).toSet == Set("d:s0", "d:s1", "d:s2", "d:s3"))
-    // under the cap: untouched
-    assert(CausalDag.fromEdgeFrame(edges, maxEdges = 100).edgeCount == 10)
-  }
-
-  test("collectIdsBounded: over-cap keeps the ascending-id prefix") {
-    val ids = (0 until 20).map(i => f"id$i%02d").reverse.toDF("id")
-    val kept = Causal.collectIdsBounded(ids, maxNodes = 5)
-    assert(kept.sorted == (0 until 5).map(i => f"id$i%02d"))
-  }
-
-  // ---- credit propagation node seeding (ADVICE r3, medium) ---------------
-
-  test("propagateCredit: edge-less concept gets direct credit when concepts are given") {
-    val edges = Seq(("web:A", "web:B", "REQUIRES", 0.9))
-      .toDF("source_id", "target_id", "relation_type", "confidence")
-    val concepts = Seq(("web:A", "web"), ("web:B", "web"), ("web:Island", "web"))
-      .toDF("id", "domain")
-    val outcomes = Seq(("web:Island", "accepted")).toDF("node_id", "outcome")
-
-    // without the concepts table the isolated id is not a DAG node → no credit
-    assert(Service.propagateCredit(edges, outcomes).isEmpty)
-
-    // with it, from_backend's find_nodes pass seeds the node → direct credit
-    val credit = Service.propagateCredit(edges, outcomes, Some(concepts))
-    assert(credit.isDefined)
-    assert(credit.get.directCount == 1)
-    assert(credit.get.posteriorDeltas("web:Island") == ((1.0, 0.0)))
-  }
-
-  test("propagateCredit: ids missing from the KG are excluded from the domain average") {
-    val edges = Seq(("web:A", "web:B", "REQUIRES", 0.9))
-      .toDF("source_id", "target_id", "relation_type", "confidence")
-    val concepts = Seq(("web:A", "web"), ("web:B", "web")).toDF("id", "domain")
-    // known id accepted (+1), unknown id rejected (−1): the reference's
-    // get_node check drops the unknown row, so avg reward = +1, not 0
-    val outcomes = Seq(("web:B", "accepted"), ("web:Ghost", "rejected"))
-      .toDF("node_id", "outcome")
-    val credit = Service.propagateCredit(edges, outcomes, Some(concepts))
-    assert(credit.isDefined)
-    // direct credit for B at avg=1.0, ancestor credit for A at 0.5·0.81
-    val deltas = credit.get.posteriorDeltas
-    assert(deltas("web:B") == ((1.0, 0.0)))
-    assert(math.abs(deltas("web:A")._1 - 0.5 * 0.81) < 1e-12)
-    assert(!deltas.contains("web:Ghost"))
-  }
-
-  // ---- propagateCredit enforced driver bound ------------------------------
-
-  test("propagateCredit throws loudly when the outcomes frame exceeds the cap") {
-    val edges = (0 until 9).map(i => (s"d:n$i", s"d:n${i + 1}", "SUPPORTS", 0.9))
-      .toDF("source_id", "target_id", "relation_type", "confidence")
-    val outcomes = (0 until 10).map(i => (s"d:n$i", "accepted"))
-      .toDF("node_id", "outcome")
-    val ex = intercept[IllegalArgumentException] {
-      Service.propagateCredit(edges, outcomes, maxOutcomes = 5)
-    }
-    assert(ex.getMessage.contains("driver cap"))
-    // under the cap: same frame propagates fine
-    val ok = Service.propagateCredit(edges, outcomes, maxOutcomes = 100)
-    assert(ok.isDefined)
   }
 }

@@ -207,18 +207,4 @@ class LearnerSuite extends SparkFunSuite {
       assert(!s.isNaN && s >= 0.0 && s <= 1.0, s"betaSample(a=$shape) gave $s")
     }
   }
-
-  // ---- Thompson baseline score shape (ADVICE r3, low) --------------------
-
-  test("Thompson baseline round scores only the selected arms at 0.5") {
-    val arms = (0 until 6).map(i => Thompson.Arm(s"a$i"))
-    val r = Thompson.select(arms, Map.empty, k = 3, seed = 7L, baselineRate = 1.0)
-    assert(r.isBaseline)
-    assert(r.selected.size == 3)
-    assert(r.scores.keySet == r.selected.map(_.id).toSet)
-    assert(r.scores.values.forall(_ == 0.5))
-    // Thompson rounds still score every candidate (reference scores dict)
-    val t = Thompson.select(arms, Map.empty, k = 3, seed = 7L, baselineRate = 0.0)
-    assert(t.scores.keySet == arms.map(_.id).toSet)
-  }
 }

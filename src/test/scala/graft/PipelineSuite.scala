@@ -157,8 +157,4 @@ class PipelineSuite extends SparkFunSuite {
     assert(ce.filter(size(col("concept_ids")) > 0).count() > 0)
     assert(ce.filter(!col("id").startsWith("web:example:")).count() == 0)
   }
-
-  test("SparkEntry.entry (driver smoke surface) returns triples") {
-    assert(SparkEntry.entry(spark).count() > 0)
-  }
 }

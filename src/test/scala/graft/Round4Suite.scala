@@ -4,7 +4,6 @@ import graft.canon.Canon
 import graft.causal.{Causal, CausalDag}
 import graft.learning.Thompson
 import graft.query.Service
-import org.apache.spark.sql.functions._
 
 /** Round-4 regression tests: the causal driver-collect caps, DAG node
   * seeding for credit propagation, the Thompson baseline score shape,

@@ -1,12 +1,9 @@
 package graft
 
-import graft.query.{SessionIndex, VectorIndex, VectorMigrate}
 import graft.store.SnapshotStore
-import org.apache.spark.sql.functions._
 
-/** The snapshot-committed vector index (merge-on-read upserts, tombstones,
-  * IVF layout), its migration between indexes, and the session-scoped
-  * index built on it.
+/** The snapshot-committed vector index: merge-on-read upserts,
+  * tombstones and snapshot time travel.
   */
 class VectorIndexSuite extends SparkFunSuite {
   import spark.implicits._
@@ -68,210 +65,5 @@ class VectorIndexSuite extends SparkFunSuite {
     assert(ix.count() == 498)
     val afterCompact = ix.read().as[(String, Seq[Float])].collect().toMap
     assert(afterCompact("5").head == 2.0f && !afterCompact.contains("3"))
-  }
-
-  // ---- VectorIndex intra-JVM write serialization -------------------------
-
-  test("VectorIndex: concurrent upserts mint distinct __seq batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vi-conc").toString
-    val store = new graft.store.SnapshotStore(dir)
-    val vi = new graft.query.VectorIndex(store, "vecs")
-    vi.upsert(Seq(("base", Seq(1.0f, 0.0f))).toDF("id", "embedding"))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = (0 until 4).map { i =>
-      Future(vi.upsert(Seq((s"v$i", Seq(i.toFloat, 1.0f))).toDF("id", "embedding")))
-    }
-    fs.foreach(Await.result(_, 60.seconds))
-    // every batch got its own seq → latest snapshot id == 4 appends + base
-    assert(store.latest("vecs").map(_.id).contains(4L))
-    assert(vi.count() == 5L)
-  }
-
-  test("VectorIndex: IVF layout serves the same neighbors as brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vi-ivf").toString
-    val store = new graft.store.SnapshotStore(dir)
-    val vi = new graft.query.VectorIndex(store, "vecs")
-    // two well-separated families of vectors
-    val rows = (0 until 12).map { i =>
-      val fam = i % 2
-      (s"v$i", Seq.tabulate(6)(d =>
-        (if (d / 3 == fam) 1.0f else 0.0f) + i * 0.001f))
-    }
-    vi.upsert(rows.toDF("id", "embedding"))
-    val ivf = vi.buildIvf(nClusters = 2, iters = 3)
-    val queries = rows.take(2).toDF("id", "embedding")
-    val got = vi.searchIvf(ivf, queries, k = 3, nprobe = 1)
-      .select("query_id", "neighbor_id").as[(String, String)].collect().toSet
-    val exact = graft.ops.Similarity.bruteForceTopK(vi.read(), queries, k = 3,
-      idCol = "id", vecCol = "embedding")
-      .select("query_id", "neighbor_id").as[(String, String)].collect().toSet
-    assert(got == exact, s"IVF ${got} vs exact ${exact}")
-  }
-
-  // ---- Vector index migration ---------------------------------------------
-
-  private def vecOf(seed: Int, dim: Int = 4): Seq[Float] =
-    (0 until dim).map(i => (seed * 31 + i).toFloat)
-
-  test("VectorMigrate copies every vector, is idempotent, validates post-write") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-migrate").toString
-    val store = new SnapshotStore(wh)
-    val src = new VectorIndex(store, "vi_src")
-    val dst = new VectorIndex(store, "vi_dst")
-    src.upsert(Seq(("a", vecOf(1)), ("b", vecOf(2)), ("c", vecOf(3)))
-      .toDF("id", "embedding").withColumn("embedding", col("embedding").cast("array<float>")))
-    src.remove(Seq("c").toDF("id")) // merge-on-read state must resolve first
-
-    val r = VectorMigrate.migrate(src, dst, expectDim = Some(4))
-    assert(r.vectorsRead == 2 && r.vectorsWritten == 2 && r.dimension == 4)
-    assert(dst.count() == 2)
-    // idempotent: re-running upserts the same rows, count unchanged
-    val r2 = VectorMigrate.migrate(src, dst)
-    assert(r2.vectorsWritten == 2 && dst.count() == 2)
-  }
-
-  test("VectorMigrate: dry run writes nothing; transform re-embeds; bad dims throw") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-migrate2").toString
-    val store = new SnapshotStore(wh)
-    val src = new VectorIndex(store, "vi_src")
-    src.upsert(Seq(("a", vecOf(1)), ("b", vecOf(2)))
-      .toDF("id", "embedding").withColumn("embedding", col("embedding").cast("array<float>")))
-
-    val dry = new VectorIndex(store, "vi_dry")
-    val rd = VectorMigrate.migrate(src, dry, dryRun = true)
-    assert(rd.vectorsRead == 2 && rd.vectorsWritten == 0 && dry.count() == 0)
-
-    // re-embed: project to 2 dims
-    val dst = new VectorIndex(store, "vi_reembed")
-    val rt = VectorMigrate.migrate(src, dst,
-      transform = df => df.select(col("id"),
-        slice(col("embedding"), 1, 2).as("embedding")))
-    assert(rt.dimension == 2 && dst.count() == 2)
-
-    // expected-dimension mismatch throws
-    val dst2 = new VectorIndex(store, "vi_baddim")
-    val ex = intercept[IllegalArgumentException] {
-      VectorMigrate.migrate(src, dst2, expectDim = Some(8))
-    }
-    assert(ex.getMessage.contains("dimension"))
-
-    // row-dropping transform throws (a migration carries every vector)
-    val ex2 = intercept[IllegalArgumentException] {
-      VectorMigrate.migrate(src, dst2, transform = _.limit(1))
-    }
-    assert(ex2.getMessage.contains("vector count"))
-  }
-
-  // ---- Session-scoped online retrieval ------------------------------------
-
-  test("SessionIndex: ingest → scoped search → expiry lifecycle") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-session").toString
-    val store = new SnapshotStore(wh)
-    val si = new SessionIndex(store)
-
-    assert(si.ingestMessage("", "s1").chunks == 0) // blank → no-op
-    val r1 = si.ingestMessage(
-      "The deploy pipeline uses canary rollouts. Rollbacks are automatic.",
-      "s1", role = "user", nowMillis = 1000L)
-    assert(r1.chunks >= 1 && r1.concepts == 0 && r1.edges == 0)
-    si.ingestMessage("Databases use snapshot isolation for reads.",
-      "s2", role = "assistant", nowMillis = 2000L)
-    // invalid role indexes as "unknown" (service.py:737-742)
-    si.ingestMessage("Weird role content.", "s2", role = "hacker", nowMillis = 2000L)
-    assert(store.read("session_chunks").filter(col("role") === "unknown").count() >= 1)
-
-    // search is session-scoped: s1's query never sees s2's chunks
-    val hits = si.search("s1", "canary deploy rollouts", topK = 3, nowMillis = 3000L)
-      .collect()
-    assert(hits.nonEmpty)
-    assert(hits.forall(_.getString(0).startsWith("s1:")))
-    assert(hits.exists(_.getString(2).contains("canary")))
-
-    // expire s1: its vectors and chunks are gone, s2 untouched
-    si.expire("s1")
-    assert(si.index.read().filter(col("id").startsWith("s1:")).count() == 0)
-    assert(store.read("session_chunks").filter(col("session_id") === "s1").count() == 0)
-    assert(si.index.read().filter(col("id").startsWith("s2:")).count() >= 1)
-    assert(!si.liveSessions.contains("s1") && si.liveSessions.contains("s2"))
-
-    // idle expiry with the injected clock
-    val expired = si.expireIdle(maxIdleMillis = 500L, nowMillis = 10000L)
-    assert(expired == Seq("s2"))
-    assert(si.index.count() == 0)
-  }
-
-  test("VectorMigrate rejects a transform that collides or re-keys ids") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-dup").toString
-    val store = new SnapshotStore(wh)
-    val src = new VectorIndex(store, "vi_src2")
-    val dst = new VectorIndex(store, "vi_dst2")
-    src.upsert(Seq(("a", vecOf(1)), ("b", vecOf(2)))
-      .toDF("id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>")))
-    // id collision: same row count, one destination vector silently lost
-    val collide = intercept[IllegalArgumentException] {
-      VectorMigrate.migrate(src, dst,
-        transform = df => df.withColumn("id", lit("a")))
-    }
-    assert(collide.getMessage.contains("duplicate ids") ||
-      collide.getMessage.contains("re-keyed"))
-    // re-key to ids outside the source set
-    val rekey = intercept[IllegalArgumentException] {
-      VectorMigrate.migrate(src, dst,
-        transform = df => df.withColumn("id", concat(col("id"), lit("-x"))))
-    }
-    assert(rekey.getMessage.contains("re-keyed"))
-    assert(dst.count() == 0) // nothing written by either failed migration
-  }
-
-  test("VectorMigrate rejects a null embedding before writing anything") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-null").toString
-    val store = new SnapshotStore(wh)
-    val src = new VectorIndex(store, "vi_src3")
-    val dst = new VectorIndex(store, "vi_dst3")
-    src.upsert(Seq(("a", Some(vecOf(1))), ("b", None), ("c", Some(vecOf(3))))
-      .toDF("id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>")))
-    val ex = intercept[IllegalArgumentException](VectorMigrate.migrate(src, dst, expectDim = Some(4)))
-    assert(ex.getMessage.contains("1 vector(s) have a null embedding"))
-    assert(dst.count() == 0)
-  }
-
-  test("VectorMigrate rejects a source listing an id twice, naming it as such") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-dupsrc").toString
-    val dst = new VectorIndex(new SnapshotStore(wh), "vi_dst4")
-    val rows = Seq(("a", vecOf(1)), ("a", vecOf(2)), ("b", vecOf(3)))
-      .toDF("id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    // a count taken after the join with the source read 5 rows here and
-    // blamed the transform for changing the vector count
-    val ex = intercept[IllegalArgumentException](
-      VectorMigrate.migrateRows(rows, dst, identity, None, dryRun = false))
-    assert(ex.getMessage.contains("duplicate or null ids (3 rows, 2 distinct ids)"))
-    assert(dst.count() == 0)
-  }
-
-  test("session messages sharing a 64-char prefix keep distinct vectors") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-sess-prefix").toString
-    val si = new SessionIndex(new SnapshotStore(wh))
-    // chunkId hashes (sourceId, idx, text.take(64)) — these two messages
-    // agree on their first 64 chars, so without the per-message sequence
-    // in sourceId the second upsert would overwrite the first
-    val p = "Please summarize the following document carefully and completely today: "
-    si.ingestMessage(p + "alpha body", "sx", nowMillis = 1L)
-    si.ingestMessage(p + "omega body", "sx", nowMillis = 2L)
-    assert(si.index.read().filter(col("id").startsWith("sx:")).count() == 2)
-    val texts = si.search("sx", p, topK = 5).select("text")
-      .as[String].collect().toSet
-    assert(texts.exists(_.contains("alpha")) && texts.exists(_.contains("omega")))
-  }
-
-  test("session search and expire on a fresh store are empty no-ops, not errors") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-sess-empty").toString
-    val si = new SessionIndex(new SnapshotStore(wh))
-    assert(si.search("nobody", "anything").count() == 0)
-    si.expire("nobody") // must not throw on a never-committed index
   }
 }

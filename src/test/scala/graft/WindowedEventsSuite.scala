@@ -114,39 +114,4 @@ class WindowedEventsSuite extends SparkFunSuite {
     StreamMain.runOnce(obsDir, outDir, ckDir)
     assert(sink().count() == 1)
   }
-
-  // ---- Streaming corpus curation ------------------------------------------
-
-  test("streaming curation: online exact dedup + quality gate survives restart") {
-    import graft.streaming.StreamingCuration
-    val s = spark
-    val base = java.nio.file.Files.createTempDirectory("graft-streamcur").toString
-    val (inDir, outDir, ckDir) = (s"$base/in", s"$base/out", s"$base/ck")
-    val outSchema =
-      org.apache.spark.sql.Encoders.product[StreamingCuration.CuratedDoc].schema
-    def sink() = spark.read.schema(outSchema).parquet(outDir)
-
-    // batch 1: two distinct docs, one of them below the token floor
-    Seq((1L, "the quick brown fox jumps"), (2L, "hi"))
-      .toDF("doc_id", "text").write.mode("append").parquet(inDir)
-    StreamingCuration.runOnce(inDir, outDir, ckDir)
-    val r1 = sink().as[StreamingCuration.CuratedDoc].collect().map(d => d.doc_id -> d).toMap
-    assert(r1(1L).novel && r1(1L).quality_ok)
-    assert(r1(2L).novel && !r1(2L).quality_ok) // admitted but quality-flagged
-    assert(r1.size == 2)
-
-    // batch 2 AFTER restart: a copy of doc 1's text must be caught by the
-    // checkpointed seen-content state, not re-admitted
-    Seq((5L, "the quick brown fox jumps"), (6L, "a brand new document entirely"))
-      .toDF("doc_id", "text").write.mode("append").parquet(inDir)
-    StreamingCuration.runOnce(inDir, outDir, ckDir)
-    val r2 = sink().as[StreamingCuration.CuratedDoc].collect().map(d => d.doc_id -> d).toMap
-    assert(r2.size == 4)
-    assert(!r2(5L).novel && r2(5L).dup_of == 1L)
-    assert(r2(6L).novel && r2(6L).quality_ok)
-
-    // draining again with nothing new emits nothing more
-    StreamingCuration.runOnce(inDir, outDir, ckDir)
-    assert(sink().count() == 4)
-  }
 }
