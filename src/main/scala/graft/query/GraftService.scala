@@ -26,6 +26,11 @@ import scala.collection.mutable
   * store writes the new factors from the driver with no Spark job; a
   * larger table is rewritten as `Service.feedback` does.
   *
+  * The answers the index gives are local frames. Each instance installs
+  * `graft.core.LocalFold` on its session (once per session, whoever built
+  * it), so a caller's `count`, `orderBy`, `groupBy`, `distinct` or `union`
+  * of them is evaluated on the driver too and starts no Spark job.
+  *
   * `rowLimit` is the size rule's bound, `Loops.RowsPerPartition` outside
   * tests.
   */
@@ -36,6 +41,8 @@ final class GraftService private[query] (store: SnapshotStore, rowLimit: Int)(
 
   def this(store: SnapshotStore)(implicit spark: SparkSession) =
     this(store, graft.core.Loops.RowsPerPartition.toInt)
+
+  graft.core.LocalFold.install(spark)
 
   private lazy val edges: DataFrame = store.read("edges").localCheckpoint()
   private lazy val rules: DataFrame = store.read("rules").localCheckpoint()

@@ -33,9 +33,11 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   * write the batch to `batch=N` → write v<N>.json to a temp name and
   * rename it into place → write LATEST = N the same way. A frame whose
   * rows are already on the driver (its plan optimises to one
-  * `LocalRelation`) is written from the driver with Spark's own Parquet
-  * writer, to a `_`-prefixed temp file renamed to its `part-` name; any
-  * other frame is written by a Spark job.
+  * `LocalRelation`; on a session with `graft.core.LocalFold` installed
+  * that includes a sorted, aggregated or unioned local frame) is written
+  * from the driver with Spark's own Parquet writer, to a `_`-prefixed
+  * temp file renamed to its `part-` name; any other frame is written by a
+  * Spark job.
   *
   * A killed run leaves either no new snapshot (data files are orphans,
   * invisible to readers) or a complete one — this is the distributed

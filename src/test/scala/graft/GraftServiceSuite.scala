@@ -5,7 +5,7 @@ import graft.fixtures.PagesGen
 import graft.pipeline.Ingest
 import graft.query.{GraftService, GraftServiceTestAccess, Retrieval}
 import graft.store.SnapshotStore
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.{Await, Future}
@@ -610,6 +610,67 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(reachedFar && ruledTwice && ruledGhost)
     assert(exploreAnswer(s, isolated, 3)._1.isEmpty)
     assert(s.explore(ghost).isEmpty && plain.explore(ghost).isEmpty) // an edge endpoint, not a concept
+  }
+
+  /** A sort key's value as Spark's ordering compares it: -0.0 as 0.0 and
+    * every NaN as one.
+    */
+  private def sortKey(v: Any): Any = v match {
+    case d: Double => if (d == 0.0) 0L else java.lang.Double.doubleToLongBits(d)
+    case x => x
+  }
+
+  /** Rows as a multiset of their bits. */
+  private def multiset(rows: Seq[Row]): Map[Seq[Any], Int] = bits(rows).groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** A sorted answer as its runs of rows with equal sort keys: each run's
+    * key and its rows as a multiset.
+    */
+  private def runs(rows: Seq[Row], keys: Seq[String]): Seq[(Seq[Any], Map[Seq[Any], Int])] =
+    rows.foldLeft(Vector.empty[(Seq[Any], Vector[Row])]) { (acc, r) =>
+      val k = keys.map(c => sortKey(r.get(r.fieldIndex(c))))
+      if (acc.nonEmpty && acc.last._1 == k) acc.init :+ (k -> (acc.last._2 :+ r)) else acc :+ (k -> Vector(r))
+    }.map { case (k, rs) => k -> multiset(rs) }
+
+  test("consuming an answer: count, orderBy, groupBy, distinct and union run no job and answer as Spark does") {
+    val q = svc.query(contexts.head, topK = 10)
+    val ex = svc.explore(exploreNodes.head, depth = 2).getOrElse(fail("explore returned None"))
+    // ties, NaN, -0.0, 0.0 and nulls in the sort and grouping keys, and two
+    // rows that differ only in the sign of a zero
+    val odd = spark.createDataFrame(Seq(
+      Row("x:nan", "a", 0.5, 0.1, Double.NaN), Row("x:nan2", "b", 0.5, 0.2, Double.NaN),
+      Row("x:neg0", null, 0.5, 0.3, -0.0), Row("x:pos0", "c", 0.5, 0.4, 0.0),
+      Row(null, "d", 0.25, 0.5, null), Row("x:z", "z", 0.75, 0.6, -0.0), Row("x:z", "z", 0.75, 0.6, 0.0),
+      Row("x:nulls", null, 0.25, 0.7, null)).asJava, q.items.schema)
+    val answers: Seq[(String, DataFrame, Seq[Column], Seq[String], Column)] = Seq(
+      ("query items", q.items.union(odd), Seq(col("combined"), col("vec_score").desc), Seq("combined", "vec_score"),
+        col("combined")),
+      ("query rules", q.rules, Seq(col("relevance").desc), Seq("relevance"), col("category")),
+      ("explore neighbors", ex.neighbors, Seq(col("name").desc_nulls_last), Seq("name"),
+        substring_index(col("id"), ":", 1)),
+      ("explore rules", ex.rules, Seq(col("category"), col("relevance")), Seq("category", "relevance"),
+        col("relevance")))
+    for ((name, answer, order, orderCols, group) <- answers) {
+      val ref = answer.localCheckpoint()
+      var n = 0L
+      assert(jobsOf { n = answer.count() } == 0, s"$name: count")
+      assert(n == ref.count() && n > 0, s"$name: count")
+
+      var sorted: Seq[Row] = Nil
+      assert(jobsOf { sorted = answer.orderBy(order: _*).collect().toSeq } == 0, s"$name: orderBy")
+      assert(runs(sorted, orderCols) == runs(ref.orderBy(order: _*).collect().toSeq, orderCols), s"$name: orderBy")
+
+      val unordered: Seq[(String, DataFrame => DataFrame)] = Seq(
+        "groupBy" -> (_.withColumn("n", length(col("id"))).groupBy(group)
+          .agg(count(lit(1)), min("id"), max("id"), sum("n"))),
+        "distinct" -> (df => df.union(df).distinct()),
+        "union" -> (df => df.union(df.filter(col("id").isNotNull))))
+      for ((op, f) <- unordered) {
+        var got: Seq[Row] = Nil
+        assert(jobsOf { got = f(answer).collect().toSeq } == 0, s"$name: $op")
+        assert(multiset(got) == multiset(f(ref).collect().toSeq), s"$name: $op")
+      }
+    }
   }
 
   test("explore caches no RDD: the persistent RDDs after 20 explores are those after 1") {

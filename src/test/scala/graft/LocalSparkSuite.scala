@@ -29,6 +29,21 @@ class LocalSparkSuite extends SparkFunSuite {
     assert(builders.isEmpty, s"session builders outside graft.core.LocalSpark: $builders")
   }
 
+  test("LocalFold: no program source but the rule's own assigns an optimizer rule or strategy") {
+    // the rule's install is the one idempotent, thread-safe write to a
+    // session's extra optimizations
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val allowed = Paths.get("src", "main/scala/graft/core/LocalFold.scala")
+    val assigns = """\bextra(Optimizations|Strategies)\s*(\+\+|:\+|\+)?=(?!=)""".r
+    val writers = Files.walk(Paths.get("src", "main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != allowed)
+      .filter((p: Path) => assigns.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .toList
+    assert(writers.isEmpty, s"extra optimizer rules or strategies set outside graft.core.LocalFold: $writers")
+    assert(assigns.findFirstIn(new String(Files.readAllBytes(allowed), "UTF-8")).isDefined)
+  }
+
   test("LocalSpark: no program source sets a session conf at run time") {
     // a session conf is global to the session: a value set on one thread
     // also plans every query another thread runs meanwhile

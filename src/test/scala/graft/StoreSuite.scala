@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import scala.concurrent.{Await, Future}
@@ -58,10 +59,13 @@ class StoreSuite extends SparkFunSuite {
     Row("web:Gamma", null, "", Seq(Float.MaxValue), Map("nan" -> Double.NaN), Long.MinValue,
       new java.math.BigDecimal("99999999.99"), java.sql.Timestamp.valueOf("2262-04-11 23:47:16")))
 
-  test("a driver-written batch equals a Spark-written one: schema, rows as bits, Parquet footer") {
-    val st = newStore("graft-store-eq")
-    val local = spark.createDataFrame(mixedRows.asJava, mixedSchema)
-    val distributed = spark.createDataFrame(spark.sparkContext.parallelize(mixedRows, 1), mixedSchema)
+  /** Commits `local`, a frame whose rows are on the driver, and the same
+    * rows as a one-task Spark write, and checks that the driver wrote
+    * `local` with no job and as Spark writes it: schema, rows as bits,
+    * Parquet footer and codecs.
+    */
+  private def assertWrittenAsSpark(st: SnapshotStore, local: DataFrame): Unit = {
+    val distributed = spark.createDataFrame(spark.sparkContext.parallelize(local.collect().toSeq, 1), local.schema)
     assert(jobsOf(st.commitReplace("local", local, Seq.empty)) == 0)
     st.commitReplace("spark", distributed, Seq.empty)
 
@@ -84,6 +88,27 @@ class StoreSuite extends SparkFunSuite {
       f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
     assert(codecs(a) == codecs(b) && codecs(a).nonEmpty)
     assert(partFile(st, "local").getName.matches("part-00000-[0-9a-f-]{36}\\.snappy\\.parquet"))
+  }
+
+  test("a driver-written batch equals a Spark-written one: schema, rows as bits, Parquet footer") {
+    assertWrittenAsSpark(newStore("graft-store-eq"), spark.createDataFrame(mixedRows.asJava, mixedSchema))
+  }
+
+  test("an ordered or aggregated local frame is written from the driver under LocalFold, as Spark writes it") {
+    // a session of the shared context with the rule, whatever ran before
+    val folding = spark.newSession()
+    graft.core.LocalFold.install(folding)
+    val plain = spark.newSession()
+    val shapes: Seq[(String, org.apache.spark.sql.SparkSession => DataFrame)] = Seq(
+      "ordered" -> (s => s.createDataFrame(mixedRows.asJava, mixedSchema)
+        .orderBy(col("factor").desc_nulls_first, col("node_id"))),
+      "aggregated" -> (s => s.createDataFrame(mixedRows.asJava, mixedSchema)
+        .groupBy(col("name")).agg(count(lit(1)), max("factor"), min("amount"), sum("n"), max("at"))))
+    for ((name, shape) <- shapes) {
+      val st = new SnapshotStore(java.nio.file.Files.createTempDirectory(s"graft-store-$name").toString)(folding)
+      assertWrittenAsSpark(st, shape(folding))
+      assert(rowBits(st.read("local")) == rowBits(shape(plain)), name)
+    }
   }
 
   test("an empty local frame commits with no job and reads back empty with its schema") {
